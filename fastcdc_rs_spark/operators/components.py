@@ -40,6 +40,7 @@ def connected_components(
     max_iter: int = 50,
     id_col: str = "doc_id",
     driver_max_edges: int = 2_000_000,
+    edge_bound: int | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every vertex; singletons map to themselves.
 
@@ -55,7 +56,13 @@ def connected_components(
     one tiny createDataFrame — where the distributed loop pays 4+
     fixed-cost jobs (labels checkpoint + one per round) regardless of
     data size. Above the threshold the pointer-jumping DataFrame loop
-    runs as before. The size probe is ``edges.count()``: one
+    runs as before.
+
+    The size check costs no job when the caller knows an upper bound
+    on the edge count: ``edge_bound`` <= ``driver_max_edges`` (the
+    pipeline passes the candidate stage's ``pair_bound``; verified
+    edges <= candidate pairs) goes straight to the Arrow pull, one job.
+    Without a fitting bound the size probe is ``edges.count()``: one
     full-parallel job whose result is a single long, so driver memory
     stays bounded — rows are pulled (Arrow ``toPandas`` over the now-
     materialized cache) only once the count is known to fit. An earlier
@@ -69,10 +76,10 @@ def connected_components(
     released before returning), so the plan never evaluates twice even
     for callers handing raw pair plans; ``driver_max_edges=0`` forces
     the loop (tests pin loop==driver equality). The chosen path is
-    observable in
-    ``_graft_cc_stats`` (``cc_mode``), and the probe/label timings ride
-    there too (``cc_probe_s`` / ``cc_driver_s``) so bench regressions in
-    this stage are attributable from the artifact alone.
+    observable in ``_graft_cc_stats`` (``cc_mode``), and the pull/label
+    timings ride there too (``cc_probe_s`` — count, if any, plus Arrow
+    pull — and ``cc_driver_s``) so bench regressions in this stage are
+    attributable from the artifact alone.
     """
     spark = edges.sparkSession
     # Round-5 ADVICE: the probe (count, then Arrow pull) evaluates the
@@ -80,16 +87,18 @@ def connected_components(
     # plan (entry queries pass raw pair plans). Persist around the probe
     # so the plan runs once; released before returning either way (the
     # loop path's first checkpoint job materializes `sym` from this
-    # cache, after which it is dead weight).
+    # cache, after which it is dead weight). A fitting caller bound
+    # skips the count, and with it the second evaluation.
+    bounded = edge_bound is not None and edge_bound <= driver_max_edges
     lvl = edges.storageLevel
-    ephemeral = bool(driver_max_edges) and not (lvl.useMemory or lvl.useDisk)
+    ephemeral = (bool(driver_max_edges) and not bounded
+                 and not (lvl.useMemory or lvl.useDisk))
     if ephemeral:
         edges = edges.persist()
     try:
         if driver_max_edges:
             t0 = time.perf_counter()
-            n_edges = edges.count()
-            if n_edges <= driver_max_edges:
+            if bounded or edges.count() <= driver_max_edges:
                 # Arrow pull: 2M (a, b) longs is ~32 MB, sub-second from cache
                 probe = edges.select("a", "b").toPandas()
                 probe_s = time.perf_counter() - t0

@@ -29,7 +29,7 @@ runs, so the giant bucket costs a linear scan, not a real sort.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
 from ..functions.plan_safe import explode_once
 
@@ -39,18 +39,16 @@ __all__ = ["candidate_pairs"]
 def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
                     id_col: str = "doc_id") -> tuple[DataFrame, DataFrame]:
     """Distinct candidate pairs (a < b) from band buckets; also returns a
-     1-row metrics DataFrame with bucket statistics (nothing is dropped
+    1-row metrics DataFrame with bucket statistics (nothing is dropped
     silently — capped buckets degrade to star pairs, counted here).
 
-    If ``bands_df`` carries a ``_sz`` column (a per-doc constant — the
-    pipeline passes the distinct shingle-set size), the pairs come out
-    annotated with ``_sz_a``/``_sz_b``: the sizes ride the band window's
-    one shuffle for free, so the downstream size-ratio prune
-    (operators/verify.py) becomes a FILTER on the pair rows instead of
-    two shuffle joins — two exchanges and their AQE barriers deleted
-    from the verify critical path.
+    Metrics: ``buckets`` (collision buckets), ``max_bucket``,
+    ``capped_buckets``/``capped_docs``, the log2 ``bucket_hist`` and
+    ``pair_bound`` — sum over buckets of C(n,2) (n <= cap) or n-1
+    (capped star). Every distinct pair comes out of some bucket's
+    branch, so ``pair_bound`` is an exact upper bound on the distinct
+    candidate count, and on any edge set verified from it.
     """
-    has_sz = "_sz" in bands_df.columns
     # ONE shuffle of the band table: bucket size and min doc ride a
     # whole-partition window frame (no ORDER BY → no running-frame
     # semantics, one pass per bucket). Giant buckets are never
@@ -58,19 +56,10 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # members) use collect_list below, so no single row can exceed
     # cap * 16 bytes regardless of data skew.
     w = Window.partitionBy("band_id", "band_hash")
-    if has_sz:
-        # struct min orders on the leading id field (ids are distinct per
-        # bucket), so this is the min doc's (id, size) record — the star
-        # branch needs the hub's size without another lookup
-        min_expr = F.min(
-            F.struct(F.col(id_col).alias("id"), F.col("_sz").alias("sz"))
-        ).over(w)
-    else:
-        min_expr = F.struct(F.min(id_col).over(w).alias("id"))
     annotated = (
         bands_df
         .withColumn("bucket_size", F.count(F.lit(1)).over(w))
-        .withColumn("_bmin", min_expr)
+        .withColumn("_bmin", F.min(id_col).over(w))
         .where(F.col("bucket_size") > 1)
         .persist()
     )
@@ -83,63 +72,44 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # at full parallelism; every branch then reads blocks. At 1 core the
     # contention cannot express (tasks serialize), so this was a pure
     # scale-efficiency leak, not a throughput bug.
-    annotated.count()
-    # cache ownership: `annotated` feeds both pair branches and the
-    # metrics below; callers that materialize the pairs (the pipeline,
-    # jobs) release it via the _graft_caches attribute — a long-lived
-    # session running many queries back-to-back must not accumulate
-    # cached band tables.
+    #
+    # The bucket statistics ride that same job as an Observation: each
+    # bucket is represented by its min member (``_bmin`` rides every row
+    # off the window), so per-bucket aggregates are row-wise sums over
+    # min-member rows, and the log2 histogram is one counter per size
+    # class (ceil(log2 n) for 2 <= n < 2^63 is 1..63 — bounded, unlike a
+    # collected list of bucket sizes). No extra Spark job.
+    obs = Observation("buckets")
+    annotated.observe(obs, *_bucket_stats(id_col, bucket_cap)).count()
+    # cache ownership: `annotated` feeds both pair branches; callers
+    # that materialize the pairs (the pipeline, jobs) release it via the
+    # _graft_caches attribute — a long-lived session running many
+    # queries back-to-back must not accumulate cached band tables.
 
-    if has_sz:
-        member = F.struct(F.col(id_col).alias("id"), F.col("_sz").alias("sz"))
-        pair_expr = F.filter(
-            F.flatten(
-                F.transform(
-                    "members",
-                    lambda x: F.transform(
-                        "members",
-                        lambda y: F.struct(
-                            x["id"].alias("a"), y["id"].alias("b"),
-                            x["sz"].alias("_sz_a"), y["sz"].alias("_sz_b"),
-                        ),
-                    ),
-                )
-            ),
-            lambda p: p["a"] < p["b"],
-        )
-        out_cols = ["a", "b", "_sz_a", "_sz_b"]
-        star_cols = [
-            F.col("_bmin.id").alias("a"), F.col(id_col).alias("b"),
-            F.col("_bmin.sz").alias("_sz_a"), F.col("_sz").alias("_sz_b"),
-        ]
-    else:
-        member = F.col(id_col)
-        pair_expr = F.filter(
-            F.flatten(
-                F.transform(
-                    "members",
-                    lambda x: F.transform(
-                        "members", lambda y: F.struct(x.alias("a"), y.alias("b"))
-                    ),
-                )
-            ),
-            lambda p: p["a"] < p["b"],
-        )
-        out_cols = ["a", "b"]
-        star_cols = [F.col("_bmin.id").alias("a"), F.col(id_col).alias("b")]
-    # the cache is hash-partitioned on the band key, so this groupBy (and
-    # the metrics aggregations below) run without another exchange
+    pair_expr = F.filter(
+        F.flatten(
+            F.transform(
+                "members",
+                lambda x: F.transform(
+                    "members", lambda y: F.struct(x.alias("a"), y.alias("b"))
+                ),
+            )
+        ),
+        lambda p: p["a"] < p["b"],
+    )
+    # the cache is hash-partitioned on the band key, so this groupBy
+    # runs without another exchange
     small_pairs = explode_once(
         annotated.where(F.col("bucket_size") <= bucket_cap)
         .groupBy("band_id", "band_hash")
-        .agg(F.collect_list(member).alias("members")),
+        .agg(F.collect_list(id_col).alias("members")),
         pair_expr,
         "p",
-    ).select(*[F.col(f"p.{c}").alias(c) for c in out_cols])
+    ).select("p.a", "p.b")
 
     star_pairs = (
         annotated.where(F.col("bucket_size") > bucket_cap)
-        .select(*star_cols)
+        .select(F.col("_bmin").alias("a"), F.col(id_col).alias("b"))
         .where(F.col("a") < F.col("b"))
     )
 
@@ -150,46 +120,45 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # aggregation shrinks the pre-shuffle pair stream where the
     # repartition form ships every duplicate. Keep the aggregate form.)
     pairs = small_pairs.unionByName(star_pairs).dropDuplicates(["a", "b"])
-
-    # bucket stats (collision buckets only) in ONE cache scan: each
-    # bucket is represented by its min member (`_bmin.id` rides every
-    # row off the window), so per-bucket aggregates become row-wise
-    # sums over min-member rows — no per-bucket groupBy shuffle. The
-    # log2 histogram (B14 skew observable) groups those ~n_buckets rows
-    # into <= 64 size classes (map-side partial agg; the exchange ships
-    # 64 rows), and the 1-row summary folds over the classes. The
-    # earlier shape (groupBy(band_id, band_hash).first + two more aggs)
-    # cost three jobs and a full-width shuffle of the bucket keys for
-    # pure observability.
-    is_min = F.col(id_col) == F.col("_bmin.id")
-    classes = (
-        annotated.where(is_min)
-        .groupBy(
-            F.ceil(F.log2("bucket_size")).cast("int").alias("log2_size")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("bucket_size").alias("mx"),
-            F.sum(
-                F.when(F.col("bucket_size") > bucket_cap, 1).otherwise(0)
-            ).alias("cb"),
-            F.sum(
-                F.when(F.col("bucket_size") > bucket_cap, F.col("bucket_size"))
-                .otherwise(0)
-            ).alias("cd"),
-        )
-    )
-    # coalesce to 0: with no collision buckets the classes frame is
-    # empty and bare sums would yield NULL where the pre-round-6 shape
-    # yielded 0 (round-6 ADVICE: jobs/dedup_job.py emits this dict raw)
-    metrics = classes.agg(
-        F.coalesce(F.sum("n"), F.lit(0)).alias("buckets"),
-        F.coalesce(F.max("mx"), F.lit(0)).alias("max_bucket"),
-        F.coalesce(F.sum("cb"), F.lit(0)).alias("capped_buckets"),
-        F.coalesce(F.sum("cd"), F.lit(0)).alias("capped_docs"),
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("log2_size", "n")))
-        ).alias("bucket_hist"),
-    )
     pairs._graft_caches = [annotated]  # released by release_caches()
-    return pairs, metrics
+    return pairs, _metrics_frame(bands_df.sparkSession, obs.get)
+
+
+_HIST_CLASSES = range(1, 64)
+_METRICS_SCHEMA = ("buckets long, max_bucket long, capped_buckets long, "
+                   "capped_docs long, bucket_hist map<int,long>, pair_bound long")
+
+
+def _bucket_stats(id_col: str, bucket_cap: int) -> list:
+    """Observation aggregates over the collision rows (every member of
+    every bucket with n > 1); per-bucket terms count on the min member.
+    Empty input reads 0, never NULL (jobs/dedup_job.py emits these raw)."""
+    n = F.col("bucket_size")
+    is_min = F.col(id_col) == F.col("_bmin")
+    capped = n > bucket_cap
+    log2 = F.ceil(F.log2(n))
+    # star buckets emit n-1 pairs, small ones C(n,2)
+    emitted = F.when(capped, n - 1).otherwise(
+        F.expr("bucket_size * (bucket_size - 1) div 2"))
+    return [
+        F.count_if(is_min).alias("buckets"),
+        F.coalesce(F.max(n), F.lit(0)).alias("max_bucket"),
+        F.count_if(is_min & capped).alias("capped_buckets"),
+        F.coalesce(F.sum(F.when(is_min & capped, n)), F.lit(0)).alias("capped_docs"),
+        F.coalesce(F.sum(F.when(is_min, emitted)), F.lit(0)).alias("pair_bound"),
+        *[F.count_if(is_min & (log2 == k)).alias(f"h{k}") for k in _HIST_CLASSES],
+    ]
+
+
+def _metrics_frame(spark, got: dict) -> DataFrame:
+    """The observed stats as a one-row frame. Built from pandas through
+    Arrow it is a LocalRelation: ``.first()`` on it runs no Spark job."""
+    import pandas as pd
+
+    row = {k: int(got[k]) for k in ("buckets", "max_bucket", "capped_buckets",
+                                    "capped_docs")}
+    row["bucket_hist"] = {
+        k: int(got[f"h{k}"]) for k in _HIST_CLASSES if got[f"h{k}"]
+    }
+    row["pair_bound"] = int(got["pair_bound"])
+    return spark.createDataFrame(pd.DataFrame([row]), _METRICS_SCHEMA)

@@ -5,25 +5,25 @@ in three stages:
 
 1. **Size-ratio prefilter**: J(A,B) <= min(|A|,|B|) / max(|A|,|B|), so
    any pair whose set sizes differ by more than the threshold ratio
-   cannot verify. When the candidate stage annotated the pairs with
-   ``_sz_a``/``_sz_b`` (operators/lsh.py rides them on the band
-   window's shuffle), the prune is a pure row FILTER — zero exchanges.
-   Otherwise it falls back to a narrow join of (id, set_size) longs.
-   Either way, candidate pairs from hot/star buckets that connect docs
-   of very different sizes are dropped *before* any shingle array ships
-   through a shuffle. The bound is exact, not probabilistic: no pair
-   with J >= threshold is ever pruned, so recall is untouched by
+   cannot verify. The prune is a narrow join of (id, set_size) longs,
+   so candidate pairs from hot/star buckets that connect docs of very
+   different sizes are dropped *before* any shingle array ships through
+   a shuffle. The bound is exact, not probabilistic: no pair with
+   J >= threshold is ever pruned, so recall is untouched by
    construction (the 400k-doc single-node parity stays 1.000000).
-2. **Degree split** (window over ``a``): surviving pairs get their
-   a-side pair-degree from a count window — the same shuffle that
-   co-locates each ``a``'s pairs for the array join below, so the stats
-   ride an exchange the plan needs anyway. Star pairs from capped hot
-   buckets all share ``a = bucket_min`` (operators/lsh.py), so at scale
-   a hub doc's shingle array would otherwise be copied once per
-   surviving pair through the wide join; pairs whose ``a`` exceeds
-   ``hub_degree_cap`` take a **broadcast** path instead: the (by
-   construction few — at most |pairs|/cap) hub docs' arrays are
-   broadcast and the hub pairs never shuffle an a-side array at all.
+2. **Degree split** (window over ``a``), only when the shingle table is
+   too big to broadcast: surviving pairs get their a-side pair-degree
+   from a count window — the same shuffle that co-locates each ``a``'s
+   pairs for the array join below, so the stats ride an exchange the
+   plan needs anyway. Star pairs from capped hot buckets all share
+   ``a = bucket_min`` (operators/lsh.py), so at scale a hub doc's
+   shingle array would otherwise be copied once per surviving pair
+   through the wide join; pairs whose ``a`` exceeds ``hub_degree_cap``
+   take a **broadcast** path instead: the (by construction few — at
+   most |pairs|/cap) hub docs' arrays are broadcast and the hub pairs
+   never shuffle an a-side array at all. When the shingle table itself
+   broadcasts, both array joins are broadcast hash joins, no array goes
+   through an exchange, and the split has nothing to save.
 3. **Array verification** (wide join): normal pairs join the full
    shingle sets on both sides — the ``a``-side join reuses the window's
    hash(a) partitioning exchange-free; hub pairs join only the b-side
@@ -61,8 +61,12 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
     ``hub_degree_cap``: a-side pair-degree above which a doc's shingle
     array is broadcast instead of shuffled per pair (None disables the
     split). Purely a physical-plan choice — the output rows are
-    identical either way. The result carries its persisted narrow pair
-    table in ``_graft_caches``; materializing callers release it via
+    identical either way. The split runs only when ``shingled``'s plan
+    size exceeds ``spark.sql.autoBroadcastJoinThreshold`` — the same
+    statistic the planner reads to broadcast it; under the threshold
+    both array joins broadcast and there is no hub shuffle to avoid.
+    When it runs, the result carries its persisted narrow pair table in
+    ``_graft_caches``; materializing callers release it via
     ``cache.release_caches``.
 
     The hub pairs' physical shape is a measured three-rung ladder keyed
@@ -104,19 +108,7 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
         >= F.lit(float(threshold)) * F.greatest("_sz_a", "_sz_b").cast("double")
         - F.lit(1e-9)
     )
-    has_sz = "_sz_a" in pairs.columns and "_sz_b" in pairs.columns
-    if has_sz:
-        # the candidate stage (operators/lsh.py) already annotated each
-        # pair with the two set sizes off its band window — the prune is
-        # a row filter, no exchange at all. Contract: the caller's sizes
-        # must be the DISTINCT set sizes (the kernel pipeline emits
-        # sorted-unique shingle arrays, so F.size(shingles) qualifies);
-        # pairs referencing ids absent from `shingled` are dropped by the
-        # inner array joins below exactly as the join prune dropped them.
-        if threshold > 0:
-            pairs = pairs.where(ratio_keep)
-        pairs = pairs.select("a", "b")
-    elif threshold > 0:
+    if threshold > 0:
         # narrow prune: ship two longs per pair, not two arrays.
         # min/max >= threshold is necessary for J >= threshold; pairs
         # with an empty side survive only via the both-empty J=1 case.
@@ -137,7 +129,7 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
         F.col(id_col).alias("b"), F.col(shingles_col).alias("_sh_b")
     )
     caches: list[DataFrame] = []
-    if hub_degree_cap is not None:
+    if hub_degree_cap is not None and not _broadcastable(shingled):
         # pair-degree of a rides a count window over the narrow pair
         # table (three longs per row — the cheap shuffle). The persisted
         # result feeds the b-side join once and the hub-id scan.
@@ -160,7 +152,8 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
         # branch-free left-join+coalesce forces the b-array stream
         # through an extra a-exchange, 2x bytes in hub-heavy regimes.)
         hub = pruned.where(F.col("_deg") > hub_degree_cap).drop("_deg")
-        # One cache-scan count picks the hub rung (docstring ladder)
+        # One cache-scan count picks the hub rung (docstring ladder);
+        # reached only when the shingle table is too big to broadcast
         n_hub_pairs = hub.count()
         if n_hub_pairs == 0:
             joined = pruned.drop("_deg").join(sa, "a").join(sb, "b")
@@ -212,3 +205,12 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
     )
     out._graft_caches = caches
     return out
+
+
+def _broadcastable(df: DataFrame) -> bool:
+    """The planner's own broadcast-by-size test (JoinSelection's
+    canBroadcastBySize) on ``df``'s optimized-plan statistics — no job."""
+    jspark = df.sparkSession._jsparkSession
+    limit = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= limit

@@ -71,18 +71,6 @@ class DedupConfig:
     # array side up to bids_bcast_max; unfiltered b-shuffle above
     verify_hub_pair_bcast_max: int = 64_000
     verify_hub_bids_bcast_max: int = 4_000_000
-    # ride the per-doc set size through the band shuffle so the verify
-    # size-ratio prune is a row filter instead of two narrow joins.
-    # Default OFF: measured at 800k docs/4 cores the fold costs ~25% of
-    # the whole pipeline wall (45.5 vs 34.5 s, same window, sig probe
-    # steady) — the +8B/row on the dominant band exchange, the wider
-    # annotated cache, and the struct collect/explode cost far more than
-    # the two deleted pair-row joins, and the 1-core side pays ~2x the
-    # 4-core penalty (a fake scaling-ratio "win" from slowing the
-    # denominator). Kept as a knob: on a real cluster where the verify
-    # joins' AQE barriers cost more than local exchange bytes, the fold
-    # may win — measure there before flipping.
-    size_fold: bool = False
 
     def chunker(self) -> ChunkerConfig:
         return ChunkerConfig(
@@ -191,21 +179,7 @@ def near_dup_clusters(
     signed = signed.persist()
     signed.count()
 
-    if cfg.candidates == "minhash":
-        # _sz (distinct shingle-set size; the kernel emits sorted-unique
-        # arrays) rides the band explode so candidate_pairs can annotate
-        # each pair with both sizes off its one band shuffle — the verify
-        # size-ratio prune then filters pair rows instead of paying two
-        # shuffle joins (and their AQE barriers) on the critical path.
-        cols = [id_col]
-        if cfg.size_fold:
-            cols.append(F.size("shingles").alias("_sz"))
-        bands_df = signed.select(
-            *cols, F.posexplode("bands").alias("band_id", "band_hash"),
-        )
-    elif cfg.candidates == "both":
-        # the simhash band table below has no size column; the union
-        # must be schema-consistent, so this mode keeps the join prune
+    if cfg.candidates in ("minhash", "both"):
         bands_df = signed.select(
             id_col, F.posexplode("bands").alias("band_id", "band_hash")
         )
@@ -221,6 +195,9 @@ def near_dup_clusters(
         bands_df = sim_bands if bands_df is None else bands_df.unionByName(sim_bands)
 
     pairs, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
+    # a local one-row frame (no job): its pair_bound caps the verified
+    # edge count, so CC can pick its driver path without a count probe
+    bucket_row = metrics.first().asDict()
     if collect_metrics:
         from pyspark.sql import Observation
 
@@ -258,13 +235,14 @@ def near_dup_clusters(
     verified = register_cache(verified.persist())
 
     clusters = connected_components(
-        verified, vertices=docs.select(id_col), id_col=id_col
+        verified, vertices=docs.select(id_col), id_col=id_col,
+        edge_bound=bucket_row["pair_bound"],
     )
     if collect_metrics:
         import json
 
-        # bucket stats consumed while `annotated` is still cached
-        bucket_row = metrics.first().asDict()
+        import pandas as pd
+
         hist = bucket_row.pop("bucket_hist", None) or {}
         summary = {
             **{k: int(v) for k, v in obs_units.get.items()},
@@ -279,9 +257,10 @@ def near_dup_clusters(
         summary["bucket_hist"] = json.dumps(
             {str(k): int(v) for k, v in sorted(hist.items())}
         )
-        spark = docs.sparkSession
-        metrics = spark.createDataFrame([tuple(summary.values())],
-                                        list(summary.keys()))
+        # from pandas through Arrow: a LocalRelation, so the caller's
+        # .first() runs no job (a list-of-tuples frame is a LogicalRDD
+        # whose every .first() costs two jobs through a Python worker)
+        metrics = docs.sparkSession.createDataFrame(pd.DataFrame([summary]))
         metrics._graft_summary = summary
     # connected_components materializes its rounds (localCheckpoint), so
     # the upstream caches are consumed by now — release them.

@@ -55,19 +55,12 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
             bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col,
         ),
     )
-    # cfg.size_fold: ride _sz through the band explode so verify's
-    # size-ratio prune filters the checkpointed pair rows instead of
-    # joining — OFF by default (see DedupConfig: the wider band shuffle
-    # costs more than the joins it saves at measured scales)
-    cols = [F.col(id_col)]
-    if cfg.size_fold:
-        cols.append(F.size("shingles").alias("_sz"))
     bands_df = signed.select(
-        *cols, F.posexplode("bands").alias("band_id", "band_hash"),
+        id_col, F.posexplode("bands").alias("band_id", "band_hash"),
     )
     pairs_df, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
     pairs = run.stage("pairs", lambda: pairs_df)
-    m = metrics.first().asDict()  # consume bucket stats before the release
+    m = metrics.first().asDict()
     release_caches(pairs_df)      # run.stage materialized the pairs
     verify_caches: list = []
 
@@ -82,7 +75,8 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
     release_caches(*verify_caches)  # run.stage materialized the pairs
     clusters = run.stage(
         "clusters",
-        lambda: connected_components(verified, vertices=docs.select(id_col), id_col=id_col),
+        lambda: connected_components(verified, vertices=docs.select(id_col),
+                                     id_col=id_col, edge_bound=m["pair_bound"]),
     )
     # publish through the abstract snapshot catalog (DEDUP_CATALOG=iceberg
     # swaps in the real Iceberg writer on a cluster; sources/table.py)

@@ -156,8 +156,8 @@ pays; the 2M history is 0.661 best-of/0.760 pair-max (round 5). Round
 variant active, which same-window A/B then measured ~25% SLOWER on the
 whole pipeline (45.5 vs 34.5 s at 800k/4 cores) with the 1-core side
 paying ~2x the 4-core penalty: the ratio gain was an artifact of
-slowing the denominator, so the fold was rejected to a default-off
-knob (DedupConfig.size_fold) and the header above reports the FAST
+slowing the denominator, so the fold was rejected (first to a
+default-off knob, since deleted) and the header above reports the FAST
 code. Round 6 also collapsed the bucket-stats observability from
 three jobs (a full-width per-bucket groupBy + two aggs) to one
 min-member cache scan. The 800k rows remain in the trajectory table

@@ -1372,12 +1372,23 @@ def test_bmp_corrupt_inputs_and_image_op(spark):
     assert r.features[-1] == 1.0                 # all pixels in top bin
 
 
-def test_verify_pairs_hub_split_plan_and_equivalence(spark):
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """autoBroadcastJoinThreshold=-1 for one test, then restored."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, before)
+
+
+def test_verify_pairs_hub_split_plan_and_equivalence(spark, no_auto_broadcast):
     # Degree-aware verify: star pairs sharing a hub `a` take a broadcast
     # path above hub_degree_cap. Pure physical-plan choice — results must
     # be IDENTICAL to the unsplit wide join, the hub branch must plan a
     # broadcast join, and the narrow persisted table must be released
-    # through _graft_caches.
+    # through _graft_caches. The split runs only when the shingle table
+    # is too big to broadcast, hence auto-broadcast off for the test.
     import numpy as np
 
     from fastcdc_rs_spark.operators.verify import verify_pairs
@@ -2634,52 +2645,3 @@ def test_tiff_through_image_operator(spark):
     )
     r = image_features(media).first()
     assert (r.height, r.width) == (12, 16)
-
-
-def test_candidate_pairs_size_fold_and_filter_prune(spark):
-    # Round-6: a `_sz` column on the band table rides the band window's
-    # one shuffle into the pairs as `_sz_a`/`_sz_b` (both branches: small
-    # all-pairs AND capped star), and verify_pairs then plans the
-    # size-ratio prune as a FILTER — two fewer joins than the fallback —
-    # with rows identical to the join prune.
-    from fastcdc_rs_spark.cache import release_caches
-    from fastcdc_rs_spark.operators.lsh import candidate_pairs
-    from fastcdc_rs_spark.operators.verify import verify_pairs
-    from fastcdc_rs_spark.plans import executed_plan
-
-    # docs 0..9: sizes 3..12; bucket A = {0,1,2} (small), bucket B =
-    # {3..9} (7 members > cap=4 -> star on min doc 3)
-    sets = {i: list(range(100 * i, 100 * i + 3 + i)) for i in range(10)}
-    shingled = spark.createDataFrame(
-        [(k, v) for k, v in sets.items()], "doc_id long, shingles array<long>"
-    )
-    rows = [(i, len(sets[i]), 0, 7) for i in (0, 1, 2)]
-    rows += [(i, len(sets[i]), 1, 9) for i in range(3, 10)]
-    bands = spark.createDataFrame(
-        rows, "doc_id long, _sz int, band_id int, band_hash long"
-    )
-    pairs, _ = candidate_pairs(bands, bucket_cap=4)
-    assert {"a", "b", "_sz_a", "_sz_b"} <= set(pairs.columns)
-    got = {(r.a, r.b): (r._sz_a, r._sz_b) for r in pairs.collect()}
-    want_pairs = {(0, 1), (0, 2), (1, 2)} | {(3, b) for b in range(4, 10)}
-    assert set(got) == want_pairs
-    for (a, b), (sa, sb) in got.items():
-        assert (sa, sb) == (len(sets[a]), len(sets[b]))
-    release_caches(pairs)
-
-    # folded prune == join prune, and the folded plan has 2 joins
-    # (the array joins), the fallback 4 (arrays + two size joins)
-    folded = verify_pairs(pairs, shingled, threshold=0.5, hub_degree_cap=None)
-    joined = verify_pairs(pairs.select("a", "b"), shingled, threshold=0.5,
-                          hub_degree_cap=None)
-    got_f = {(r.a, r.b): round(r.jaccard, 9) for r in folded.collect()}
-    got_j = {(r.a, r.b): round(r.jaccard, 9) for r in joined.collect()}
-    assert got_f == got_j
-    import re
-
-    n_joins_f = len(re.findall(r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)", executed_plan(folded)))
-    n_joins_j = len(re.findall(r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)", executed_plan(joined)))
-    # the plan string carries the AQE initial+final plans, so counts are
-    # doubled — assert the delta: two size joins deleted (x2 plans)
-    assert n_joins_j - n_joins_f == 4 and n_joins_f <= 4, (n_joins_f, n_joins_j)
-    release_caches(pairs)
