@@ -7,7 +7,7 @@ Layers:
   kernel/     numpy kernels (bit-exact FastCDC v2020, MinHash, SimHash)
   operators/  DataFrame-level pipeline stages (chunk, shingle, LSH, CC, ...)
   sources/    table IO + checkpoint/resume manifests
-  streaming/  Structured Streaming incremental chunking
+  streaming/  Structured Streaming incremental dedup
   functions/  reusable column expressions (portable Spark<->DuckDB hashing)
 """
 

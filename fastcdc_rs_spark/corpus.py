@@ -153,15 +153,6 @@ def _edit_tokens(rng: np.random.Generator, tokens: list[str], rate: float) -> li
     return out[:pos] + replacement + out[pos + span:]
 
 
-def _scatter_edit(rng: np.random.Generator, tokens: list[str], n_edits: int) -> list[str]:
-    """A few scattered single-token substitutions (giant-cluster variants)."""
-    out = list(tokens)
-    for _ in range(n_edits):
-        pos = int(rng.integers(0, len(out)))
-        out[pos] = str(_VOCAB[int(rng.integers(0, len(_VOCAB)))])
-    return out
-
-
 def corpus_pandas(n_docs: int = 2000, seed: int = 42,
                   mean_words: int = 400) -> pd.DataFrame:
     """Build the corpus as a pandas DataFrame (deterministic in args)."""

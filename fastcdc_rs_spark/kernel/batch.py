@@ -50,29 +50,6 @@ _GROUP_WORK_BYTES = 384 << 10
 _SEG = 8192
 
 
-def _hash_matrix(contrib: np.ndarray, first_is_shift: bool) -> np.ndarray:
-    """Per-position gear hash for each row of a (A, width) contribution
-    matrix via the 6-step affine scan. ``first_is_shift`` tells whether the
-    transition into column 1 is a shift step (column 0 may be a carry
-    pseudo-column, whose own multiplier is never used)."""
-    a, width = contrib.shape
-    h = contrib.copy()
-    if width > 1:
-        pat = np.empty(width - 1, dtype=np.uint64)
-        if first_is_shift:
-            pat[0::2] = _U64(2)
-            pat[1::2] = _U64(0)
-        else:
-            pat[0::2] = _U64(0)
-            pat[1::2] = _U64(2)
-        h[:, 1:] += h[:, :-1] << pat[None, :]
-    for d in (2, 4, 8, 16, 32):
-        if d >= width:
-            break
-        h[:, d:] += h[:, :-d] << _U64(d)
-    return h
-
-
 def _process_group(
     s: np.ndarray,
     lens: np.ndarray,

@@ -17,8 +17,9 @@ reference's stream-equals-memory test (src/v2020/mod.rs:1276-1329),
 pinned by tests/test_blob_stream.py.
 
 Like the reference, chunking ONE blob is inherently sequential (each cut
-depends on the previous); Spark parallelism is across blobs/files
-(operators/blob.py). Memory per task is O(buffer_size).
+depends on the previous). Memory is O(buffer_size). No Spark operator
+wraps it: web pages fit in a row, and huge binaries are out of scope
+(docs/SCALE.md).
 """
 
 from __future__ import annotations

@@ -26,7 +26,6 @@ from .knn import (
 from .lsh import candidate_pairs
 from .minhash import minhash_signatures
 from .mixing import repetition_scores, stratified_sample
-from .multimodal import frame_sample, image_features, media_metadata
 from .simhash import hamming_distance_expr, simhash64, simhash_bands
 from .suffix import duplicate_substrings, substring_pairs_exact
 from .textstats import (
@@ -61,12 +60,9 @@ __all__ = [
     "duplicate_substrings",
     "exact_duplicates",
     "extract_text",
-    "frame_sample",
     "hamming_distance_expr",
-    "image_features",
     "langid_heuristic",
     "language_stats",
-    "media_metadata",
     "minhash_signatures",
     "ngram_jaccard_pairs",
     "contamination_flags",

@@ -23,15 +23,12 @@ Cluster id = min doc_id of the component (stable, deterministic).
 
 from __future__ import annotations
 
-import os
 import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 __all__ = ["connected_components"]
-
-_DEBUG = os.environ.get("FASTCDC_CC_DEBUG", "") == "1"
 
 
 def connected_components(
@@ -248,13 +245,10 @@ def _cc_loop(
     loop_parts = max(8, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
                             n_edges // 50_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    if _DEBUG:
-        print(f"cc: {n_edges} sym edges, loop partitions {loop_parts}", flush=True)
 
     rounds = 0
     for it in range(max_iter):
         rounds = it + 1
-        _t0 = time.perf_counter()
         neighbor_min = (
             sym.join(labels.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
@@ -295,8 +289,6 @@ def _cc_loop(
         )
         changed = int(obs.get["changed"] or 0)
         labels = jumped.select("node", "label")
-        if _DEBUG:
-            print(f"cc round {it}: changed={changed} {time.perf_counter() - _t0:.2f}s", flush=True)
         if changed == 0:
             break
     sym.unpersist()

@@ -13,9 +13,11 @@ import pytest
 
 from fastcdc_rs_spark.kernel import ChunkerConfig, chunk_bytes
 from fastcdc_rs_spark.kernel.stream import stream_chunks
+from tests.synthetic import synthetic_blobs
 
 FIXTURE = Path("/root/reference/test/fixtures/SekienAkashita.jpg")
 CFG = ChunkerConfig(4096, 16384, 65535)
+SYNTHETIC = synthetic_blobs()
 
 
 class _DribbleReader(io.RawIOBase):
@@ -46,6 +48,14 @@ def test_stream_equals_memory_fixture_and_short_reads():
     assert got == expected
 
 
+@pytest.mark.parametrize("name", SYNTHETIC)
+def test_stream_equals_memory_synthetic_and_short_reads(name):
+    data = SYNTHETIC[name]
+    expected = chunk_bytes(data, CFG)
+    got = list(stream_chunks(_DribbleReader(data), CFG, 65535))
+    assert got == expected
+
+
 @pytest.mark.parametrize("buffer_size", [None, 65535])
 def test_stream_equals_memory_v2016_variant(buffer_size):
     # v2016 StreamCDC twin (src/v2016/mod.rs:481-628): same bounded-buffer
@@ -60,6 +70,17 @@ def test_stream_equals_memory_v2016_variant(buffer_size):
         next(stream_chunks(io.BytesIO(b"x"), CFG, variant="v9999"))
 
 
+@pytest.mark.parametrize("buffer_size", [None, 65535])
+@pytest.mark.parametrize("name", SYNTHETIC)
+def test_stream_equals_memory_v2016_synthetic(name, buffer_size):
+    from fastcdc_rs_spark.kernel.v2016 import chunk_bytes_v2016
+
+    data = SYNTHETIC[name]
+    expected = chunk_bytes_v2016(data, 4096, 16384, 65535)
+    got = list(stream_chunks(_DribbleReader(data), CFG, buffer_size, variant="v2016"))
+    assert got == expected
+
+
 def test_stream_edge_cases():
     assert list(stream_chunks(io.BytesIO(b""), CFG)) == []
     small = b"x" * 100  # sub-min -> single chunk, hash 0
@@ -67,26 +88,5 @@ def test_stream_edge_cases():
     zeros = bytes(200_000)  # mask never matches -> max_size chunks
     got = list(stream_chunks(io.BytesIO(zeros), CFG, 65535))
     assert got == chunk_bytes(zeros, CFG)
-
-
-def test_chunk_blob_files_spark(spark, tmp_path):
-    from fastcdc_rs_spark.operators.blob import chunk_blob_files
-
-    rng = np.random.default_rng(5)
-    paths = []
-    blobs = {}
-    for i, n in enumerate([3_000_000, 120_000, 50]):  # > buffer, mid, sub-min
-        p = str(tmp_path / f"blob{i}.bin")
-        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
-        with open(p, "wb") as f:
-            f.write(data)
-        paths.append(p)
-        blobs[p] = data
-    out = chunk_blob_files(spark, paths, CFG, buffer_size=65535 * 4)
-    rows = out.collect()
-    by_path: dict[str, list] = {}
-    for r in rows:
-        by_path.setdefault(r.path, []).append((r.hash % (1 << 64), r.offset, r.length))
-    for p, data in blobs.items():
-        got = sorted(by_path.get(p, []), key=lambda t: t[1])
-        assert got == chunk_bytes(data, CFG), p
+    with pytest.raises(ValueError, match="variant"):
+        next(stream_chunks(io.BytesIO(b"x"), CFG, variant="v9999"))

@@ -1,4 +1,4 @@
-"""Checkpoint/resume (B13) and Structured Streaming chunking tests."""
+"""Checkpoint/resume (B13) and Structured Streaming dedup tests."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 from fastcdc_rs_spark.kernel import ChunkerConfig
 from fastcdc_rs_spark.operators.chunk import chunk_documents
 from fastcdc_rs_spark.sources.checkpoint import CheckpointedRun
-from fastcdc_rs_spark.streaming.chunk_stream import start_chunk_stream
 
 CFG = ChunkerConfig(64, 256, 1024)
 
@@ -49,29 +48,6 @@ def test_checkpoint_resume(spark, tmp_path):
     run3.stage("chunks", build)
     assert calls["n"] == 2
     assert run3.events[-1]["action"] == "computed"
-
-
-def test_streaming_chunks_match_batch(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [(i, f"streaming document {i} content " * 30) for i in range(10)],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    docs.write.parquet(src)
-
-    q = start_chunk_stream(
-        spark, src, sink, ckpt, docs.schema, CFG
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(sink)
-    expected = chunk_documents(docs, CFG)
-    key = ["doc_id", "chunk_idx", "hash", "offset", "length"]
-    assert sorted(map(tuple, got.select(*key).collect())) == sorted(
-        map(tuple, expected.select(*key).collect())
-    )
 
 
 def test_streaming_exact_dedup_state_across_restarts(spark, tmp_path):
@@ -294,95 +270,3 @@ def test_streaming_contamination_matches_batch(spark, tmp_path):
     }
     assert got == want, (got, want)
     assert (5, 1, True) in got and (2, 0, False) in got
-
-
-def _line_stream_once(spark, src, out_dir, ckpt, **kw):
-    from fastcdc_rs_spark.streaming.line_dedup_stream import stream_kept_lines
-
-    stream = spark.readStream.schema(
-        "doc_id long, warc_ts timestamp, text string"
-    ).parquet(src)
-    q = (
-        stream_kept_lines(stream, watermark="10 minutes", **kw)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-
-def test_streaming_line_dedup_matches_batch_single_window(spark, tmp_path):
-    """C6's streaming twin: on data sharing one micro-batch the stream's
-    kept-lines sink, rebuilt into documents, equals the batch operator
-    exactly (canonical = global min (doc_id, pos) in both)."""
-    import datetime as dt
-
-    from fastcdc_rs_spark.operators.dedup import remove_duplicate_lines
-    from fastcdc_rs_spark.streaming.line_dedup_stream import rebuild_cleaned_docs
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        # doc 1: within-doc repeat ("dup") + shared boilerplate
-        (1, t0, "header\nbody one\ndup\ndup"),
-        # doc 2: shares "header" (dropped — doc 1 pos 0 wins) + unique
-        (2, t0, "header\nbody two"),
-        # doc 3: all lines already seen -> cleaned_text empty
-        (3, t0, "header\ndup"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, warc_ts timestamp, text string")
-    src, out_dir, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    docs.coalesce(1).write.parquet(src)
-    _line_stream_once(spark, src, out_dir, ckpt)
-
-    kept = spark.read.parquet(out_dir)
-    got = {
-        tuple(r)
-        for r in rebuild_cleaned_docs(docs, kept).collect()
-    }
-    want = {
-        tuple(r)
-        for r in remove_duplicate_lines(docs.select("doc_id", "text")).collect()
-    }
-    assert got == want, (got, want)
-    # and the batch semantics themselves: doc 3 fully deduplicated
-    by_id = {r[0]: r for r in got}
-    assert by_id[3][3] == "" and by_id[3][1:3] == (2, 0)
-    assert by_id[1][3] == "header\nbody one\ndup"
-
-
-def test_streaming_line_dedup_ttl_state(spark, tmp_path):
-    """Cross-batch suppression inside the TTL horizon, the documented
-    first-batch-wins approximation, and state expiry: a line re-arriving
-    after the watermark passes canonical_ts + ttl is a fresh first
-    occurrence."""
-    import datetime as dt
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    m = dt.timedelta(minutes=1)
-    schema = "doc_id long, warc_ts timestamp, text string"
-    src, out_dir, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-
-    waves = [
-        [(10, t0, "shared\nu1")],
-        # within TTL: "shared" suppressed even though doc 5 < doc 10 —
-        # append emission is final (the one streaming approximation)
-        [(5, t0 + 5 * m, "shared\nu2")],
-        [(98, t0 + 100 * m, "pusher1")],   # watermark -> t0+90m > ttl end
-        [(99, t0 + 101 * m, "pusher2")],   # timeout fires (no "shared" data)
-        [(30, t0 + 96 * m, "shared")],     # state expired -> fresh emit
-    ]
-    for wave in waves:
-        spark.createDataFrame(wave, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _line_stream_once(spark, src, out_dir, ckpt, ttl_minutes=60)
-
-    kept = spark.read.parquet(out_dir).collect()
-    by_line = {}
-    for r in kept:
-        by_line.setdefault(r.line, []).append(r.doc_id)
-    assert by_line["u1"] == [10] and by_line["u2"] == [5]
-    assert sorted(by_line["shared"]) == [10, 30], by_line
-    assert by_line["pusher1"] == [98] and by_line["pusher2"] == [99]

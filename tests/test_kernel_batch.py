@@ -9,20 +9,22 @@ import pytest
 
 from fastcdc_rs_spark.kernel import ChunkerConfig, chunk_bytes
 from fastcdc_rs_spark.kernel.batch import chunk_batch
+from tests.synthetic import synthetic_arrays
 
 FIXTURE = Path("/root/reference/test/fixtures/SekienAkashita.jpg")
 
 
-@pytest.mark.parametrize("level,seed", [(1, 0), (1, 666), (0, 0), (3, 0)])
-def test_batch_parity_mixed_docs(level, seed):
+_LEVEL_SEED = pytest.mark.parametrize(
+    "level,seed", [(1, 0), (1, 666), (0, 0), (3, 0)])
+
+
+def _assert_batch_parity(big, level, seed):
     rng = np.random.default_rng(7)
-    fixture = np.frombuffer(FIXTURE.read_bytes(), dtype=np.uint8)
     docs = [
         np.array([], dtype=np.uint8),                       # empty
         np.zeros(10, dtype=np.uint8),                       # sub-min
         np.zeros(50_000, dtype=np.uint8),                   # zeros -> max chunks
-        fixture,                                            # golden fixture
-        fixture[:4096],                                     # exactly min
+        *big,                                               # large binary inputs
         rng.integers(0, 256, 200_000, dtype=np.uint8),      # big random
         rng.integers(0, 256, 5_000, dtype=np.uint8),        # small random
         rng.integers(0, 256, 16_385, dtype=np.uint8),       # odd length
@@ -31,6 +33,18 @@ def test_batch_parity_mixed_docs(level, seed):
     batched = chunk_batch(docs, cfg)
     for d, got in zip(docs, batched):
         assert got == chunk_bytes(d, cfg)
+
+
+@_LEVEL_SEED
+def test_batch_parity_mixed_docs(level, seed):
+    fixture = np.frombuffer(FIXTURE.read_bytes(), dtype=np.uint8)
+    # golden fixture, and its first min_size bytes
+    _assert_batch_parity([fixture, fixture[:4096]], level, seed)
+
+
+@_LEVEL_SEED
+def test_batch_parity_mixed_docs_synthetic(level, seed):
+    _assert_batch_parity(synthetic_arrays(), level, seed)
 
 
 def test_batch_parity_small_params():

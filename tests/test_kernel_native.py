@@ -12,6 +12,7 @@ import pytest
 from fastcdc_rs_spark.kernel import ChunkerConfig
 from fastcdc_rs_spark.kernel import native
 from fastcdc_rs_spark.kernel.batch import chunk_batch_columnar_numpy
+from tests.synthetic import synthetic_arrays
 
 FIXTURE = Path("/root/reference/test/fixtures/SekienAkashita.jpg")
 
@@ -20,14 +21,12 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _docs(rng):
-    fixture = np.frombuffer(FIXTURE.read_bytes(), dtype=np.uint8)
+def _docs(rng, big):
     return [
         np.array([], dtype=np.uint8),
         np.zeros(10, dtype=np.uint8),
         np.zeros(50_000, dtype=np.uint8),
-        fixture,
-        fixture[:4096],
+        *big,
         rng.integers(0, 256, 200_000, dtype=np.uint8),
         rng.integers(0, 256, 5_000, dtype=np.uint8),
         rng.integers(0, 256, 16_385, dtype=np.uint8),
@@ -35,7 +34,7 @@ def _docs(rng):
     ]
 
 
-@pytest.mark.parametrize(
+_CFGS = pytest.mark.parametrize(
     "cfg",
     [
         ChunkerConfig(4096, 16384, 65535),
@@ -46,14 +45,27 @@ def _docs(rng):
     ],
     ids=["nc1", "seeded", "nc0", "nc3", "tiny"],
 )
-def test_native_matches_numpy(cfg):
-    rng = np.random.default_rng(13)
-    docs = _docs(rng)
+
+
+def _assert_native_matches_numpy(docs, cfg):
     a = chunk_batch_columnar_numpy(docs, cfg)
     b = native.chunk_batch_columnar_native(docs, cfg)
     for x, y in zip(a, b):
         assert x.shape == y.shape
         assert (x == y).all()
+
+
+@_CFGS
+def test_native_matches_numpy(cfg):
+    rng = np.random.default_rng(13)
+    fixture = np.frombuffer(FIXTURE.read_bytes(), dtype=np.uint8)
+    _assert_native_matches_numpy(_docs(rng, [fixture, fixture[:4096]]), cfg)
+
+
+@_CFGS
+def test_native_matches_numpy_synthetic(cfg):
+    rng = np.random.default_rng(13)
+    _assert_native_matches_numpy(_docs(rng, synthetic_arrays()), cfg)
 
 
 def test_native_fixture_golden():
