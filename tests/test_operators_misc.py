@@ -1,7 +1,9 @@
-"""Operator tests: knn buckets, dedup semantics, and physical-plan quality
-(pushdown, broadcast, codegen)."""
+"""Operator tests: multimodal plumbing, knn buckets, dedup semantics,
+and physical-plan quality (pushdown, broadcast, codegen)."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -13,6 +15,11 @@ from fastcdc_rs_spark.operators.knn import (
     cosine_near_duplicates,
     cosine_topk_bruteforce,
     rhp_buckets,
+)
+from fastcdc_rs_spark.operators.multimodal import (
+    frame_sample,
+    image_features,
+    media_metadata,
 )
 from fastcdc_rs_spark.operators.simhash import hamming_distance_expr, simhash_bands
 
@@ -31,6 +38,94 @@ def test_exact_dedup_on_corpus(spark):
     # canonical = min doc_id of each text group
     for r in flags.values():
         assert r.canonical_id <= r.doc_id
+
+
+def test_multimodal_image_features(spark):
+    rng = np.random.default_rng(3)
+    rows = [(i, bytes(rng.integers(0, 256, 500, dtype=np.uint8))) for i in range(20)]
+    media = spark.createDataFrame(rows, "media_id long, payload binary")
+    feats = image_features(media).collect()
+    assert len(feats) == 20
+    for r in feats:
+        assert len(r.features) == 16
+        assert abs(sum(r.features) - 1.0) < 1e-5
+        assert r.height >= 2 and r.width >= 2
+    # deterministic
+    feats2 = image_features(media).collect()
+    assert sorted(map(tuple, ((r.media_id, tuple(r.features)) for r in feats))) == \
+           sorted(map(tuple, ((r.media_id, tuple(r.features)) for r in feats2)))
+    meta = media_metadata(media).collect()
+    assert all(r.n_bytes == 500 for r in meta)
+
+
+def test_multimodal_frame_sample(spark):
+    payload = bytes(range(256)) * 20  # 5120 bytes = 20 frames of 256
+    media = spark.createDataFrame([(1, payload)], "media_id long, payload binary")
+    frames = frame_sample(media, every_n=5).collect()
+    assert [r.frame_idx for r in frames] == [0, 5, 10, 15]
+    # identical frame content → identical hash
+    assert len({r.frame_hash for r in frames}) == 1
+
+
+def test_multimodal_audio_features_real_wav(spark):
+    # REAL decode path: a stdlib-written 16-bit stereo WAV — no stub
+    import io as _io
+    import wave
+
+    from fastcdc_rs_spark.operators.multimodal import audio_features
+
+    sr = 8000
+    t = np.arange(sr, dtype=np.float64) / sr  # 1 second
+    left = (0.5 * np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
+    right = np.zeros(sr, dtype="<i2")  # silent channel -> mono halves RMS
+    inter = np.empty(2 * sr, dtype="<i2")
+    inter[0::2], inter[1::2] = left, right
+    buf = _io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(2)
+        w.setsampwidth(2)
+        w.setframerate(sr)
+        w.writeframes(inter.tobytes())
+    media = spark.createDataFrame(
+        [(1, bytearray(buf.getvalue()))], "media_id long, payload binary"
+    )
+    row = audio_features(media, n_bands=4).first()
+    assert row.n_samples == sr and row.sample_rate == sr
+    # mono mean of (0.5 sine, silence) -> amplitude 0.25 -> RMS ~0.1768
+    assert abs(row.rms - 0.25 / np.sqrt(2)) < 1e-3
+    assert len(row.band_rms) == 4
+    # full-rate sine: every band has the same energy
+    assert max(row.band_rms) - min(row.band_rms) < 1e-3
+
+
+def test_multimodal_audio_stub_and_empty(spark):
+    from fastcdc_rs_spark.operators.multimodal import _decode_audio, audio_features
+
+    x, sr = _decode_audio(b"\x00\x40" * 100)  # raw PCM stub: 0x4000 = 0.5
+    assert sr == 16000 and x.size == 100 and abs(x[0] - 0.5) < 1e-4
+    with pytest.raises(ValueError, match="empty"):
+        _decode_audio(b"")
+    media = spark.createDataFrame(
+        [(7, bytearray(b"\x00\x40" * 64))], "media_id long, payload binary"
+    )
+    row = audio_features(media, n_bands=2).first()
+    assert row.media_id == 7 and abs(row.rms - 0.5) < 1e-3
+
+
+def test_multimodal_image_resize(spark):
+    from fastcdc_rs_spark.operators.multimodal import image_resize
+
+    payload = bytes(range(256)) * 4
+    media = spark.createDataFrame(
+        [(3, bytearray(payload))], "media_id long, payload binary"
+    )
+    rows = image_resize(media, height=4, width=6).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r.height, r.width, len(r.pixels)) == (4, 6, 4 * 6 * 3)
+    # deterministic: same payload -> same pixels
+    again = image_resize(media, height=4, width=6).first()
+    assert bytes(r.pixels) == bytes(again.pixels)
 
 
 def test_cosine_ridden_norms_bit_identical(spark):
@@ -457,6 +552,263 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     assert rel == base == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
+def _encode_png(px: np.ndarray, color: int, filters: list[int],
+                plte: np.ndarray | None = None) -> bytes:
+    """Minimal PNG writer (stdlib struct+zlib) for the decoder goldens:
+    encodes the KNOWN pixel array with the given per-row filter types, so
+    _decode_png's filter reconstruction is pinned against ground truth."""
+    import struct
+    import zlib
+
+    h, w = px.shape[:2]
+    ch = 1 if px.ndim == 2 else px.shape[2]
+    raw = px.reshape(h, w * ch).astype(np.int32)
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", zlib.crc32(ctype + data)))
+
+    lines = []
+    prev = np.zeros(w * ch, np.int32)
+    for y, ft in zip(range(h), filters):
+        cur = raw[y]
+        if ft == 0:
+            f = cur
+        elif ft == 1:
+            shifted = np.concatenate([np.zeros(ch, np.int32), cur[:-ch]])
+            f = (cur - shifted) % 256
+        elif ft == 2:
+            f = (cur - prev) % 256
+        else:  # 3 average / 4 paeth, sequential by definition
+            f = np.zeros(w * ch, np.int32)
+            for x in range(w * ch):
+                a = cur[x - ch] if x >= ch else 0
+                b = prev[x]
+                c = prev[x - ch] if x >= ch else 0
+                if ft == 3:
+                    pred = (a + b) // 2
+                else:
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                f[x] = (cur[x] - pred) % 256
+        lines.append(bytes([ft]) + bytes(f.astype(np.uint8)))
+        prev = cur
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
+    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+    if plte is not None:
+        out += chunk(b"PLTE", bytes(plte.astype(np.uint8).ravel()))
+    out += chunk(b"IDAT", zlib.compress(b"".join(lines)))
+    return out + chunk(b"IEND", b"")
+
+
+def test_png_decode_goldens_all_filters():
+    from fastcdc_rs_spark.operators.multimodal import _decode_image, _decode_png
+
+    rng = np.random.default_rng(11)
+    # RGB 5x4, one row per filter type incl. average + Paeth
+    px = rng.integers(0, 256, (5, 4, 3), dtype=np.uint8)
+    payload = _encode_png(px, color=2, filters=[0, 1, 2, 3, 4])
+    np.testing.assert_array_equal(_decode_png(payload), px)
+    # _decode_image routes PNG magic to the real decoder (no stub shapes)
+    np.testing.assert_array_equal(_decode_image(payload), px)
+
+    # RGBA: alpha dropped (PIL convert("RGB") semantics)
+    pxa = rng.integers(0, 256, (3, 3, 4), dtype=np.uint8)
+    pa = _encode_png(pxa, color=6, filters=[4, 3, 1])
+    np.testing.assert_array_equal(_decode_png(pa), pxa[:, :, :3])
+
+    # grayscale replicates across channels
+    g = rng.integers(0, 256, (4, 6), dtype=np.uint8)
+    pg = _encode_png(g, color=0, filters=[2, 4, 0, 3])
+    np.testing.assert_array_equal(_decode_png(pg), np.repeat(g[:, :, None], 3, axis=2))
+
+    # palette lookup
+    idx = rng.integers(0, 7, (3, 5), dtype=np.uint8)
+    plte = rng.integers(0, 256, (7, 3), dtype=np.uint8)
+    pp = _encode_png(idx, color=3, filters=[0, 1, 2], plte=plte)
+    np.testing.assert_array_equal(_decode_png(pp), plte[idx])
+
+    # unsupported shapes raise ValueError (caller falls back)
+    with pytest.raises(ValueError):
+        _decode_png(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
+    with pytest.raises(ValueError):
+        _decode_png(b"JFIF not a png")
+
+
+def test_png_through_image_operators(spark):
+    from fastcdc_rs_spark.operators.multimodal import image_resize
+
+    rng = np.random.default_rng(12)
+    px = rng.integers(0, 256, (6, 8, 3), dtype=np.uint8)
+    payload = _encode_png(px, color=2, filters=[0, 1, 2, 3, 4, 2])
+    media = spark.createDataFrame(
+        [(1, bytearray(payload))], "media_id long, payload binary"
+    )
+    r = image_features(media).first()
+    assert (r.height, r.width) == (6, 8)
+    hist, _ = np.histogram(px, bins=16, range=(0, 256))
+    np.testing.assert_allclose(r.features, hist / hist.sum(), atol=1e-6)
+    rz = image_resize(media, 3, 4).first()
+    rows = (np.arange(3) * 6) // 3
+    cols = (np.arange(4) * 8) // 4
+    assert bytes(rz.pixels) == px[rows][:, cols].tobytes()
+
+
+def _encode_gif(px_idx: np.ndarray, palette: np.ndarray,
+                interlace: bool = False, transparent: int | None = None,
+                left: int = 0, top: int = 0,
+                screen: tuple[int, int] | None = None, bg: int = 0,
+                local_ct: bool = False) -> bytes:
+    """Minimal GIF89a writer for the decoder goldens: the documented
+    "uncompressed GIF" technique — literal LZW codes at fixed width with
+    a clear code before the table could force a width change — over a
+    KNOWN index array, so _decode_gif's LZW/interlace/compositing is
+    pinned against ground truth (encoder and decoder share no code)."""
+    import struct
+
+    from fastcdc_rs_spark.operators.multimodal import _GIF_PASSES
+
+    h, w = px_idx.shape
+    bits = max(2, (len(palette) - 1).bit_length())
+    size_field = bits - 1
+    scr_w, scr_h = screen or (left + w, top + h)
+    out = bytearray(b"GIF89a")
+    out += struct.pack(
+        "<HHBBB", scr_w, scr_h, (0 if local_ct else 0x80) | size_field, bg, 0
+    )
+    pal = bytes(np.asarray(palette, np.uint8).ravel())
+    pal += b"\x00" * (3 * (2 << size_field) - len(pal))
+    if not local_ct:
+        out += pal
+    if transparent is not None:
+        out += b"\x21\xf9\x04" + bytes([1, 0, 0, transparent]) + b"\x00"
+    iflag = (0x80 | size_field) if local_ct else 0
+    if interlace:
+        iflag |= 0x40
+    out += b"\x2c" + struct.pack("<HHHHB", left, top, w, h, iflag)
+    if local_ct:
+        out += pal
+    rows = [r for start, step in _GIF_PASSES for r in range(start, h, step)]
+    seq = (px_idx[rows] if interlace else px_idx).ravel().tolist()
+    mc = bits
+    clear, end, cs = 1 << mc, (1 << mc) + 1, mc + 1
+    max_lit = (1 << cs) - clear - 2  # literals before the table would
+    codes, count = [clear], 0        # hit 2^cs and widen the codes
+    for v in seq:
+        if count == max_lit:
+            codes.append(clear)
+            count = 0
+        codes.append(int(v))
+        count += 1
+    codes.append(end)
+    bitbuf = nbits = 0
+    data = bytearray()
+    for c in codes:
+        bitbuf |= c << nbits
+        nbits += cs
+        while nbits >= 8:
+            data.append(bitbuf & 0xFF)
+            bitbuf >>= 8
+            nbits -= 8
+    if nbits:
+        data.append(bitbuf & 0xFF)
+    out += bytes([mc])
+    for i in range(0, len(data), 255):
+        out += bytes([len(data[i:i + 255])]) + data[i:i + 255]
+    out += b"\x00\x3b"
+    return bytes(out)
+
+
+def test_gif_decode_goldens():
+    from fastcdc_rs_spark.operators.multimodal import _decode_gif, _decode_image
+
+    rng = np.random.default_rng(21)
+    pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
+
+    # plain 4x6, GCT, no offsets
+    idx = rng.integers(0, 4, (4, 6), dtype=np.uint8)
+    payload = _encode_gif(idx, pal)
+    np.testing.assert_array_equal(_decode_gif(payload), pal[idx])
+    np.testing.assert_array_equal(_decode_image(payload), pal[idx])
+
+    # interlaced 9x5: stored row order is the four-pass schedule
+    idx_i = rng.integers(0, 4, (9, 5), dtype=np.uint8)
+    np.testing.assert_array_equal(
+        _decode_gif(_encode_gif(idx_i, pal, interlace=True)), pal[idx_i]
+    )
+
+    # local color table + frame offset inside a larger logical screen:
+    # canvas fills with the GCT... absent here, so zeros; frame overlays
+    idx_o = rng.integers(0, 4, (2, 3), dtype=np.uint8)
+    p_off = _encode_gif(idx_o, pal, left=2, top=1, screen=(6, 4),
+                        local_ct=True)
+    got = _decode_gif(p_off)
+    want = np.zeros((4, 6, 3), np.uint8)
+    want[1:3, 2:5] = pal[idx_o]
+    np.testing.assert_array_equal(got, want)
+
+    # transparency: transparent pixels show the background color
+    idx_t = np.array([[0, 1], [2, 0]], np.uint8)
+    p_t = _encode_gif(idx_t, pal, transparent=0, bg=3)
+    got_t = _decode_gif(p_t)
+    want_t = pal[idx_t].copy()
+    want_t[idx_t == 0] = pal[3]
+    np.testing.assert_array_equal(got_t, want_t)
+
+    # the canonical 1x1 transparent-pixel GIF (a REAL encoder's LZW
+    # stream, clear/literal/end at growing widths): decodes to the
+    # white background
+    tiny = (b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
+            b"!\xf9\x04\x01\x00\x00\x00\x00"
+            b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;")
+    np.testing.assert_array_equal(
+        _decode_gif(tiny), np.full((1, 1, 3), 255, np.uint8)
+    )
+
+    # malformed inputs raise ValueError (caller falls back)
+    with pytest.raises(ValueError):
+        _decode_gif(b"GIF89a" + b"\x00" * 20)   # trailer/garbage, no image
+    with pytest.raises(ValueError):
+        _decode_gif(payload[:-10])               # truncated LZW data
+    with pytest.raises(ValueError):
+        _decode_gif(b"NOTGIF")
+
+
+def test_ppm_decode_goldens():
+    from fastcdc_rs_spark.operators.multimodal import _decode_image, _decode_ppm
+
+    rng = np.random.default_rng(22)
+    px = rng.integers(0, 256, (3, 5, 3), dtype=np.uint8)
+    payload = b"P6\n# a comment\n 5  3\n255\n" + px.tobytes()
+    np.testing.assert_array_equal(_decode_ppm(payload), px)
+    np.testing.assert_array_equal(_decode_image(payload), px)
+
+    with pytest.raises(ValueError):
+        _decode_ppm(b"P6\n5 3\n65535\n" + b"\x00" * 90)  # 2-byte maxval
+    with pytest.raises(ValueError):
+        _decode_ppm(b"P6\n5 3\n255\n" + px.tobytes()[:-4])  # truncated
+    with pytest.raises(ValueError):
+        _decode_ppm(b"P3\n5 3\n255\n")  # ASCII PPM is out of scope
+
+
+def test_gif_through_image_operators(spark):
+    from fastcdc_rs_spark.operators.multimodal import image_features
+
+    rng = np.random.default_rng(23)
+    pal = rng.integers(0, 256, (8, 3), dtype=np.uint8)
+    idx = rng.integers(0, 8, (6, 8), dtype=np.uint8)
+    payload = _encode_gif(idx, pal)
+    media = spark.createDataFrame(
+        [(1, bytearray(payload))], "media_id long, payload binary"
+    )
+    r = image_features(media).first()
+    assert (r.height, r.width) == (6, 8)
+    px = pal[idx]
+    hist, _ = np.histogram(px, bins=16, range=(0, 256))
+    np.testing.assert_allclose(r.features, hist / hist.sum(), atol=1e-6)
+
+
 def test_cc_long_path_graph_stale_jump_map(spark):
     # Worst case for pointer jumping — a long path — under the round-3
     # jump-through-START-of-round-map design: labels must still converge
@@ -526,6 +878,88 @@ def test_verify_pairs_prefilter_semantics(spark):
     assert set(got) == {(1, 2), (7, 8), (9, 10)}
     assert got[(1, 2)] == 1.0 and got[(7, 8)] == 1.0
     assert abs(got[(9, 10)] - 0.8) < 1e-12
+
+
+def test_png_roundtrip_property():
+    # every random 8-bit image round-trips encoder -> decoder exactly,
+    # across sizes, color types, and per-row filter choices
+    from hypothesis import given, settings, strategies as st
+
+    from fastcdc_rs_spark.operators.multimodal import _decode_png
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        h=st.integers(1, 12), w=st.integers(1, 12),
+        color=st.sampled_from([0, 2, 6]),
+        seed=st.integers(0, 2**31), data=st.data(),
+    )
+    def prop(h, w, color, seed, data):
+        rng = np.random.default_rng(seed)
+        ch = {0: None, 2: 3, 6: 4}[color]
+        shape = (h, w) if ch is None else (h, w, ch)
+        px = rng.integers(0, 256, shape, dtype=np.uint8)
+        filters = data.draw(
+            st.lists(st.integers(0, 4), min_size=h, max_size=h)
+        )
+        payload = _encode_png(px, color=color, filters=filters)
+        out = _decode_png(payload)
+        if color == 0:
+            np.testing.assert_array_equal(out, np.repeat(px[:, :, None], 3, axis=2))
+        elif color == 6:
+            np.testing.assert_array_equal(out, px[:, :, :3])
+        else:
+            np.testing.assert_array_equal(out, px)
+
+    prop()
+
+
+def _fake_jpeg(entropy: bytes) -> bytes:
+    """Structurally valid JPEG: SOI + APP0 + SOS(+entropy with 0xFF00
+    stuffing and an RST marker — raw 0xFFD8 cannot occur in real entropy
+    data) + EOI."""
+    app0 = b"\xff\xe0" + (len(b"JFIF\x00") + 2).to_bytes(2, "big") + b"JFIF\x00"
+    sos_hdr = b"\xff\xda" + (4).to_bytes(2, "big") + b"\x01\x00"
+    return b"\xff\xd8" + app0 + sos_hdr + entropy + b"\xff\xd9"
+
+
+def test_mjpeg_frame_segmentation():
+    from fastcdc_rs_spark.operators.multimodal import (
+        _jpeg_end,
+        _mjpeg_frame_spans,
+    )
+
+    # entropy containing stuffed 0xFF00 and an RST marker must not
+    # terminate the frame early
+    f1 = _fake_jpeg(b"\x01\x02\xff\x00\x03\xff\xd0\x04\x05")
+    f2 = _fake_jpeg(b"\xaa\xbb\xcc")
+    assert _jpeg_end(f1, 0) == len(f1)
+    buf = f1 + f2 + f1
+    spans = _mjpeg_frame_spans(buf)
+    assert [e - s for s, e in spans] == [len(f1), len(f2), len(f1)]
+    assert [buf[s:e] for s, e in spans] == [f1, f2, f1]
+    # truncated trailing frame is skipped, preceding frames still found
+    spans2 = _mjpeg_frame_spans(f1 + f2[:-1])
+    assert [e - s for s, e in spans2] == [len(f1)]
+
+
+def test_frame_sample_mjpeg_and_stub(spark):
+    from fastcdc_rs_spark.operators.multimodal import frame_sample
+
+    frames = [_fake_jpeg(bytes([i, i + 1, i + 2])) for i in range(6)]
+    frames[4] = frames[0]  # frame 4 duplicates frame 0
+    mjpeg = b"".join(frames)
+    stub_payload = bytes(range(256)) * 20  # non-JPEG -> slice stub
+    media = spark.createDataFrame(
+        [(1, bytearray(mjpeg)), (2, bytearray(stub_payload))],
+        "media_id long, payload binary",
+    )
+    rows = frame_sample(media, every_n=2).collect()
+    mj = sorted((r.frame_idx, r.frame_hash) for r in rows if r.media_id == 1)
+    assert [i for i, _ in mj] == [0, 2, 4]
+    by_idx = dict(mj)
+    assert by_idx[0] == by_idx[4] and by_idx[0] != by_idx[2]  # real content hash
+    st = sorted(r.frame_idx for r in rows if r.media_id == 2)
+    assert st == [0, 2, 4, 6, 8, 10, 12, 14, 16, 18]
 
 
 def test_contamination_flags(spark):
@@ -621,8 +1055,41 @@ def test_repetition_scores_known_values(spark):
     assert out[2] == (1, 1.0, 0.0)
 
 
-def test_stratified_sample_integer_cutoff_boundary(spark):
+def test_png_corrupt_inputs_raise_value_error():
+    # the fallback contract: EVERY malformed PNG fails with ValueError
+    # (never zlib.error/struct.error/IndexError escaping the decoder)
+    import struct, zlib
+
+    from fastcdc_rs_spark.operators.multimodal import _decode_image, _decode_png
+
+    def chunk(ctype, data):
+        return (struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", zlib.crc32(ctype + data)))
+
+    magic = b"\x89PNG\r\n\x1a\n"
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
+    # corrupt deflate stream in IDAT
+    bad_idat = magic + chunk(b"IHDR", ihdr) + chunk(b"IDAT", b"\x99" * 20) + chunk(b"IEND", b"")
+    with pytest.raises(ValueError):
+        _decode_png(bad_idat)
+    # truncated IHDR payload
+    with pytest.raises(ValueError):
+        _decode_png(magic + chunk(b"IHDR", b"\x00" * 5) + chunk(b"IDAT", b"x") + chunk(b"IEND", b""))
+    # palette index beyond PLTE
+    idx = np.array([[3]], dtype=np.uint8)   # palette has 2 entries
+    pp = _encode_png(idx, color=3, filters=[0], plte=np.zeros((2, 3), dtype=np.uint8))
+    with pytest.raises(ValueError):
+        _decode_png(pp)
+    # _decode_image surfaces the same catchable ValueError (no PIL in
+    # this container, and faking pixels for a CORRUPT real PNG would be
+    # worse than erroring); callers can gate with SPARK_GRAFT_FAKE_MEDIA
+    with pytest.raises(ValueError):
+        _decode_image(bad_idat)
+
+
+def test_stratified_sample_boundary_and_frame_sample_nulls(spark):
     from fastcdc_rs_spark.operators.mixing import _BUCKETS, stratified_sample
+    from fastcdc_rs_spark.operators.multimodal import frame_sample
 
     # integer-cutoff boundary: a doc whose bucket == cut must be DROPPED
     # on both engines (bucket < cut, exact integers — no float fuzz)
@@ -640,6 +1107,22 @@ def test_stratified_sample_integer_cutoff_boundary(spark):
     kept = {r.doc_id for r in stratified_sample(
         docs, {"xx": rate}, seed=0, strata_col="lang").collect()}
     assert probe.doc_id not in kept  # bucket == cut -> excluded exactly
+
+    # NULL payloads take the stub branch instead of vanishing
+    media = spark.createDataFrame(
+        [(1, None), (2, bytearray(b"\x01" * 512))],
+        "media_id long, payload binary",
+    )
+    rows = frame_sample(media, every_n=1).collect()
+    assert {r.media_id for r in rows} == {1, 2}
+
+    # custom id_col works across both branches (union by name)
+    media2 = spark.createDataFrame(
+        [(7, bytearray(_fake_jpeg(b"\x01\x02"))), (8, bytearray(b"zz" * 300))],
+        "vid long, payload binary",
+    )
+    rows2 = frame_sample(media2, every_n=1, id_col="vid").collect()
+    assert {r.vid for r in rows2} == {7, 8}
 
 
 def test_cdc_dedup_stats_vs_single_node(spark):
@@ -714,6 +1197,179 @@ def test_stratified_sample_user_cut_column_survives(spark):
     rows = kept.collect()
     assert 0 < len(rows) < 100
     assert all(r._cut == r.doc_id * 10 for r in rows)
+
+
+def test_image_ops_on_error_skip(spark):
+    # per-record error policy (ADVICE r3): one corrupt payload must not
+    # kill a corpus-scale stage under on_error="skip", and must still
+    # fail loudly under the default contract
+    import pytest
+
+    from fastcdc_rs_spark.operators.multimodal import (
+        _PNG_MAGIC,
+        image_features,
+        image_resize,
+    )
+
+    good = bytes(range(64, 128))          # stub-decodable payload
+    corrupt = _PNG_MAGIC + b"\x00" * 8    # PNG magic, garbage body
+    media = spark.createDataFrame(
+        [(1, good), (2, corrupt), (3, good)], "media_id long, payload binary"
+    )
+
+    kept = image_features(media, on_error="skip").collect()
+    assert sorted(r.media_id for r in kept) == [1, 3]
+    kept_rs = image_resize(media, 4, 4, on_error="skip").collect()
+    assert sorted(r.media_id for r in kept_rs) == [1, 3]
+
+    with pytest.raises(Exception):  # default on_error="fail" keeps contract
+        image_features(media).collect()
+    with pytest.raises(ValueError):
+        image_features(media, on_error="nope")
+
+
+def test_frame_sample_truncated_mjpeg_emits_degraded_row(spark):
+    # an SOI-led payload with zero complete frames must still emit one
+    # (frame_idx=-1, md5-fold) row instead of vanishing (ADVICE r3)
+    import hashlib
+
+    from fastcdc_rs_spark.operators.multimodal import frame_sample
+
+    truncated = b"\xff\xd8\xff\xe0\x00\x10" + b"JFIF" + b"\x00" * 32  # no EOI
+    media = spark.createDataFrame(
+        [(7, truncated)], "media_id long, payload binary"
+    )
+    rows = frame_sample(media, every_n=1).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    want = int.from_bytes(hashlib.md5(truncated).digest()[:8], "big", signed=True)
+    assert (r.media_id, r.frame_idx, r.frame_hash) == (7, -1, want)
+
+
+def _encode_bmp(px, bpp=24, top_down=False, palette=None):
+    """Independent minimal BMP encoder (test-side oracle for _decode_bmp):
+    BITMAPFILEHEADER + BITMAPINFOHEADER + optional BGRA palette + padded
+    rows, bottom-up unless top_down."""
+    import struct
+
+    import numpy as np
+
+    h, w = px.shape[:2]
+    stride = ((w * bpp // 8) + 3) & ~3
+    pal_bytes = b""
+    if bpp == 8:
+        pal = np.zeros((len(palette), 4), np.uint8)
+        pal[:, :3] = palette[:, ::-1]  # RGB -> BGR_
+        pal_bytes = pal.tobytes()
+    data_off = 14 + 40 + len(pal_bytes)
+    rows = []
+    order = range(h) if top_down else range(h - 1, -1, -1)
+    for y in order:
+        if bpp == 8:
+            row = px[y].tobytes()  # px holds palette indices (h, w)
+        elif bpp == 24:
+            row = px[y, :, ::-1].tobytes()  # RGB -> BGR
+        else:  # 32
+            bgra = np.zeros((w, 4), np.uint8)
+            bgra[:, :3] = px[y, :, ::-1]
+            bgra[:, 3] = 0xAA
+            row = bgra.tobytes()
+        rows.append(row + b"\x00" * (stride - len(row)))
+    body = b"".join(rows)
+    hdr = b"BM" + struct.pack("<IHHI", data_off + len(body), 0, 0, data_off)
+    dib = struct.pack(
+        "<IiiHHIIiiII", 40, w, (-h if top_down else h), 1, bpp, 0,
+        len(body), 2835, 2835, (len(palette) if palette is not None else 0), 0,
+    )
+    return hdr + dib + pal_bytes + body
+
+
+def test_bmp_decode_golden_2x2():
+    # canonical public 2x2 24-bit example (BMP spec walk-through): file
+    # stores bottom-up BGR rows padded to 4 bytes — red,white on the
+    # bottom row, blue,green on top
+    from fastcdc_rs_spark.operators.multimodal import _decode_bmp
+
+    golden = bytes(
+        [
+            0x42, 0x4D,                          # BM
+            0x46, 0x00, 0x00, 0x00,              # file size 70
+            0x00, 0x00, 0x00, 0x00,              # reserved
+            0x36, 0x00, 0x00, 0x00,              # data offset 54
+            0x28, 0x00, 0x00, 0x00,              # DIB size 40
+            0x02, 0x00, 0x00, 0x00,              # width 2
+            0x02, 0x00, 0x00, 0x00,              # height 2 (bottom-up)
+            0x01, 0x00,                          # planes
+            0x18, 0x00,                          # 24 bpp
+            0x00, 0x00, 0x00, 0x00,              # BI_RGB
+            0x10, 0x00, 0x00, 0x00,              # image size 16
+            0x13, 0x0B, 0x00, 0x00,              # 2835 ppm
+            0x13, 0x0B, 0x00, 0x00,
+            0x00, 0x00, 0x00, 0x00,              # colors used
+            0x00, 0x00, 0x00, 0x00,              # important colors
+            # bottom row: red (00 00 FF), white (FF FF FF), pad
+            0x00, 0x00, 0xFF, 0xFF, 0xFF, 0xFF, 0x00, 0x00,
+            # top row: blue (FF 00 00), green (00 FF 00), pad
+            0xFF, 0x00, 0x00, 0x00, 0xFF, 0x00, 0x00, 0x00,
+        ]
+    )
+    img = _decode_bmp(golden)
+    assert img.shape == (2, 2, 3)
+    assert img[0, 0].tolist() == [0, 0, 255]      # top-left blue
+    assert img[0, 1].tolist() == [0, 255, 0]      # top-right green
+    assert img[1, 0].tolist() == [255, 0, 0]      # bottom-left red
+    assert img[1, 1].tolist() == [255, 255, 255]  # bottom-right white
+
+
+def test_bmp_roundtrip_variants():
+    # decoder inverts an independently-written encoder across the
+    # supported subset: 24-bit bottom-up (odd width -> row padding),
+    # 32-bit top-down (alpha dropped), 8-bit palette
+    import numpy as np
+
+    from fastcdc_rs_spark.operators.multimodal import _decode_bmp
+
+    rng = np.random.default_rng(11)
+    px = rng.integers(0, 256, (5, 3, 3), dtype=np.uint8)  # odd width
+    assert np.array_equal(_decode_bmp(_encode_bmp(px, 24)), px)
+    assert np.array_equal(_decode_bmp(_encode_bmp(px, 32, top_down=True)), px)
+
+    palette = rng.integers(0, 256, (16, 3), dtype=np.uint8)
+    idx = rng.integers(0, 16, (4, 7), dtype=np.uint8)
+    got = _decode_bmp(_encode_bmp(idx, 8, palette=palette))
+    assert np.array_equal(got, palette[idx])
+
+
+def test_bmp_corrupt_inputs_and_image_op(spark):
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from fastcdc_rs_spark.operators.multimodal import (
+        _decode_bmp,
+        image_features,
+    )
+
+    px = np.zeros((2, 2, 3), np.uint8)
+    ok = _encode_bmp(px, 24)
+    with pytest.raises(ValueError):
+        _decode_bmp(ok[:40])                     # truncated header
+    with pytest.raises(ValueError):
+        _decode_bmp(ok[:-4])                     # truncated pixel data
+    rle = bytearray(ok)
+    struct.pack_into("<I", rle, 30, 1)           # BI_RLE8 compression
+    with pytest.raises(ValueError):
+        _decode_bmp(bytes(rle))
+
+    # through the Spark operator: real decode, exact histogram feature
+    px2 = np.full((4, 4, 3), 255, np.uint8)
+    media = spark.createDataFrame(
+        [(1, _encode_bmp(px2, 24))], "media_id long, payload binary"
+    )
+    r = image_features(media).first()
+    assert (r.height, r.width) == (4, 4)
+    assert r.features[-1] == 1.0                 # all pixels in top bin
 
 
 @pytest.fixture
@@ -837,3 +1493,1155 @@ def test_cc_driver_path_equals_loop(spark):
     assert got_e._graft_cc_stats["cc_mode"] == "driver"
     assert all(r.doc_id == r.cluster_id for r in got_e.collect())
 
+
+# --- baseline JPEG decoder goldens ----------------------------------------
+#
+# Same pattern as the PNG/GIF/BMP sections: a minimal TEST-LOCAL encoder
+# (forward DCT + canonical Huffman writer, sharing NO code or tables with
+# the decoder under test) pins _decode_jpeg against ground truth, plus an
+# independent real-world cross-check against Spark's JVM ImageIO decoder
+# on the distribution's own sample JPEGs.
+
+_JPEG_ZZ = [
+     0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
+    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13,  6,  7, 14, 21, 28,
+    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
+    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
+]
+
+
+def _jpeg_test_hufftable():
+    """Canonical Huffman spec covering all 256 symbols: 128 codes of
+    length 8 (symbols 0..127) then 128 of length 9 — valid per T.81
+    Annex C, no all-ones code. Returns (bits16, vals, {sym: (len, code)})."""
+    bits = [0] * 16
+    bits[7] = 128
+    bits[8] = 128
+    vals = bytes(range(256))
+    enc = {}
+    for s in range(128):
+        enc[s] = (8, s)
+    for s in range(128, 256):
+        enc[s] = (9, 256 + s - 128)
+    return bytes(bits), vals, enc
+
+
+class _JpegTestBitWriter:
+    def __init__(self):
+        self.out = bytearray()
+        self._acc = 0
+        self._n = 0
+
+    def write(self, value, nbits):
+        for i in range(nbits - 1, -1, -1):
+            self._acc = (self._acc << 1) | ((value >> i) & 1)
+            self._n += 1
+            if self._n == 8:
+                self.out.append(self._acc)
+                if self._acc == 0xFF:
+                    self.out.append(0x00)  # byte stuffing
+                self._acc = 0
+                self._n = 0
+
+    def flush(self):
+        while self._n:
+            self.write(1, 1)  # pad with 1-bits per T.81 F.1.2.3
+
+
+def _encode_jpeg(px, qt_scale=1, subsampling="444", restart=0):
+    """Minimal baseline JFIF encoder (test-local). px: HxWx3 uint8 RGB or
+    HxW grayscale. Flat quant table (all qt_scale) keeps the golden exact
+    for DC-only content and near-exact for smooth content."""
+    import struct
+
+    C = np.array([
+        [(np.sqrt(1 / 8) if u == 0 else 0.5)
+         * np.cos((2 * x + 1) * u * np.pi / 16) for x in range(8)]
+        for u in range(8)
+    ])
+    gray = px.ndim == 2
+    h, w = px.shape[:2]
+    if gray:
+        planes = [px.astype(np.float64)]
+        samp = [(1, 1)]
+    else:
+        r, g, b = (px[:, :, i].astype(np.float64) for i in range(3))
+        y = 0.299 * r + 0.587 * g + 0.114 * b
+        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
+        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
+        if subsampling == "420":
+            # pad to even then 2x2 mean
+            ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
+            def ds(p):
+                q = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
+                return (q.reshape(ph // 2, 2, pw // 2, 2).mean((1, 3)))
+            planes = [y, ds(cb), ds(cr)]
+            samp = [(2, 2), (1, 1), (1, 1)]
+        else:
+            planes = [y, cb, cr]
+            samp = [(1, 1), (1, 1), (1, 1)]
+    hmax = max(s[0] for s in samp)
+    vmax = max(s[1] for s in samp)
+    mcux = -(-w // (8 * hmax))
+    mcuy = -(-h // (8 * vmax))
+    qt = np.full(64, qt_scale, np.int64)
+    bits, vals, enc = _jpeg_test_hufftable()
+
+    def cat(v):
+        return int(abs(v)).bit_length()
+
+    bw = _JpegTestBitWriter()
+    preds = [0] * len(planes)
+    blocks_emitted = 0
+
+    def emit_block(blk, ci):
+        nonlocal blocks_emitted
+        F = C @ (blk - 128.0) @ C.T
+        q = np.round(F.ravel() / qt.reshape(8, 8).ravel()).astype(np.int64)
+        zz = q[np.array(_JPEG_ZZ)]
+        diff = int(zz[0]) - preds[ci]
+        preds[ci] = int(zz[0])
+        t = cat(diff)
+        ln, code = enc[t]
+        bw.write(code, ln)
+        if t:
+            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+        run = 0
+        last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
+        for k in range(1, last_nz + 1):
+            v = int(zz[k])
+            if v == 0:
+                run += 1
+                continue
+            while run > 15:
+                ln, code = enc[0xF0]
+                bw.write(code, ln)
+                run -= 16
+            s = cat(v)
+            ln, code = enc[(run << 4) | s]
+            bw.write(code, ln)
+            bw.write(v if v >= 0 else v + (1 << s) - 1, s)
+            run = 0
+        if last_nz < 63:
+            ln, code = enc[0x00]  # EOB
+            bw.write(code, ln)
+        blocks_emitted += 1
+
+    chunks = []  # entropy chunks split at restart boundaries
+    for mcu in range(mcuy * mcux):
+        if restart and mcu and mcu % restart == 0:
+            bw.flush()
+            chunks.append(bytes(bw.out))
+            bw.out.clear()
+            preds = [0] * len(planes)
+        my, mx = divmod(mcu, mcux)
+        for ci, (plane, (sh, sv)) in enumerate(zip(planes, samp)):
+            ph = mcuy * sv * 8
+            pw2 = mcux * sh * 8
+            p = np.pad(plane, ((0, ph - plane.shape[0]),
+                               (0, pw2 - plane.shape[1])), mode="edge")
+            for by in range(sv):
+                for bx in range(sh):
+                    r0 = (my * sv + by) * 8
+                    c0 = (mx * sh + bx) * 8
+                    emit_block(p[r0:r0 + 8, c0:c0 + 8], ci)
+    bw.flush()
+    chunks.append(bytes(bw.out))
+
+    out = bytearray(b"\xff\xd8")
+    dqt = bytes([0]) + bytes(int(qt[i]) for i in range(64))
+    out += b"\xff\xdb" + struct.pack(">H", 2 + len(dqt)) + dqt
+    ncomp = len(planes)
+    sof = struct.pack(">BHHB", 8, h, w, ncomp)
+    for ci in range(ncomp):
+        sof += bytes([ci + 1, (samp[ci][0] << 4) | samp[ci][1], 0])
+    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
+    for tc in (0, 1):
+        dht = bytes([(tc << 4) | 0]) + bits + vals
+        out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
+    if restart:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, restart)
+    sos = bytes([ncomp])
+    for ci in range(ncomp):
+        sos += bytes([ci + 1, 0x00])
+    sos += bytes([0, 63, 0])
+    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+    for i, ch in enumerate(chunks):
+        if i:
+            out += bytes([0xFF, 0xD0 + ((i - 1) % 8)])
+        out += ch
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+def test_jpeg_dc_only_golden():
+    """Solid-gray blocks are DC-only with a flat quant table: the decode
+    must be EXACT (level shift, DC coding, IDCT, and YCbCr for R=G=B all
+    round-trip without loss)."""
+    from fastcdc_rs_spark.operators.multimodal import _decode_image, _decode_jpeg
+
+    for gray in (0, 1, 127, 128, 200, 255):
+        px = np.full((16, 24, 3), gray, np.uint8)
+        payload = _encode_jpeg(px)
+        got = _decode_jpeg(payload)
+        assert got.shape == (16, 24, 3)
+        np.testing.assert_array_equal(got, px)
+    # dispatcher routes JPEG magic to the real decoder
+    px = np.full((8, 8, 3), 77, np.uint8)
+    np.testing.assert_array_equal(_decode_image(_encode_jpeg(px)), px)
+    # grayscale single-component frame replicates across channels
+    g = np.full((8, 16), 99, np.uint8)
+    got = _decode_jpeg(_encode_jpeg(g))
+    np.testing.assert_array_equal(got, np.repeat(g[:, :, None], 3, 2))
+
+
+def test_jpeg_roundtrip_smooth_gradient():
+    """Flat qt=1 on smooth content: reconstruction error is bounded by
+    coefficient rounding (~±3 after the color transform round-trip)."""
+    from fastcdc_rs_spark.operators.multimodal import _decode_jpeg
+
+    yy, xx = np.mgrid[0:24, 0:40]
+    px = np.stack([
+        (yy * 5 + 20) % 256,
+        (xx * 3 + 90) % 256,
+        ((xx + yy) * 2 + 40) % 256,
+    ], -1).astype(np.uint8)
+    got = _decode_jpeg(_encode_jpeg(px))
+    assert got.shape == px.shape
+    d = np.abs(got.astype(int) - px.astype(int))
+    assert d.max() <= 4 and d.mean() < 1.0
+
+
+def test_jpeg_420_subsampling_and_restarts():
+    from fastcdc_rs_spark.operators.multimodal import _decode_jpeg
+
+    # 4:2:0 solid color: MCU layout + chroma upsample + color transform
+    # must reproduce the solid exactly (chroma planes are constant)
+    px = np.full((20, 35, 3), 0, np.uint8)
+    px[:, :, 0] = 180
+    px[:, :, 1] = 40
+    px[:, :, 2] = 220
+    got = _decode_jpeg(_encode_jpeg(px, subsampling="420"))
+    assert got.shape == (20, 35, 3)
+    d = np.abs(got.astype(int) - px.astype(int))
+    assert d.max() <= 1  # YCbCr forward+inverse rounding only
+
+    # restart markers: coefficients identical with and without DRI
+    yy, xx = np.mgrid[0:16, 0:48]
+    smooth = np.stack([yy * 7 % 256, xx * 2 % 256, (yy + xx) % 256],
+                      -1).astype(np.uint8)
+    a = _decode_jpeg(_encode_jpeg(smooth))
+    b = _decode_jpeg(_encode_jpeg(smooth, restart=2))
+    np.testing.assert_array_equal(a, b)
+    # 4:2:0 with restarts
+    c = _decode_jpeg(_encode_jpeg(smooth, subsampling="420", restart=1))
+    assert c.shape == smooth.shape
+
+
+def test_jpeg_non_baseline_and_corrupt_raise():
+    from fastcdc_rs_spark.operators.multimodal import _decode_jpeg
+
+    good = _encode_jpeg(np.full((8, 8, 3), 50, np.uint8))
+    # flip SOF0 marker to SOF2: the file CLAIMS progressive but its scan
+    # header is baseline-shaped (Ss=0, Se=63 — illegal for a progressive
+    # DC scan, T.81 G.1), so the progressive path must reject it
+    prog = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
+    with pytest.raises(ValueError):
+        _decode_jpeg(prog)
+    with pytest.raises(ValueError):
+        _decode_jpeg(b"\xff\xd8\xff\xd9")       # no SOF/SOS
+    with pytest.raises(ValueError):
+        _decode_jpeg(good[: len(good) // 2])    # truncated entropy data
+    with pytest.raises(ValueError):
+        _decode_jpeg(b"not a jpeg")
+
+
+_FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
+
+
+def test_progressive_jpeg_golden_vs_imageio():
+    """Progressive (SOF2) decode pinned against JVM ImageIO ground truth.
+
+    Fixtures were written by javax.imageio's JPEG encoder
+    (``JPEGImageWriteParam.setProgressiveMode(MODE_DEFAULT)`` — a
+    libjpeg-class multi-pass script: DC successive approximation plus
+    spectral-band AC first + refinement scans, exercising T.81 Annex G
+    end to end) and ground-truthed by ImageIO's own decoder — no code
+    shared with ours. Gray 4:4:4 must agree at IDCT-rounding level; the
+    RGB fixture is 4:2:0, where our chroma upsample is replication vs
+    ImageIO's triangular filter, so it is pinned at luma level (same
+    documented policy as test_jpeg_vs_jvm_imageio)."""
+    from fastcdc_rs_spark.operators.multimodal import _decode_jpeg
+
+    gray = open(os.path.join(_FIXTURES, "progressive_gray.jpg"), "rb").read()
+    assert b"\xff\xc2" in gray  # really SOF2
+    ref = np.load(os.path.join(_FIXTURES, "progressive_gray_imageio.npy"))
+    got = _decode_jpeg(gray)
+    assert got.shape == (*ref.shape, 3)
+    d = np.abs(got.astype(int) - np.stack([ref] * 3, -1).astype(int))
+    assert d.max() <= 1 and d.mean() < 0.05
+
+    rgb = open(os.path.join(_FIXTURES, "progressive_rgb.jpg"), "rb").read()
+    assert b"\xff\xc2" in rgb
+    ref = np.load(os.path.join(_FIXTURES, "progressive_rgb_imageio.npy"))
+    got = _decode_jpeg(rgb)
+    assert got.shape == ref.shape
+
+    def luma(a):
+        return 0.299 * a[..., 0] + 0.587 * a[..., 1] + 0.114 * a[..., 2]
+
+    dl = np.abs(luma(got.astype(float)) - luma(ref.astype(float)))
+    assert dl.max() <= 2.0 and dl.mean() < 0.5
+
+
+def test_progressive_jpeg_roundtrip_own_encoder():
+    """Our sequential encoder's output re-marked is NOT used here (that
+    would be self-referential); instead decode the progressive fixture
+    and the same image baseline-encoded by us must agree at luma level —
+    progressive vs sequential are two codings of identical coefficients."""
+    from fastcdc_rs_spark.operators.multimodal import _decode_jpeg
+
+    ref = np.load(os.path.join(_FIXTURES, "progressive_gray_imageio.npy"))
+    px = np.stack([ref] * 3, -1).astype(np.uint8)
+    seq = _decode_jpeg(_encode_jpeg(px))
+    prog = _decode_jpeg(
+        open(os.path.join(_FIXTURES, "progressive_gray.jpg"), "rb").read()
+    )
+    d = np.abs(seq.astype(int) - prog.astype(int))
+    assert d.max() <= 6 and d.mean() < 1.5  # two quant tables, same image
+
+
+def test_multimodal_docstring_matches_decoders():
+    """Guard against doc drift (round-5 VERDICT #4): the module header
+    must not call STUBBED any codec the dispatch actually implements."""
+    import fastcdc_rs_spark.operators.multimodal as mm
+
+    doc = mm.__doc__.lower()
+    start = doc.index("remaining paths (") + len("remaining paths (")
+    stub_clause = doc[start : doc.index(") are", start)]
+    for real in ("png", "bmp", "gif", "ppm", "progressive", "wav", "aiff",
+                 "au (", "mu-law", "flac", "tiff"):
+        assert real not in stub_clause, f"docstring claims {real!r} is stubbed"
+    # and the real-codec list names every stdlib decoder that exists
+    for fn in ("_decode_png", "_decode_bmp", "_decode_gif", "_decode_ppm",
+               "_decode_jpeg", "_decode_flac", "_decode_tiff"):
+        assert hasattr(mm, fn)
+        assert fn in mm.__doc__, f"{fn} missing from header codec list"
+
+
+def test_jpeg_through_image_operators(spark):
+    from fastcdc_rs_spark.operators.multimodal import image_features, image_resize
+
+    rng = np.random.default_rng(31)
+    base = rng.integers(60, 200, (12, 16, 3))
+    px = base.astype(np.uint8)
+    payload = _encode_jpeg(px)
+    media = spark.createDataFrame(
+        [(1, bytearray(payload))], "media_id long, payload binary"
+    )
+    r = image_features(media).first()
+    assert (r.height, r.width) == (12, 16)
+    rz = image_resize(media, 6, 8).first()
+    assert rz.height == 6 and rz.width == 8
+    assert len(bytes(rz.pixels)) == 6 * 8 * 3
+
+
+_SPARK_SAMPLE_JPEGS = "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin"
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(_SPARK_SAMPLE_JPEGS),
+    reason="Spark sample images not present",
+)
+def test_jpeg_vs_jvm_imageio(spark):
+    """Independent real-world cross-check: Spark's `image` data source
+    decodes via javax.imageio (libjpeg-class decoder, no code shared with
+    ours). 4:4:4 files must agree at IDCT-rounding level; 4:2:0 files
+    agree on luma (our chroma upsample is replication, ImageIO's is
+    triangular — a documented decoder choice, not an error)."""
+    from fastcdc_rs_spark.operators.multimodal import _decode_jpeg
+
+    cases = [
+        (_SPARK_SAMPLE_JPEGS + "/kittens/DP802813.jpg", "full"),
+        (_SPARK_SAMPLE_JPEGS + "/multi-channel/chr30.4.184.jpg", "luma"),
+    ]
+    for path, mode in cases:
+        if not os.path.exists(path):
+            continue
+        row = (
+            spark.read.format("image").load(path).select("image.*").collect()[0]
+        )
+        jvm = (
+            np.frombuffer(bytes(row.data), np.uint8)
+            .reshape(row.height, row.width, row.nChannels)[:, :, ::-1]
+        )
+        mine = _decode_jpeg(open(path, "rb").read())
+        assert mine.shape == jvm.shape
+        if mode == "full":
+            d = np.abs(jvm.astype(int) - mine.astype(int))
+            assert d.mean() < 0.5
+        else:
+            def luma(a):
+                return (0.299 * a[:, :, 0] + 0.587 * a[:, :, 1]
+                        + 0.114 * a[:, :, 2])
+            dl = np.abs(luma(jvm.astype(float)) - luma(mine.astype(float)))
+            assert dl.mean() < 0.5
+
+
+# --- AIFF / AU audio decoder goldens ---------------------------------------
+#
+# The hand-rolled parsers replace the stdlib aifc/sunau modules (removed
+# in Python 3.13). On 3.11 those modules still exist, so they serve as
+# INDEPENDENT encoders for the fixtures; audioop cross-checks µ-law.
+
+
+def test_aiff_decode_roundtrip():
+    import struct
+
+    from fastcdc_rs_spark.operators.multimodal import _decode_aiff, _decode_audio
+
+    pcm = (np.sin(np.arange(400) * 0.07) * 20000).astype(">i2")
+    try:  # independent stdlib encoder when available (3.11)
+        import io as _io
+        import warnings
+
+        import aifc
+
+        bio = _io.BytesIO()
+        bio.close = lambda: None  # aifc closes the stream on close()
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", DeprecationWarning)
+            w = aifc.open(bio, "wb")
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(pcm.tobytes())
+            w.close()
+        payload = bio.getvalue()
+    except ImportError:  # 3.13+: hand-packed minimal AIFF
+        def ext80(rate):
+            exp = 16383
+            mant = rate << 63
+            while mant >= 1 << 64:
+                mant >>= 1
+                exp += 1
+            return struct.pack(">HQ", exp, mant)
+        comm = struct.pack(">hIh", 1, len(pcm), 16) + ext80(8000)
+        ssnd = struct.pack(">II", 0, 0) + pcm.tobytes()
+        body = (b"AIFF"
+                + b"COMM" + struct.pack(">I", len(comm)) + comm
+                + b"SSND" + struct.pack(">I", len(ssnd)) + ssnd)
+        payload = b"FORM" + struct.pack(">I", len(body)) + body
+
+    x, sr = _decode_aiff(payload)
+    assert sr == 8000
+    np.testing.assert_allclose(
+        x, pcm.astype(np.float32) / 32768.0, atol=1e-7)
+    # dispatcher routes FORM/AIFF magic to the real decoder
+    x2, sr2 = _decode_audio(payload)
+    np.testing.assert_array_equal(x, x2)
+    assert sr2 == 8000
+
+    # stereo averages to mono (hand-packed 16-bit fixture)
+    st = np.stack([pcm, -pcm], -1).ravel().astype(">i2")
+    import struct as _s
+
+    def ext80(rate):
+        exp = 16383
+        mant = rate << 63
+        while mant >= 1 << 64:
+            mant >>= 1
+            exp += 1
+        return _s.pack(">HQ", exp, mant)
+    comm = _s.pack(">hIh", 2, len(pcm), 16) + ext80(16000)
+    ssnd = _s.pack(">II", 0, 0) + st.tobytes()
+    body = (b"AIFF" + b"COMM" + _s.pack(">I", len(comm)) + comm
+            + b"SSND" + _s.pack(">I", len(ssnd)) + ssnd)
+    xm, srm = _decode_aiff(b"FORM" + _s.pack(">I", len(body)) + body)
+    assert srm == 16000
+    np.testing.assert_allclose(xm, np.zeros(len(pcm), np.float32), atol=1e-6)
+
+    with pytest.raises(ValueError):
+        _decode_aiff(b"FORM\x00\x00\x00\x04WAVE")
+    with pytest.raises(ValueError):
+        _decode_aiff(b"FORM" + _s.pack(">I", 4) + b"AIFF")  # no COMM/SSND
+
+
+def test_au_decode_linear_and_mulaw():
+    import struct
+
+    from fastcdc_rs_spark.operators.multimodal import _decode_au, _decode_audio
+
+    pcm = (np.cos(np.arange(300) * 0.11) * 12345).astype(">i2")
+    payload = struct.pack(">4sIIIII", b".snd", 24, len(pcm) * 2, 3, 11025, 1)
+    payload += pcm.tobytes()
+    x, sr = _decode_au(payload)
+    assert sr == 11025
+    np.testing.assert_allclose(x, pcm.astype(np.float32) / 32768.0, atol=1e-7)
+    x2, sr2 = _decode_audio(payload)
+    np.testing.assert_array_equal(x, x2)
+
+    # µ-law: published code points (G.711): 0xFF -> 0, 0x00 -> -32124,
+    # 0x80 -> +32124
+    mu = bytes([0xFF, 0x00, 0x80])
+    pl = struct.pack(">4sIIIII", b".snd", 24, len(mu), 1, 8000, 1) + mu
+    xm, srm = _decode_au(pl)
+    assert srm == 8000
+    np.testing.assert_allclose(
+        xm * 32768.0, [0.0, -32124.0, 32124.0], atol=1e-3)
+    try:  # cross-check every code point against stdlib audioop (3.11)
+        import audioop
+
+        allcodes = bytes(range(256))
+        want = np.frombuffer(audioop.ulaw2lin(allcodes, 2), "<i2")
+        pl = struct.pack(">4sIIIII", b".snd", 24, 256, 1, 8000, 1) + allcodes
+        got, _ = _decode_au(pl)
+        np.testing.assert_allclose(got * 32768.0, want.astype(np.float64),
+                                   atol=1e-3)
+    except ImportError:
+        pass
+
+    with pytest.raises(ValueError):
+        _decode_au(b".snd" + b"\x00" * 8)  # truncated header
+    with pytest.raises(ValueError):
+        _decode_au(struct.pack(">4sIIIII", b".snd", 24, 4, 27, 8000, 1)
+                   + b"\x00" * 4)  # unsupported encoding
+
+
+def test_audio_features_aiff_au_through_operator(spark):
+    import struct
+
+    from fastcdc_rs_spark.operators.multimodal import audio_features
+
+    pcm = (np.sin(np.arange(1600) * 0.05) * 16000).astype(">i2")
+
+    def ext80(rate):
+        exp = 16383
+        mant = rate << 63
+        while mant >= 1 << 64:
+            mant >>= 1
+            exp += 1
+        return struct.pack(">HQ", exp, mant)
+
+    comm = struct.pack(">hIh", 1, len(pcm), 16) + ext80(16000)
+    ssnd = struct.pack(">II", 0, 0) + pcm.tobytes()
+    body = (b"AIFF" + b"COMM" + struct.pack(">I", len(comm)) + comm
+            + b"SSND" + struct.pack(">I", len(ssnd)) + ssnd)
+    aiff = b"FORM" + struct.pack(">I", len(body)) + body
+    au = struct.pack(">4sIIIII", b".snd", 24, len(pcm) * 2, 3, 16000, 1)
+    au += pcm.tobytes()
+    media = spark.createDataFrame(
+        [(1, bytearray(aiff)), (2, bytearray(au))],
+        "media_id long, payload binary",
+    )
+    rows = {r.media_id: r for r in audio_features(media).collect()}
+    assert rows[1].sample_rate == 16000 and rows[2].sample_rate == 16000
+    assert rows[1].n_samples == 1600 and rows[2].n_samples == 1600
+    # identical PCM -> identical features through both containers
+    np.testing.assert_allclose(rows[1].rms, rows[2].rms, rtol=1e-6)
+    np.testing.assert_allclose(rows[1].band_rms, rows[2].band_rms, rtol=1e-6)
+
+
+# --- FLAC decoder goldens ---------------------------------------------------
+#
+# No independent FLAC codec exists in this container (no flac/ffmpeg/
+# soundfile; JVM javax.sound ships no FLAC SPI) — unlike JPEG (ImageIO)
+# and µ-law (audioop). The fixtures are therefore SPEC-CONSTRUCTED: the
+# minimal test encoder below writes streams per RFC 9639 using bitwise
+# (table-free) CRC implementations — independent of the decoder's
+# table-driven CRCs and numpy reconstruction — and one committed
+# byte-pinned fixture locks the wire format so drift on either side
+# fails loudly.
+
+
+class _FlacW:
+    """MSB-first bit writer (test encoder)."""
+
+    def __init__(self):
+        self.buf = bytearray()
+        self.acc = 0
+        self.n = 0
+
+    def u(self, v, n):
+        assert 0 <= v < (1 << n) or n == 0 and v == 0
+        self.acc = (self.acc << n) | v
+        self.n += n
+        while self.n >= 8:
+            self.n -= 8
+            self.buf.append((self.acc >> self.n) & 0xFF)
+        self.acc &= (1 << self.n) - 1
+
+    def s(self, v, n):
+        self.u(v & ((1 << n) - 1), n)
+
+    def align(self):
+        if self.n:
+            self.u(0, 8 - self.n)
+
+    def data(self):
+        assert self.n == 0
+        return bytes(self.buf)
+
+
+def _crc8_bitwise(data):
+    c = 0
+    for b in data:
+        for i in range(7, -1, -1):
+            fb = ((c >> 7) & 1) ^ ((b >> i) & 1)
+            c = (c << 1) & 0xFF
+            if fb:
+                c ^= 0x07
+    return c
+
+
+def _crc16_bitwise(data):
+    c = 0
+    for b in data:
+        for i in range(7, -1, -1):
+            fb = ((c >> 15) & 1) ^ ((b >> i) & 1)
+            c = (c << 1) & 0xFFFF
+            if fb:
+                c ^= 0x8005
+    return c
+
+
+def _flac_w_utf8(w, v):
+    if v < 0x80:
+        w.u(v, 8)
+        return
+    caps = {2: 11, 3: 16, 4: 21, 5: 26, 6: 31, 7: 36}
+    nb = next(k for k in range(2, 8) if v < (1 << caps[k]))
+    head_bits = caps[nb] - 6 * (nb - 1)
+    w.u((1 << nb) - 1, nb)
+    w.u(0, 1)
+    w.u((v >> (6 * (nb - 1))) & ((1 << head_bits) - 1), head_bits)
+    for i in range(nb - 2, -1, -1):
+        w.u(0b10, 2)
+        w.u((v >> (6 * i)) & 0x3F, 6)
+
+
+def _flac_w_residual(w, res, order, po=0, param=10, method=0, escape_bits=None):
+    pbits = 4 if method == 0 else 5
+    w.u(method, 2)
+    w.u(po, 4)
+    nparts = 1 << po
+    bs = len(res) + order
+    assert bs % nparts == 0
+    idx = 0
+    for p in range(nparts):
+        cnt = bs // nparts - (order if p == 0 else 0)
+        if escape_bits is not None and p in escape_bits:
+            nb = escape_bits[p]
+            w.u((1 << pbits) - 1, pbits)
+            w.u(nb, 5)
+            for _ in range(cnt):
+                w.s(int(res[idx]), nb)
+                idx += 1
+        else:
+            w.u(param, pbits)
+            for _ in range(cnt):
+                v = int(res[idx])
+                idx += 1
+                z = 2 * v if v >= 0 else -2 * v - 1
+                w.u(0, z >> param)
+                w.u(1, 1)
+                w.u(z & ((1 << param) - 1), param)
+
+
+_FLAC_FIXED_COEF = {1: (1,), 2: (2, -1), 3: (3, -3, 1), 4: (4, -6, 4, -1)}
+
+
+def _flac_w_subframe(w, x, bps, kind="verbatim", order=0, po=0, param=10,
+                     method=0, escape_bits=None, coefs=None, shift=0,
+                     prec=12, wasted=0):
+    w.u(0, 1)
+    tcode = {"constant": 0, "verbatim": 1}.get(kind)
+    if kind == "fixed":
+        tcode = 8 + order
+    elif kind == "lpc":
+        tcode = 31 + order
+    w.u(tcode, 6)
+    if wasted:
+        assert all(v % (1 << wasted) == 0 for v in x)
+        x = [v >> wasted for v in x]
+        bps -= wasted
+        w.u(1, 1)
+        w.u(0, wasted - 1)
+        w.u(1, 1)
+    else:
+        w.u(0, 1)
+        x = [int(v) for v in x]
+    if kind == "constant":
+        assert len(set(x)) == 1
+        w.s(x[0], bps)
+    elif kind == "verbatim":
+        for v in x:
+            w.s(v, bps)
+    elif kind == "fixed":
+        for v in x[:order]:
+            w.s(v, bps)
+        coef = _FLAC_FIXED_COEF.get(order, ())
+        res = [
+            x[i] - sum(c * x[i - 1 - j] for j, c in enumerate(coef))
+            for i in range(order, len(x))
+        ]
+        _flac_w_residual(w, res, order, po, param, method, escape_bits)
+    elif kind == "lpc":
+        for v in x[:order]:
+            w.s(v, bps)
+        w.u(prec - 1, 4)
+        w.s(shift, 5)
+        for c in coefs:
+            w.s(c, prec)
+        res = [
+            x[i] - (sum(coefs[j] * x[i - 1 - j] for j in range(order)) >> shift)
+            for i in range(order, len(x))
+        ]
+        _flac_w_residual(w, res, order, po, param, method, escape_bits)
+
+
+def _flac_w_frame(chans, frame_no, bps, ch_mode="indep", sub=None):
+    w = _FlacW()
+    bs = len(chans[0])
+    w.u(0x3FFE, 14)
+    w.u(0, 1)
+    w.u(0, 1)  # fixed-blocksize strategy
+    pow2 = (bs & (bs - 1)) == 0
+    if bs == 192:
+        bs_code, bs_extra, bs_ebits = 1, None, 0
+    elif bs in (576, 1152, 2304, 4608):
+        bs_code = 2 + (576, 1152, 2304, 4608).index(bs)
+        bs_extra, bs_ebits = None, 0
+    elif pow2 and 256 <= bs <= 32768:
+        bs_code, bs_extra, bs_ebits = 8 + (bs // 256).bit_length() - 1, None, 0
+    elif bs <= 256:
+        bs_code, bs_extra, bs_ebits = 6, bs - 1, 8
+    else:
+        bs_code, bs_extra, bs_ebits = 7, bs - 1, 16
+    w.u(bs_code, 4)
+    w.u(0, 4)  # sample rate: from STREAMINFO
+    ch_codes = {"ls": 8, "rs": 9, "ms": 10}
+    w.u(ch_codes.get(ch_mode, len(chans) - 1), 4)
+    w.u({8: 1, 12: 2, 16: 4, 20: 5, 24: 6, 32: 7}[bps], 3)
+    w.u(0, 1)
+    _flac_w_utf8(w, frame_no)
+    if bs_extra is not None:
+        w.u(bs_extra, bs_ebits)
+    w.u(_crc8_bitwise(w.data()), 8)
+    side_idx = {"ls": 1, "rs": 0, "ms": 1}.get(ch_mode)
+    for c, x in enumerate(chans):
+        spec = dict(sub[c]) if sub else {"kind": "verbatim"}
+        _flac_w_subframe(w, x, bps + (1 if c == side_idx else 0), **spec)
+    w.align()
+    w.u(_crc16_bitwise(w.data()), 16)
+    return w.data()
+
+
+def _encode_flac(pcm, sr, bps=16, blocksize=256, ch_mode="indep", sub=None):
+    """pcm: int array (n,) or (n, ch). ch_mode indep|ls|rs|ms (stereo)."""
+    pcm = np.asarray(pcm)
+    if pcm.ndim == 1:
+        pcm = pcm[:, None]
+    n, nch = pcm.shape
+    w = _FlacW()
+    w.u(min(blocksize, n), 16)
+    w.u(blocksize, 16)
+    w.u(0, 24)
+    w.u(0, 24)
+    w.u(sr, 20)
+    w.u(nch - 1, 3)
+    w.u(bps - 1, 5)
+    w.u(n, 36)
+    streaminfo = w.data() + b"\x00" * 16
+    out = bytearray(b"fLaC")
+    out.append(0x80)  # last-block flag | type 0 = STREAMINFO
+    out += len(streaminfo).to_bytes(3, "big") + streaminfo
+    for fno, start in enumerate(range(0, n, blocksize)):
+        blk = pcm[start:start + blocksize]
+        if ch_mode == "indep":
+            chans = [blk[:, c].tolist() for c in range(nch)]
+        else:
+            L, R = blk[:, 0].astype(np.int64), blk[:, 1].astype(np.int64)
+            if ch_mode == "ls":
+                chans = [L.tolist(), (L - R).tolist()]
+            elif ch_mode == "rs":
+                chans = [(L - R).tolist(), R.tolist()]
+            else:
+                chans = [((L + R) >> 1).tolist(), (L - R).tolist()]
+        out += _flac_w_frame(chans, fno, bps, ch_mode, sub)
+    return bytes(out)
+
+
+def test_flac_decode_fixed_multiframe():
+    from fastcdc_rs_spark.operators.multimodal import _decode_audio, _decode_flac
+
+    rng = np.random.default_rng(7)
+    pcm = np.cumsum(rng.integers(-90, 90, 600)).astype(np.int64)
+    # 3 frames: 256, 256, then a partial 88-sample tail frame
+    payload = _encode_flac(
+        pcm, 22050, blocksize=256,
+        sub=[{"kind": "fixed", "order": 2, "po": 1, "param": 9}],
+    )
+    x, sr = _decode_flac(payload)
+    assert sr == 22050 and x.dtype == np.float32
+    np.testing.assert_allclose(x, pcm.astype(np.float32) / 32768.0, atol=1e-7)
+    x2, sr2 = _decode_audio(payload)
+    np.testing.assert_array_equal(x, x2)
+    # natural block-size codes (192 / power-of-two) take the table path
+    p192 = _encode_flac(pcm[:384], 8000, blocksize=192,
+                        sub=[{"kind": "fixed", "order": 1, "param": 8}])
+    x3, sr3 = _decode_flac(p192)
+    assert sr3 == 8000
+    np.testing.assert_allclose(x3, pcm[:384] / 32768.0, atol=1e-7)
+
+
+def test_flac_subframe_types_and_stereo_modes():
+    from fastcdc_rs_spark.operators.multimodal import _decode_flac
+
+    rng = np.random.default_rng(11)
+    n = 192
+    # constant / verbatim / LPC / wasted-bits, all in one stereo signal
+    L = np.cumsum(rng.integers(-60, 60, n)).astype(np.int64)
+    R = (L // 2 + rng.integers(-20, 20, n)).astype(np.int64)
+    pcm = np.stack([L, R], 1)
+    want = ((L + R) / 2.0 / 32768.0).astype(np.float32)
+    outs = {}
+    lpc = {"kind": "lpc", "order": 2, "coefs": [50, -20], "shift": 5,
+           "prec": 12, "param": 11}
+    for mode in ("indep", "ls", "rs", "ms"):
+        payload = _encode_flac(pcm, 44100, blocksize=192, ch_mode=mode,
+                               sub=[lpc, {"kind": "verbatim"}])
+        x, sr = _decode_flac(payload)
+        assert sr == 44100
+        outs[mode] = x
+        np.testing.assert_allclose(x, want, atol=1e-7)
+    for mode in ("ls", "rs", "ms"):  # bit-identical reconstruction
+        np.testing.assert_array_equal(outs["indep"], outs[mode])
+    # constant subframe + wasted bits (samples share a factor of 4)
+    const = np.full(n, -1234 * 4, np.int64)
+    payload = _encode_flac(const, 16000, blocksize=192,
+                           sub=[{"kind": "constant", "wasted": 2}])
+    x, _ = _decode_flac(payload)
+    np.testing.assert_allclose(x, const / 32768.0, atol=1e-7)
+    # wasted bits over a FIXED subframe too
+    fx = (np.cumsum(rng.integers(-30, 30, n)) * 8).astype(np.int64)
+    payload = _encode_flac(fx, 16000, blocksize=192,
+                           sub=[{"kind": "fixed", "order": 1, "param": 7,
+                                 "wasted": 3}])
+    x, _ = _decode_flac(payload)
+    np.testing.assert_allclose(x, fx / 32768.0, atol=1e-7)
+
+
+def test_flac_rice2_escapes_and_multibyte_frameno():
+    from fastcdc_rs_spark.operators.multimodal import _decode_flac
+
+    rng = np.random.default_rng(13)
+    # > 128 frames of 16 samples: frame numbers cross into 2-byte UTF-8
+    pcm = np.cumsum(rng.integers(-40, 40, 16 * 140)).astype(np.int64)
+    payload = _encode_flac(
+        pcm, 12345, blocksize=16,  # odd rate rides the 16-bit-Hz... no:
+        # rate comes from STREAMINFO here; the point is the frame count
+        sub=[{"kind": "fixed", "order": 1, "param": 7, "method": 1}],
+    )
+    x, sr = _decode_flac(payload)
+    assert sr == 12345
+    np.testing.assert_allclose(x, pcm / 32768.0, atol=1e-7)
+    # escaped partitions: partition 1 raw 7-bit, partition 3 all-zero run
+    res_src = np.zeros(64, np.int64)
+    res_src[:16] = rng.integers(-50, 50, 16)
+    res_src[16:32] = rng.integers(-60, 60, 16)   # escaped raw 7-bit
+    res_src[32:48] = rng.integers(-50, 50, 16)
+    pcm2 = np.cumsum(res_src)                    # order-1 fixed: residual = diff
+    payload = _encode_flac(
+        pcm2, 8000, blocksize=64,
+        sub=[{"kind": "fixed", "order": 1, "param": 7, "po": 2,
+              "escape_bits": {1: 7, 3: 0}}],
+    )
+    x2, _ = _decode_flac(payload)
+    np.testing.assert_allclose(x2, pcm2 / 32768.0, atol=1e-7)
+
+
+def test_flac_pinned_fixture():
+    """Byte-pinned committed fixture: locks the encoder AND decoder to the
+    wire format (any spec drift on either side changes these bytes or
+    their decode)."""
+    from fastcdc_rs_spark.operators.multimodal import _decode_flac
+
+    payload = _encode_flac(np.array([100, 200, 300, 400], np.int64), 8000,
+                           blocksize=4, sub=[{"kind": "verbatim"}])
+    assert payload.hex() == (
+        "664c6143800000220004000400000000000001f400f00000000400000000"
+        "000000000000000000000000fff860080003b202006400c8012c0190cc90"
+    )
+    x, sr = _decode_flac(payload)
+    assert sr == 8000
+    np.testing.assert_allclose(
+        x * 32768.0, [100.0, 200.0, 300.0, 400.0], atol=1e-4)
+
+
+def test_flac_error_paths():
+    from fastcdc_rs_spark.operators.multimodal import _decode_flac
+
+    good = _encode_flac(np.arange(64, dtype=np.int64) * 3, 8000,
+                        blocksize=64, sub=[{"kind": "verbatim"}])
+    with pytest.raises(ValueError):
+        _decode_flac(b"fLaX" + good[4:])
+    with pytest.raises(ValueError):
+        _decode_flac(good[:20])            # truncated metadata
+    bad = bytearray(good)
+    bad[-3] ^= 0x40                        # flip a bit inside the last frame
+    with pytest.raises(ValueError):        # CRC-16 must catch it
+        _decode_flac(bytes(bad))
+    hdr = bytearray(good)
+    # STREAMINFO starts at byte 8; corrupt a frame-header byte instead:
+    # frame starts at 8 + 34; flip the block-size code field
+    hdr[8 + 34 + 2] ^= 0x10
+    with pytest.raises(ValueError):        # CRC-8 must catch it
+        _decode_flac(bytes(hdr))
+
+
+def test_audio_features_flac_through_operator(spark):
+    from fastcdc_rs_spark.operators.multimodal import audio_features
+
+    pcm = (np.sin(np.arange(1600) * 0.05) * 16000).astype(np.int64)
+    payload = _encode_flac(pcm, 16000, blocksize=256,
+                           sub=[{"kind": "fixed", "order": 2, "param": 10}])
+    media = spark.createDataFrame(
+        [(1, bytearray(payload))], "media_id long, payload binary"
+    )
+    r = audio_features(media).first()
+    assert r.sample_rate == 16000 and r.n_samples == 1600
+    want_rms = float(np.sqrt(np.mean((pcm / 32768.0) ** 2)))
+    np.testing.assert_allclose(r.rms, want_rms, rtol=1e-5)
+
+
+# --- TIFF decoder goldens ---------------------------------------------------
+#
+# Like FLAC: no independent TIFF codec in this container (no PIL), so
+# the fixtures are spec-constructed by the minimal encoder below. Its
+# LZW compressor is a real string-table LZW with the TIFF6 early-change
+# width rule, written against the spec independently of the decoder's
+# table-driven reader.
+
+
+def _tiff_lzw_encode(data):
+    w = _FlacW()   # MSB-first bit writer, same packing as TIFF LZW
+    table = {bytes([i]): i for i in range(256)}
+    next_code = 258
+    width = 9
+    dec_size = 258     # the DECODER's table size after each emission
+    first = True
+    w.u(256, width)    # CLEAR
+
+    def emitted():
+        nonlocal first, dec_size, width
+        if first:
+            first = False
+        else:
+            dec_size += 1
+            if dec_size == (1 << width) - 1 and width < 12:
+                width += 1
+
+    s = b""
+    for b in data:
+        s2 = s + bytes([b])
+        if s2 in table:
+            s = s2
+            continue
+        w.u(table[s], width)
+        emitted()
+        assert next_code < 4094, "test corpus too incompressible for one strip"
+        table[s2] = next_code
+        next_code += 1
+        s = bytes([b])
+    if s:
+        w.u(table[s], width)
+        emitted()
+    w.u(257, width)    # EOI
+    w.align()
+    return w.data()
+
+
+def _packbits_encode(data):
+    out = bytearray()
+    i, n = 0, len(data)
+    while i < n:
+        run = 1
+        while i + run < n and run < 127 and data[i + run] == data[i]:
+            run += 1
+        if run >= 2:
+            out += bytes([257 - run, data[i]])
+            i += run
+        else:
+            lit = i
+            while (
+                i < n and i - lit < 127
+                and not (i + 1 < n and data[i + 1] == data[i])
+            ):
+                i += 1
+            out += bytes([i - lit - 1]) + data[lit:i]
+    return bytes(out)
+
+
+def _encode_tiff(px, bo="<", comp=1, photo=None, rps=None, pred=1,
+                 palette=None, alpha=False):
+    """px: (h,w) gray/palette-index or (h,w,3) RGB uint8."""
+    import struct
+
+    px = np.asarray(px, np.uint8)
+    if px.ndim == 2:
+        px = px[:, :, None]
+    if alpha:
+        px = np.concatenate(
+            [px, np.full(px.shape[:2] + (1,), 0xEE, np.uint8)], axis=2)
+    h, w, spp = px.shape
+    if photo is None:
+        photo = 2 if spp >= 3 else 1
+    rps = rps or h
+    strips = []
+    for r0 in range(0, h, rps):
+        blk = px[r0:r0 + rps]
+        if pred == 2:
+            d = blk.astype(np.int16)
+            d[:, 1:] -= blk[:, :-1].astype(np.int16)
+            blk = (d % 256).astype(np.uint8)
+        raw = blk.tobytes()
+        if comp == 1:
+            strips.append(raw)
+        elif comp == 5:
+            strips.append(_tiff_lzw_encode(raw))
+        elif comp == 32773:
+            strips.append(_packbits_encode(raw))
+        else:
+            raise AssertionError(comp)
+    entries = [
+        (256, 3, [w]), (257, 3, [h]), (258, 3, [8] * spp),
+        (259, 3, [comp]), (262, 3, [photo]),
+        (277, 3, [spp]), (278, 3, [rps]),
+        (279, 4, [len(s) for s in strips]), (284, 3, [1]),
+    ]
+    if pred != 1:
+        entries.append((317, 3, [pred]))
+    if palette is not None:   # (256, 3) uint8 -> TIFF 16-bit channel-major
+        cm = palette.astype(np.uint16) * 257
+        entries.append((320, 3, cm.T.reshape(-1).tolist()))
+    entries.append((273, 4, [0] * len(strips)))   # fixed up below
+    entries.sort()
+    unit = {3: 2, 4: 4}
+    fmt = {3: "H", 4: "I"}
+    ifd_off = 8
+    ifd_size = 2 + 12 * len(entries) + 4
+    extra_off = ifd_off + ifd_size
+    extra_size = sum(
+        unit[t] * len(v) for _, t, v in entries if unit[t] * len(v) > 4)
+    data_off = extra_off + extra_size
+    offsets = []
+    pos = data_off
+    for s in strips:
+        offsets.append(pos)
+        pos += len(s)
+    entries = [
+        (tag, t, offsets if tag == 273 else v) for tag, t, v in entries]
+    out = struct.pack(
+        bo + "2sHI", b"II" if bo == "<" else b"MM", 42, ifd_off)
+    ifd = struct.pack(bo + "H", len(entries))
+    extra = b""
+    for tag, t, v in entries:
+        sz = unit[t] * len(v)
+        if sz <= 4:
+            packed = struct.pack(bo + str(len(v)) + fmt[t], *v)
+            packed += b"\x00" * (4 - len(packed))
+            ifd += struct.pack(bo + "HHI", tag, t, len(v)) + packed
+        else:
+            ifd += struct.pack(
+                bo + "HHII", tag, t, len(v), extra_off + len(extra))
+            extra += struct.pack(bo + str(len(v)) + fmt[t], *v)
+    ifd += struct.pack(bo + "I", 0)   # no next IFD
+    return out + ifd + extra + b"".join(strips)
+
+
+def test_tiff_decode_variants():
+    from fastcdc_rs_spark.operators.multimodal import _decode_image, _decode_tiff
+
+    rng = np.random.default_rng(17)
+    px = rng.integers(0, 256, (13, 17, 3)).astype(np.uint8)
+    np.testing.assert_array_equal(_decode_tiff(_encode_tiff(px)), px)
+    # big-endian, multi-strip
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(px, bo=">", rps=4)), px)
+    # PackBits over runs + literals
+    runs = np.repeat(rng.integers(0, 256, (9, 5, 3)), 3, axis=1).astype(np.uint8)
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(runs, comp=32773, rps=2)), runs)
+    # gray BlackIsZero and WhiteIsZero
+    g = rng.integers(0, 256, (7, 11)).astype(np.uint8)
+    want = np.stack([g, g, g], -1)
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(g, photo=1)), want)
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(255 - g, photo=0)), want)
+    # palette
+    pal = rng.integers(0, 256, (256, 3)).astype(np.uint8)
+    idx = rng.integers(0, 256, (6, 9)).astype(np.uint8)
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(idx, photo=3, palette=pal)), pal[idx])
+    # RGBA: extra sample dropped
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(px, alpha=True)), px)
+    # dispatch through _decode_image
+    np.testing.assert_array_equal(_decode_image(_encode_tiff(px)), px)
+
+
+def test_tiff_lzw_and_predictor():
+    from fastcdc_rs_spark.operators.multimodal import _decode_tiff
+
+    rng = np.random.default_rng(19)
+    # big single strip of high-entropy data: the LZW table crosses 510
+    # and 1022, exercising the 9->10->11-bit early-change transitions
+    big = rng.integers(0, 256, (32, 32, 3)).astype(np.uint8)
+    np.testing.assert_array_equal(_decode_tiff(_encode_tiff(big, comp=5)), big)
+    # smooth gradient + horizontal predictor (the compressible case),
+    # multi-strip so each strip resets the code table
+    gx = np.linspace(0, 255, 64, dtype=np.uint8)
+    smooth = np.stack(np.broadcast_arrays(
+        gx[None, :], gx[:, None] // 2, (gx[None, :] // 3 + 7)), axis=-1
+    ).astype(np.uint8)
+    smooth = smooth + rng.integers(0, 3, smooth.shape).astype(np.uint8)
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(smooth, comp=5, pred=2, rps=16)), smooth)
+    np.testing.assert_array_equal(
+        _decode_tiff(_encode_tiff(smooth, comp=5, pred=2)), smooth)
+
+
+def test_tiff_error_paths():
+    from fastcdc_rs_spark.operators.multimodal import _decode_tiff
+
+    px = np.zeros((4, 4, 3), np.uint8)
+    good = _encode_tiff(px)
+    with pytest.raises(ValueError):
+        _decode_tiff(b"II+\x00" + good[4:])
+    with pytest.raises(ValueError):
+        _decode_tiff(good[:16])            # IFD cut off
+    with pytest.raises(ValueError):
+        _decode_tiff(good[:-5])            # strip data cut off
+    import struct
+    bad = bytearray(good)
+    # compression tag value -> unsupported code (tag order: 256,257,258,
+    # 259 is the 4th entry; value word at entry_off + 8)
+    off = 8 + 2 + 3 * 12 + 8
+    struct.pack_into("<H", bad, off, 6)    # old-JPEG-in-TIFF
+    with pytest.raises(ValueError):
+        _decode_tiff(bytes(bad))
+
+
+def test_tiff_through_image_operator(spark):
+    from fastcdc_rs_spark.operators.multimodal import image_features
+
+    rng = np.random.default_rng(23)
+    px = rng.integers(0, 256, (12, 16, 3)).astype(np.uint8)
+    media = spark.createDataFrame(
+        [(1, bytearray(_encode_tiff(px, comp=5, pred=2)))],
+        "media_id long, payload binary",
+    )
+    r = image_features(media).first()
+    assert (r.height, r.width) == (12, 16)
