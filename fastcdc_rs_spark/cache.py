@@ -1,20 +1,25 @@
-"""Cache-ownership helpers.
+"""Cache ownership: one registry of persisted frames.
 
-Operators that ``persist()`` an intermediate frame attach it to their
-result via ``_graft_caches``; whoever materializes the result calls
-``release_caches`` so a long-lived session (bench runs 15+ queries
-back-to-back) never accumulates dead cached blocks.
+Every operator that ``persist()``s an intermediate registers it with
+``register_cache``. A run wraps its operators in ``scope()``, which
+unpersists every frame registered inside the block when it exits,
+normally or by an exception, except the ones the block ``keep``s for its
+caller. ``release_all`` drains what is left, so a long-lived session
+(bench runs 15+ queries back-to-back) never accumulates dead cached
+blocks, and a later identical plan never hits an earlier run's cache.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Callable, Iterator
+
 from pyspark.sql import DataFrame
 
-__all__ = ["attach_caches", "release_caches", "register_cache", "release_all"]
+__all__ = ["register_cache", "release_all", "release_caches", "scope"]
 
-# Session-level registry: operators whose results get wrapped by callers
-# (orderBy etc. drops instance attributes) register persisted frames here;
-# a harness (bench, a job) drains it between queries.
+# registered frames not yet released, in registration order: a scope
+# owns the tail registered after it opened
 _REGISTRY: list[DataFrame] = []
 
 
@@ -23,27 +28,47 @@ def register_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session already stopped
+
+
 def release_all() -> None:
     """Unpersist every registered frame (idempotent; drains the registry)."""
     while _REGISTRY:
-        df = _REGISTRY.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-
-
-def attach_caches(df: DataFrame, caches: list[DataFrame]) -> DataFrame:
-    df._graft_caches = list(caches)
-    return df
+        _unpersist(_REGISTRY.pop())
 
 
 def release_caches(*dfs: DataFrame) -> None:
-    """Unpersist every cache attached to (or being) the given frames."""
+    """Unpersist the given frames."""
     for df in dfs:
-        for c in getattr(df, "_graft_caches", []):
-            c.unpersist()
-        if getattr(df, "_graft_caches", None) is not None:
-            df._graft_caches = []
         if df.storageLevel.useMemory or df.storageLevel.useDisk:
             df.unpersist()
+
+
+@contextmanager
+def scope() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Release every frame registered inside the block when it exits.
+
+    Yields ``keep``: ``keep(df)`` registers ``df`` and, if the block
+    succeeds, leaves it registered (owned by the enclosing scope, if
+    any); if the block raises, it is released with the rest."""
+    start = len(_REGISTRY)
+    kept: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        kept.append(df)
+        return register_cache(df)
+
+    try:
+        yield keep
+    except BaseException:
+        kept.clear()
+        raise
+    finally:
+        for df in _REGISTRY[start:]:
+            if not any(df is k for k in kept):
+                _unpersist(df)
+        _REGISTRY[start:] = kept

@@ -28,6 +28,8 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..cache import register_cache
+
 __all__ = ["connected_components"]
 
 
@@ -93,32 +95,36 @@ def connected_components(
     if ephemeral:
         edges = edges.persist()
     try:
-        if driver_max_edges:
-            t0 = time.perf_counter()
-            if bounded or edges.count() <= driver_max_edges:
-                # Arrow pull: 2M (a, b) longs is ~32 MB, sub-second from cache
-                probe = edges.select("a", "b").toPandas()
-                probe_s = time.perf_counter() - t0
-                return _cc_driver(spark, probe, vertices, id_col, probe_s)
-        # AQE re-plans every round of an iterative loop from scratch; on the
-        # small per-round shuffles here that costs ~10x more than the work
-        # itself (measured: 60s -> 4.6s at 2k docs). Disable it for the loop
-        # and restore after — the surrounding big scans/joins keep AQE.
-        aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return _cc_loop(edges, vertices, max_iter, id_col)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-            spark.conf.set("spark.sql.shuffle.partitions", parts_before)
+        t0 = time.perf_counter()
+        if driver_max_edges and (bounded or edges.count() <= driver_max_edges):
+            # Arrow pull: 2M (a, b) longs is ~32 MB, sub-second from cache
+            probe = edges.select("a", "b").toPandas()
+            comp, stats = _cc_driver(spark, probe, vertices, id_col,
+                                     time.perf_counter() - t0)
+        else:
+            # AQE re-plans every round of an iterative loop from scratch;
+            # on the small per-round shuffles here that costs ~10x more
+            # than the work itself (measured: 60s -> 4.6s at 2k docs).
+            # Disable it for the loop and restore after — the surrounding
+            # big scans/joins keep AQE.
+            aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+            parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                comp, stats = _cc_loop(edges, vertices, max_iter, id_col)
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+                spark.conf.set("spark.sql.shuffle.partitions", parts_before)
     finally:
         if ephemeral:
             edges.unpersist()
+    # read by near_dup_clusters' summary and perfbench's components.rounds
+    comp._graft_cc_stats = stats
+    return comp
 
 
 def _cc_driver(spark, edge_pdf, vertices: DataFrame | None,
-               id_col: str, probe_s: float = 0.0) -> DataFrame:
+               id_col: str, probe_s: float = 0.0) -> tuple[DataFrame, dict]:
     """Vectorized min-label union-find over a collected (bounded) edge
     frame; identical semantics to the loop: cluster id = min doc_id of
     the component, singletons label themselves via the vertices left
@@ -178,8 +184,7 @@ def _cc_driver(spark, edge_pdf, vertices: DataFrame | None,
                 F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
             )
         )
-    comp._graft_cc_stats = stats
-    return comp
+    return comp, stats
 
 
 def _truncate(df: DataFrame) -> DataFrame:
@@ -199,7 +204,7 @@ def _cc_loop(
     vertices: DataFrame | None,
     max_iter: int,
     id_col: str,
-) -> DataFrame:
+) -> tuple[DataFrame, dict]:
     from pyspark.sql import Observation
 
     # Symmetrize with one explode instead of a two-branch union: a union
@@ -208,7 +213,8 @@ def _cc_loop(
     # (the endpoint-labels checkpoint below, which materializes this
     # cache) as an Observation node — no separate pre-loop count action.
     obs_edges = Observation("cc_sym_edges")
-    sym = (
+    # registered, so an enclosing cache.scope() releases it if a round fails
+    sym = register_cache(
         edges.select(
             F.explode(
                 F.array(
@@ -306,5 +312,4 @@ def _cc_loop(
             .join(comp, id_col, "left")
             .select(id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
         )
-    comp._graft_cc_stats = stats  # consumed by pipeline metrics (B14)
-    return comp
+    return comp, stats

@@ -212,7 +212,7 @@ def substring_pairs(docs: DataFrame, min_len: int = 40, df_cap: int | None = Non
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
-                        df_cap: int | None = None, cache_grams: bool = False,
+                        df_cap: int | None = None,
                         text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(a, b, jaccard) for doc pairs with token-n-gram Jaccard >= threshold.
 
@@ -226,22 +226,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
     join fan-out is bounded by Σ min(df, cap)² ≤ cap · |grams|, linear
     in corpus size. ``None`` = exact (the oracle twin); at CC scale
     always set a cap.
-
-    ``cache_grams``: the gram table feeds FOUR consumers (both join sides
-    + both size lookups) and Catalyst does not reuse the exchange across
-    the differently-aliased sides — uncached, the explode+hash+distinct
-    plan runs four times (verified in the executed plan: 4 FileScans).
-    Despite that, caching measured SLOWER at every benchable scale
-    (sf0.1: ~2.6 s uncached vs 4.1-9.6 s cached — the blocking
-    materialization plus memory-bandwidth cost of the cache write exceeds
-    4x recompute of a cheap explode+hash). Default off; turn on only for
-    corpora where gram construction is expensive enough to dominate (very
-    large documents, or a cluster whose storage-memory writes are cheap
-    relative to the input scan).
     """
-    from ..cache import register_cache
-
-    caches = []
     arrs = token_ngram_hash_arrays(docs, n, text_col, id_col)
     if df_cap is None:
         # UNCAPPED: the per-doc set size is size(_gh) at map time, and it
@@ -258,9 +243,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
         grams = explode_once(
             sized, "_gh", "ngram_hash", keep=[id_col, "set_size"]
         )
-        if cache_grams:
-            grams = register_cache(grams.persist())
-            caches.append(grams)
         ga = grams.select(
             F.col(id_col).alias("a"), F.col("set_size").alias("size_a"),
             "ngram_hash",
@@ -288,9 +270,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
         # gram subplan itself is map-only per evaluation (the old
         # .distinct() exchange per evaluation is gone).
         grams = explode_once(arrs, "_gh", "ngram_hash", keep=[id_col])
-        if cache_grams:
-            grams = register_cache(grams.persist())
-            caches.append(grams)
         # df filter: one extra aggregation on the same key the self-join
         # shuffles on, so the exchange is aligned (no additional shuffle
         # of the grams side beyond the aggregate itself).
@@ -301,9 +280,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
             .select("ngram_hash")
         )
         grams = grams.join(kept, "ngram_hash")
-        if cache_grams:
-            grams = register_cache(grams.persist())
-            caches.append(grams)
         sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
         ga = grams.select(F.col(id_col).alias("a"), "ngram_hash")
         gb = grams.select(F.col(id_col).alias("b"), "ngram_hash")
@@ -320,7 +296,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
             .agg(F.count(F.lit(1)).alias("n_common"))
             .join(sa, "a").join(sb, "b")
         )
-    out = (
+    return (
         inter.withColumn(
             "jaccard",
             F.round(
@@ -332,8 +308,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.5,
         .where(F.col("jaccard") >= min_jaccard)
         .select("a", "b", "jaccard")
     )
-    out._graft_caches = caches
-    return out
 
 
 def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 13,

@@ -232,8 +232,6 @@ def cosine_near_duplicates_banded(
         cand, _metrics = candidate_pairs(
             bands_df, bucket_cap=bucket_cap, id_col=id_col
         )
-        for c in getattr(cand, "_graft_caches", []):
-            register_cache(c)  # bench/jobs drain via release_all
         cand = cand.select("a", "b")
     else:
         # materialize before the self-join: otherwise BOTH join sides

@@ -31,6 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
 
+from ..cache import register_cache
 from ..functions.plan_safe import explode_once
 
 __all__ = ["candidate_pairs"]
@@ -56,7 +57,7 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # members) use collect_list below, so no single row can exceed
     # cap * 16 bytes regardless of data skew.
     w = Window.partitionBy("band_id", "band_hash")
-    annotated = (
+    annotated = register_cache(
         bands_df
         .withColumn("bucket_size", F.count(F.lit(1)).over(w))
         .withColumn("_bmin", F.min(id_col).over(w))
@@ -81,10 +82,6 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # collected list of bucket sizes). No extra Spark job.
     obs = Observation("buckets")
     annotated.observe(obs, *_bucket_stats(id_col, bucket_cap)).count()
-    # cache ownership: `annotated` feeds both pair branches; callers
-    # that materialize the pairs (the pipeline, jobs) release it via the
-    # _graft_caches attribute — a long-lived session running many
-    # queries back-to-back must not accumulate cached band tables.
 
     pair_expr = F.filter(
         F.flatten(
@@ -120,7 +117,6 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # aggregation shrinks the pre-shuffle pair stream where the
     # repartition form ships every duplicate. Keep the aggregate form.)
     pairs = small_pairs.unionByName(star_pairs).dropDuplicates(["a", "b"])
-    pairs._graft_caches = [annotated]  # released by release_caches()
     return pairs, _metrics_frame(bands_df.sparkSession, obs.get)
 
 

@@ -42,6 +42,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..cache import register_cache
+
 __all__ = ["verify_pairs"]
 
 
@@ -65,9 +67,9 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
     size exceeds ``spark.sql.autoBroadcastJoinThreshold`` — the same
     statistic the planner reads to broadcast it; under the threshold
     both array joins broadcast and there is no hub shuffle to avoid.
-    When it runs, the result carries its persisted narrow pair table in
-    ``_graft_caches``; materializing callers release it via
-    ``cache.release_caches``.
+    When it runs, its persisted narrow pair table is registered with
+    ``cache.register_cache``; the caller's ``cache.scope()`` (or
+    ``release_all``) releases it once the result is materialized.
 
     The hub pairs' physical shape is a measured three-rung ladder keyed
     on their COUNT (one cache-scan job; the |pairs|/cap bound applies
@@ -133,7 +135,7 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
         # pair-degree of a rides a count window over the narrow pair
         # table (three longs per row — the cheap shuffle). The persisted
         # result feeds the b-side join once and the hub-id scan.
-        pruned = (
+        pruned = register_cache(
             pairs.withColumn(
                 "_deg", F.count(F.lit(1)).over(Window.partitionBy("a"))
             ).persist()
@@ -203,6 +205,7 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, threshold: float = 0.8,
         .where(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
+    # read by perfbench/workloads.py for its verify.hub_pairs metric
     out._graft_caches = caches
     return out
 

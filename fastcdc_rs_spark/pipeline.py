@@ -25,7 +25,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .cache import release_caches
+from .cache import register_cache, scope
 from .kernel import ChunkerConfig
 from .operators.components import connected_components
 from .operators.lsh import candidate_pairs
@@ -121,123 +121,114 @@ def near_dup_clusters(
 
     obs_units = obs_pairs = obs_verified = None
     fused = cfg.shingle_mode == "chunk" and cfg.candidates == "minhash"
-    if fused:
-        # chunk → shingle → MinHash in ONE Arrow pass (round 7): the
-        # unfused shape shipped every doc's chunk-hash array out of the
-        # chunk UDF and straight back into the signature UDF — two
-        # JVM↔Python round-trips with nothing JVM-side between them
-        # (guide §4.1). Bit-exact same kernels, same values; the units
-        # observation rides the fused frame's n_units column.
-        from .operators.minhash import chunk_minhash_signatures
+    # every intermediate persisted below is released when this scope
+    # exits: once CC has materialized its labels, or on any exception
+    with scope() as keep:
+        if fused:
+            # chunk → shingle → MinHash in ONE Arrow pass (round 7): the
+            # unfused shape shipped every doc's chunk-hash array out of the
+            # chunk UDF and straight back into the signature UDF — two
+            # JVM↔Python round-trips with nothing JVM-side between them
+            # (guide §4.1). Bit-exact same kernels, same values; the units
+            # observation rides the fused frame's n_units column.
+            from .operators.minhash import chunk_minhash_signatures
 
-        signed = chunk_minhash_signatures(
-            docs, cfg.chunker(), k=cfg.shingle_k, n_perms=cfg.n_perms,
-            bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed,
-            text_col=text_col, id_col=id_col,
+            signed = chunk_minhash_signatures(
+                docs, cfg.chunker(), k=cfg.shingle_k, n_perms=cfg.n_perms,
+                bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed,
+                text_col=text_col, id_col=id_col,
+            )
+            if collect_metrics:
+                obs_units = Observation("units")
+                signed = signed.observe(
+                    obs_units,
+                    F.count(F.lit(1)).alias("docs"),
+                    F.sum("n_units").alias("units_total"),
+                )
+            signed = signed.drop("n_units")
+        else:
+            units = unit_hashes(docs, cfg, id_col, text_col)
+            if collect_metrics:
+                obs_units = Observation("units")
+                units = units.observe(
+                    obs_units,
+                    F.count(F.lit(1)).alias("docs"),
+                    F.sum(F.size("unit_hashes")).alias("units_total"),
+                )
+            if cfg.candidates != "minhash":
+                # simhash path consumes units again — avoid re-running the
+                # chunk UDF. Filled EAGERLY like every shared cache here: the
+                # minhash and simhash band tables union under ONE candidate
+                # job, so AQE submits both consumers concurrently and a cold
+                # cache would pay the per-block recompute/lock contention tax
+                # (see `signed`).
+                units = register_cache(units.persist())
+                units.count()
+            signed = minhash_signatures(
+                units, k=cfg.shingle_k, n_perms=cfg.n_perms,
+                bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col,
+            )
+        # shingle sets feed both banding and verification → materialize once,
+        # EAGERLY: downstream, AQE submits the band-table shuffle and the two
+        # size-prefilter broadcast futures concurrently, and on a cold cache
+        # those stages contend for the same uncomputed partitions (a task
+        # either recomputes a block or blocks on its cache-write lock —
+        # both burn a core slot). Measured at 800k docs/4 cores as pairs of
+        # identical ~20 s jobs where the work runs once in ~6 s. One count()
+        # fills the cache at full parallelism; every consumer then reads
+        # blocks. At 1 core the contention cannot express (tasks serialize,
+        # later stages find the blocks), so this was a pure scale-efficiency
+        # leak, not a single-core throughput bug.
+        signed = register_cache(signed.persist())
+        signed.count()
+
+        if cfg.candidates in ("minhash", "both"):
+            bands_df = signed.select(
+                id_col, F.posexplode("bands").alias("band_id", "band_hash")
+            )
+        else:
+            bands_df = None
+        if cfg.candidates in ("simhash", "both"):
+            from .operators.simhash import simhash64, simhash_bands
+
+            sim = simhash64(units, seed=cfg.minhash_seed, shingles_col="unit_hashes")
+            sim_bands = simhash_bands(sim, n_bands=cfg.simhash_bands_n, id_col=id_col)
+            # offset band ids so minhash and simhash buckets never collide
+            sim_bands = sim_bands.withColumn("band_id", F.col("band_id") + F.lit(1000))
+            bands_df = sim_bands if bands_df is None else bands_df.unionByName(sim_bands)
+
+        pairs, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
+        # a local one-row frame (no job): its pair_bound caps the verified
+        # edge count, so CC can pick its driver path without a count probe
+        bucket_row = metrics.first().asDict()
+        if collect_metrics:
+            obs_pairs = Observation("pairs")
+            pairs = pairs.observe(
+                obs_pairs, F.count(F.lit(1)).alias("candidate_pairs")
+            )
+        shingled = signed.select(id_col, "shingles")
+        verified = verify_pairs(
+            pairs, shingled, threshold=cfg.threshold, id_col=id_col,
+            hub_degree_cap=cfg.verify_hub_cap,
+            hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
+            hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max,
         )
         if collect_metrics:
-            obs_units = Observation("units")
-            signed = signed.observe(
-                obs_units,
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("n_units").alias("units_total"),
+            obs_verified = Observation("verified")
+            verified = verified.observe(
+                obs_verified, F.count(F.lit(1)).alias("verified_pairs")
             )
-        signed = signed.drop("n_units")
-    else:
-        units = unit_hashes(docs, cfg, id_col, text_col)
-        if collect_metrics:
-            obs_units = Observation("units")
-            units = units.observe(
-                obs_units,
-                F.count(F.lit(1)).alias("docs"),
-                F.sum(F.size("unit_hashes")).alias("units_total"),
-            )
-        if cfg.candidates != "minhash":
-            # simhash path consumes units again — avoid re-running the
-            # chunk UDF. Filled EAGERLY like every shared cache here: the
-            # minhash and simhash band tables union under ONE candidate
-            # job, so AQE submits both consumers concurrently and a cold
-            # cache would pay the per-block recompute/lock contention tax
-            # (see `signed`).
-            units = units.persist()
-            units.count()
-        signed = minhash_signatures(
-            units, k=cfg.shingle_k, n_perms=cfg.n_perms,
-            bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col,
+        # verified persists so post-CC consumers never recompute it from
+        # the released upstream caches; it is the one frame kept for the
+        # caller (small: the edge set). It stays registered, so harnesses
+        # drain it with release_all before a later identical plan could
+        # silently hit it (Spark's cache manager matches analyzed plans).
+        verified = keep(verified.persist())
+
+        clusters = connected_components(
+            verified, vertices=docs.select(id_col), id_col=id_col,
+            edge_bound=bucket_row["pair_bound"],
         )
-    # shingle sets feed both banding and verification → materialize once,
-    # EAGERLY: downstream, AQE submits the band-table shuffle and the two
-    # size-prefilter broadcast futures concurrently, and on a cold cache
-    # those stages contend for the same uncomputed partitions (a task
-    # either recomputes a block or blocks on its cache-write lock —
-    # both burn a core slot). Measured at 800k docs/4 cores as pairs of
-    # identical ~20 s jobs where the work runs once in ~6 s. One count()
-    # fills the cache at full parallelism; every consumer then reads
-    # blocks. At 1 core the contention cannot express (tasks serialize,
-    # later stages find the blocks), so this was a pure scale-efficiency
-    # leak, not a single-core throughput bug.
-    signed = signed.persist()
-    signed.count()
-
-    if cfg.candidates in ("minhash", "both"):
-        bands_df = signed.select(
-            id_col, F.posexplode("bands").alias("band_id", "band_hash")
-        )
-    else:
-        bands_df = None
-    if cfg.candidates in ("simhash", "both"):
-        from .operators.simhash import simhash64, simhash_bands
-
-        sim = simhash64(units, seed=cfg.minhash_seed, shingles_col="unit_hashes")
-        sim_bands = simhash_bands(sim, n_bands=cfg.simhash_bands_n, id_col=id_col)
-        # offset band ids so minhash and simhash buckets never collide
-        sim_bands = sim_bands.withColumn("band_id", F.col("band_id") + F.lit(1000))
-        bands_df = sim_bands if bands_df is None else bands_df.unionByName(sim_bands)
-
-    pairs, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
-    # a local one-row frame (no job): its pair_bound caps the verified
-    # edge count, so CC can pick its driver path without a count probe
-    bucket_row = metrics.first().asDict()
-    if collect_metrics:
-        from pyspark.sql import Observation
-
-        obs_pairs = Observation("pairs")
-        caches = pairs._graft_caches
-        pairs = pairs.observe(
-            obs_pairs, F.count(F.lit(1)).alias("candidate_pairs")
-        )
-        pairs._graft_caches = caches
-    shingled = signed.select(id_col, "shingles")
-    verified = verify_pairs(
-        pairs, shingled, threshold=cfg.threshold, id_col=id_col,
-        hub_degree_cap=cfg.verify_hub_cap,
-        hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
-        hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max,
-    )
-    # capture before observe/persist wrap (instance attrs don't survive)
-    verify_caches = getattr(verified, "_graft_caches", [])
-    if collect_metrics:
-        from pyspark.sql import Observation
-
-        obs_verified = Observation("verified")
-        verified = verified.observe(
-            obs_verified, F.count(F.lit(1)).alias("verified_pairs")
-        )
-    # verified persists so post-CC consumers never recompute it from the
-    # (released) upstream caches; it is the one frame left cached for the
-    # caller (small: the edge set). It is also REGISTERED: harnesses that
-    # run queries back-to-back drain it via release_all between queries —
-    # otherwise a later identical plan would silently hit this run's
-    # cache (Spark's cache manager matches analyzed plans) and report a
-    # fake warm time, and the session would accumulate edge caches.
-    from .cache import register_cache
-
-    verified = register_cache(verified.persist())
-
-    clusters = connected_components(
-        verified, vertices=docs.select(id_col), id_col=id_col,
-        edge_bound=bucket_row["pair_bound"],
-    )
     if collect_metrics:
         import json
 
@@ -261,15 +252,8 @@ def near_dup_clusters(
         # .first() runs no job (a list-of-tuples frame is a LogicalRDD
         # whose every .first() costs two jobs through a Python worker)
         metrics = docs.sparkSession.createDataFrame(pd.DataFrame([summary]))
+        # read by bench.py for its pipeline metrics record
         metrics._graft_summary = summary
-    # connected_components materializes its rounds (localCheckpoint), so
-    # the upstream caches are consumed by now — release them.
-    if fused:
-        release_caches(pairs, signed)
-    else:
-        release_caches(pairs, signed, units)
-    for c in verify_caches:
-        c.unpersist()
     return clusters, verified, metrics
 
 

@@ -25,7 +25,7 @@ import json
 
 import pyspark.sql.functions as F
 
-from fastcdc_rs_spark.cache import release_caches
+from fastcdc_rs_spark.cache import scope
 from fastcdc_rs_spark.operators.components import connected_components
 from fastcdc_rs_spark.operators.lsh import candidate_pairs
 from fastcdc_rs_spark.operators.minhash import minhash_signatures
@@ -58,21 +58,19 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
     bands_df = signed.select(
         id_col, F.posexplode("bands").alias("band_id", "band_hash"),
     )
-    pairs_df, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
-    pairs = run.stage("pairs", lambda: pairs_df)
-    m = metrics.first().asDict()
-    release_caches(pairs_df)      # run.stage materialized the pairs
-    verify_caches: list = []
-
-    def _verified():
-        v = verify_pairs(pairs, signed.select(id_col, "shingles"),
-                         threshold=cfg.threshold, id_col=id_col,
-                         hub_degree_cap=cfg.verify_hub_cap)
-        verify_caches.extend(getattr(v, "_graft_caches", []))
-        return v
-
-    verified = run.stage("verified", _verified)
-    release_caches(*verify_caches)  # run.stage materialized the pairs
+    # each stage's persisted intermediates are released once run.stage
+    # has written (materialized) its output
+    with scope():
+        pairs_df, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
+        pairs = run.stage("pairs", lambda: pairs_df)
+        m = metrics.first().asDict()
+    with scope():
+        verified = run.stage(
+            "verified",
+            lambda: verify_pairs(pairs, signed.select(id_col, "shingles"),
+                                 threshold=cfg.threshold, id_col=id_col,
+                                 hub_degree_cap=cfg.verify_hub_cap),
+        )
     clusters = run.stage(
         "clusters",
         lambda: connected_components(verified, vertices=docs.select(id_col),

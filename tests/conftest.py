@@ -16,3 +16,13 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_registered_caches():
+    """Drain the cache registry after every test: a frame one test leaves
+    cached would serve a later test's identical plan and hide its jobs."""
+    yield
+    from fastcdc_rs_spark.cache import release_all
+
+    release_all()

@@ -441,16 +441,18 @@ def test_minhash_bands_single_arrow_udf(spark):
 
 
 def test_release_caches_helper(spark):
-    from fastcdc_rs_spark.cache import attach_caches, release_caches
+    from fastcdc_rs_spark import cache
 
-    a = spark.range(10).persist()
+    a = cache.register_cache(spark.range(10).persist())
     b = spark.range(5).persist()
-    df = attach_caches(spark.range(3), [a])
     a.count(), b.count()
     assert a.storageLevel.useMemory and b.storageLevel.useMemory
-    release_caches(df, b)
-    assert not a.storageLevel.useMemory  # attached cache released
+    cache.release_caches(b)
     assert not b.storageLevel.useMemory  # directly-persisted frame released
+    assert a.storageLevel.useMemory  # a registered frame waits for its owner
+    cache.release_all()
+    assert not a.storageLevel.useMemory  # registered cache released
+    assert not cache._REGISTRY
 
 
 def test_pipeline_leaves_only_verified_cached(spark):
@@ -842,13 +844,6 @@ def test_ngram_jaccard_plan_uncached_no_row_python(spark):
     assert "InMemoryTableScan" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     assert plan.count("FileScan parquet") == 2, plan
-    # opt-in caching restores the single-scan plan
-    cached = ngram_jaccard_pairs(docs, n=3, min_jaccard=0.5, cache_grams=True)
-    plan_c = executed_plan(cached)
-    assert "InMemoryTableScan" in plan_c, plan_c
-    from fastcdc_rs_spark.cache import release_all
-
-    release_all()
 
 
 def test_verify_pairs_prefilter_semantics(spark):
@@ -1386,11 +1381,13 @@ def test_verify_pairs_hub_split_plan_and_equivalence(spark, no_auto_broadcast):
     # Degree-aware verify: star pairs sharing a hub `a` take a broadcast
     # path above hub_degree_cap. Pure physical-plan choice — results must
     # be IDENTICAL to the unsplit wide join, the hub branch must plan a
-    # broadcast join, and the narrow persisted table must be released
-    # through _graft_caches. The split runs only when the shingle table
-    # is too big to broadcast, hence auto-broadcast off for the test.
+    # broadcast join, and the narrow persisted table must be registered
+    # and released by the caller's cache scope. The split runs only when
+    # the shingle table is too big to broadcast, hence auto-broadcast off
+    # for the test.
     import numpy as np
 
+    from fastcdc_rs_spark import cache
     from fastcdc_rs_spark.operators.verify import verify_pairs
 
     rng = np.random.default_rng(5)
@@ -1407,20 +1404,18 @@ def test_verify_pairs_hub_split_plan_and_equivalence(spark, no_auto_broadcast):
     )
     pairs = spark.createDataFrame(pairs_rows, "a long, b long")
 
-    split = verify_pairs(pairs, shingled, threshold=0.6, hub_degree_cap=4)
-    plan = split._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    got_split = {(r.a, r.b): round(r.jaccard, 9) for r in split.collect()}
+    with cache.scope():
+        split = verify_pairs(pairs, shingled, threshold=0.6, hub_degree_cap=4)
+        plan = split._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+        got_split = {(r.a, r.b): round(r.jaccard, 9) for r in split.collect()}
+        caches = [c for c in cache._REGISTRY if "_deg" in c.columns]
+        assert len(caches) == 1 and caches[0].storageLevel.useMemory
+    assert not caches[0].storageLevel.useMemory
+    assert not cache._REGISTRY
     plain = verify_pairs(pairs, shingled, threshold=0.6, hub_degree_cap=None)
     got_plain = {(r.a, r.b): round(r.jaccard, 9) for r in plain.collect()}
     assert got_split == got_plain and len(got_split) > 20
-
-    caches = split._graft_caches
-    assert len(caches) == 1 and caches[0].storageLevel.useMemory
-    from fastcdc_rs_spark.cache import release_caches
-
-    release_caches(split)
-    assert not caches[0].storageLevel.useMemory
 
     # Round-5 ADVICE: the hub PAIR broadcast is bounded — above
     # hub_pair_bcast_max the narrow hub pairs must take a shuffle join
@@ -1432,7 +1427,7 @@ def test_verify_pairs_hub_split_plan_and_equivalence(spark, no_auto_broadcast):
     got_shuffled = {(r.a, r.b): round(r.jaccard, 9)
                     for r in shuffled.collect()}
     assert got_shuffled == got_plain
-    release_caches(shuffled)
+    cache.release_all()
 
     unfiltered = verify_pairs(pairs, shingled, threshold=0.6,
                               hub_degree_cap=4, hub_pair_bcast_max=0,
@@ -1440,7 +1435,7 @@ def test_verify_pairs_hub_split_plan_and_equivalence(spark, no_auto_broadcast):
     got_unfiltered = {(r.a, r.b): round(r.jaccard, 9)
                       for r in unfiltered.collect()}
     assert got_unfiltered == got_plain
-    release_caches(unfiltered)
+    cache.release_all()
 
     # zero hub pairs: the split collapses to the plain wide join (no
     # union branch, no broadcast barriers) — rows still identical
@@ -1450,7 +1445,7 @@ def test_verify_pairs_hub_split_plan_and_equivalence(spark, no_auto_broadcast):
     assert got_nohub == got_plain
     plan_nohub = nohub._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan_nohub
-    release_caches(nohub)
+    cache.release_all()
 
 
 def test_cc_driver_path_equals_loop(spark):
