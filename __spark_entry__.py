@@ -452,10 +452,10 @@ def q_chunks(spark, sf):
 
 def q_minhash_bands(spark, sf):
     # kernel-backed: banded MinHash of chunk shingles (rows-only check).
-    # Round 7: chunk → shingle → MinHash fused into ONE Arrow pass
+    # Round 7: chunk → shingle → MinHash fused into ONE Arrow UDF
     # (operators/minhash.chunk_minhash_signatures — bit-exact vs the
-    # unfused composition, pinned in tests/test_signatures.py); the old
-    # shape paid two JVM↔Python round-trips per doc.
+    # unfused composition, pinned in tests/test_signatures.py); fusing
+    # skips the intermediate chunk-hash list column inside the worker.
     from fastcdc_rs_spark.operators.minhash import chunk_minhash_signatures
 
     signed = chunk_minhash_signatures(

@@ -7,7 +7,7 @@ are bit-identical to the sequential kernel (``fastcdc.chunk_bytes``), which
 is itself golden-pinned against the reference (fastcdc-rs
 src/v2020/mod.rs:350-409); parity is enforced by tests/test_kernel_batch.py.
 
-Why this shape: a pandas/Arrow UDF receives a batch of documents per call.
+Why this shape: an Arrow UDF receives a batch of documents per call.
 Per-document numpy calls are overhead-bound (~60 small-array ops per cut);
 batching across documents amortizes that overhead over the whole batch, so
 throughput approaches uint64 memory bandwidth instead of Python call rate.
@@ -33,8 +33,10 @@ from __future__ import annotations
 import numpy as np
 
 from .fastcdc import ChunkerConfig
+from .signatures import _concat
 
-__all__ = ["chunk_batch", "chunk_batch_columnar", "chunk_batch_columnar_numpy"]
+__all__ = ["chunk_batch", "chunk_batch_columnar", "chunk_batch_columnar_numpy",
+           "chunk_ragged", "chunk_ragged_numpy"]
 
 _U64 = np.uint64
 
@@ -165,7 +167,25 @@ def _process_group(
 def chunk_batch_columnar(
     bufs: list[np.ndarray], cfg: ChunkerConfig
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Chunk a batch of uint8 buffers; columnar result.
+    """List form of ``chunk_ragged``."""
+    data, _, lens = _concat(bufs, np.uint8)
+    return chunk_ragged(data, lens, cfg)
+
+
+def chunk_batch_columnar_numpy(
+    bufs: list[np.ndarray], cfg: ChunkerConfig
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """List form of ``chunk_ragged_numpy``."""
+    data, _, lens = _concat(bufs, np.uint8)
+    return chunk_ragged_numpy(data, lens, cfg)
+
+
+def chunk_ragged(
+    data: np.ndarray, lens: np.ndarray, cfg: ChunkerConfig
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Chunk a ragged byte batch: doc i is the next ``lens[i]`` bytes of
+    ``data``. Returns ``(counts, hashes, offsets, lengths)``: ``counts[i]``
+    chunks for doc i; the flat arrays are ordered (doc, offset).
 
     Dispatcher: uses the compiled C kernel (kernel/native.py, ~1 GB/s/core)
     when a C compiler is available and ``SPARK_GRAFT_NATIVE`` != 0,
@@ -175,21 +195,15 @@ def chunk_batch_columnar(
     from . import native
 
     if native.available():
-        return native.chunk_batch_columnar_native(bufs, cfg)
-    return chunk_batch_columnar_numpy(bufs, cfg)
+        return native.chunk_ragged_native(data, lens, cfg)
+    return chunk_ragged_numpy(data, lens, cfg)
 
 
-def chunk_batch_columnar_numpy(
-    bufs: list[np.ndarray], cfg: ChunkerConfig
+def chunk_ragged_numpy(
+    data: np.ndarray, doc_lens: np.ndarray, cfg: ChunkerConfig
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """numpy affine-scan implementation (always available).
-
-    Returns ``(counts, hashes, offsets, lengths)``: ``counts[i]`` chunks for
-    doc i; the flat arrays are ordered (doc, offset) — ``np.split(arr,
-    np.cumsum(counts)[:-1])`` yields per-doc slices. Bit-identical to
-    mapping ``fastcdc.chunk_bytes`` over ``bufs``; all per-chunk emission
-    is vectorized (no per-chunk Python objects).
-    """
+    """numpy affine-scan ``chunk_ragged`` (always available), bit-identical
+    to ``fastcdc.chunk_bytes`` per doc, with no per-chunk Python objects."""
     gear, gear_ls = cfg.gear_tables()
     min_size, avg_size, max_size = cfg.min_size, cfg.avg_size, cfg.max_size
     start = 2 * (min_size // 2)
@@ -204,8 +218,9 @@ def chunk_batch_columnar_numpy(
     # effective at every scale (capped at _SEG for the u64 working set).
     seg_width = int(min(_SEG, max(256, 2 * avg_size)) // 2 * 2)
 
-    n_docs = len(bufs)
-    lengths = np.array([b.shape[0] for b in bufs], dtype=np.int64)
+    n_docs = len(doc_lens)
+    lengths = np.asarray(doc_lens, dtype=np.int64)
+    starts = np.cumsum(lengths) - lengths
     processed = np.zeros(n_docs, dtype=np.int64)
     active = np.nonzero(lengths > 0)[0]
 
@@ -264,8 +279,8 @@ def chunk_batch_columnar_numpy(
             s = np.zeros((group.size, gwidth), dtype=np.uint8)
             for r in range(group.size):
                 i = group[r]
-                off = int(processed[i]) + start
-                s[r, : lens[r]] = bufs[i][off : off + int(lens[r])]
+                off = int(starts[i] + processed[i]) + start
+                s[r, : lens[r]] = data[off : off + int(lens[r])]
 
             cuts, hashes = _process_group(s, lens, n1s, mask_lut, gear, gear_ls, seg_width)
             cut_rel = np.where(cuts >= 0, start + cuts, rems)

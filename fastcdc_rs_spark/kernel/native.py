@@ -22,10 +22,12 @@ import tempfile
 import numpy as np
 
 from .fastcdc import ChunkerConfig
+from .signatures import _concat
 
 __all__ = [
     "available",
     "chunk_batch_columnar_native",
+    "chunk_ragged_native",
     "minhash_batch_native",
     "shingles_native",
     "simhash_batch_native",
@@ -149,19 +151,25 @@ def available() -> bool:
 def chunk_batch_columnar_native(
     bufs: list[np.ndarray], cfg: ChunkerConfig
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Same contract as ``batch.chunk_batch_columnar``: returns
-    ``(counts, hashes, offsets, lengths)`` ordered (doc, offset)."""
+    """List form of ``chunk_ragged_native``."""
+    data, _, lens = _concat(bufs, np.uint8)
+    return chunk_ragged_native(data, lens, cfg)
+
+
+def chunk_ragged_native(
+    data: np.ndarray, lens: np.ndarray, cfg: ChunkerConfig
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """C ``batch.chunk_ragged``: ``(counts, hashes, offsets, lengths)``
+    ordered (doc, offset), reading ``data`` in place."""
     lib = _load()
     assert lib is not None, "native kernel unavailable"
-    n_docs = len(bufs)
-    lens = np.fromiter((b.shape[0] for b in bufs), dtype=np.int64, count=n_docs)
+    n_docs = len(lens)
     offs = np.zeros(n_docs + 1, dtype=np.int64)
     np.cumsum(lens, out=offs[1:])
     total_len = int(offs[-1])
-    if n_docs:
-        data = np.concatenate(bufs) if n_docs > 1 else np.ascontiguousarray(bufs[0])
-    else:
-        data = np.empty(0, dtype=np.uint8)
+    if data.size < total_len:
+        raise ValueError(f"{data.size} data bytes for doc lengths summing to {total_len}")
+    data = np.ascontiguousarray(data, dtype=np.uint8)
     gear, gear_ls = cfg.gear_tables()
     gear = np.ascontiguousarray(gear, dtype=np.uint64)
     gear_ls = np.ascontiguousarray(gear_ls, dtype=np.uint64)

@@ -21,7 +21,9 @@ __all__ = [
     "minhash_batch",
     "perm_seeds",
     "signature_batch",
+    "signature_ragged",
     "simhash_batch",
+    "simhash_ragged",
     "splitmix64",
 ]
 
@@ -46,16 +48,20 @@ def perm_seeds(n_perms: int, seed: int) -> np.ndarray:
     return splitmix64(base + _U64(seed & 0xFFFFFFFFFFFFFFFF))
 
 
-def _concat(hash_lists: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    counts = np.array([len(h) for h in hash_lists], dtype=np.int64)
+def _concat(hash_lists: list, dtype=np.uint64) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """List of per-doc arrays → ragged batch ``(flat, starts, counts)``."""
+    counts = np.fromiter(map(len, hash_lists), np.int64, len(hash_lists))
     flat = (
-        np.concatenate([np.asarray(h, dtype=np.uint64) for h in hash_lists if len(h)])
-        if counts.sum()
-        else np.array([], dtype=np.uint64)
+        np.concatenate(hash_lists, dtype=dtype, casting="unsafe")
+        if len(hash_lists)
+        else np.array([], dtype=dtype)
     )
-    offsets = np.zeros(len(hash_lists), dtype=np.int64)
-    np.cumsum(counts[:-1], out=offsets[1:])
-    return flat, offsets, counts
+    return flat, np.cumsum(counts) - counts, counts
+
+
+def _split(flat: np.ndarray, counts: np.ndarray) -> list[np.ndarray]:
+    """Ragged batch → per-doc arrays (``np.split`` alone gives 0 docs one)."""
+    return np.split(flat, np.cumsum(counts[:-1])) if len(counts) else []
 
 
 def minhash_batch(
@@ -67,18 +73,21 @@ def minhash_batch(
     (they never collide with a real band). Work is blocked over permutations
     to bound the (total_shingles x block) temporary.
     """
-    n_docs = len(hash_lists)
-    sigs = np.full((n_docs, n_perms), _EMPTY_SIG, dtype=np.uint64)
-    flat, offsets, counts = _concat(hash_lists)
+    flat, _, counts = _concat(hash_lists)
+    return _minhash(flat, counts, n_perms, seed, block)
+
+
+def _minhash(flat, counts, n_perms, seed, block=16) -> np.ndarray:
+    sigs = np.full((len(counts), n_perms), _EMPTY_SIG, dtype=np.uint64)
     if flat.size == 0:
         return sigs
-    seeds = perm_seeds(n_perms, seed)
+    seeds, starts = perm_seeds(n_perms, seed), np.cumsum(counts) - counts
     from . import native
 
     if native.available():  # production path; numpy below is the fallback
-        native.minhash_batch_native(flat, offsets, counts, seeds, sigs)
-        return sigs
-    _minhash_numpy(flat, offsets, counts, seeds, sigs, block)
+        native.minhash_batch_native(flat, starts, counts, seeds, sigs)
+    else:
+        _minhash_numpy(flat, starts, counts, seeds, sigs, block)
     return sigs
 
 
@@ -105,16 +114,20 @@ def kgram_shingles(hash_lists: list[np.ndarray], k: int = 3) -> list[np.ndarray]
     still participate in exact dedup. Outputs are deduplicated per doc
     (shingle *sets*).
     """
-    flat, offsets, counts = _concat(hash_lists)
-    n = flat.size
-    n_docs = len(hash_lists)
+    flat, _, counts = _concat(hash_lists)
+    return _split(*_shingles(flat, counts, k))
+
+
+def _shingles(flat: np.ndarray, counts: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Ragged unit hashes → ragged sorted-unique shingle sets."""
+    n, n_docs = flat.size, len(counts)
     if n == 0:
-        return [np.array([], dtype=np.uint64) for _ in hash_lists]
+        return np.array([], dtype=np.uint64), np.zeros(n_docs, dtype=np.int64)
+    offsets = np.cumsum(counts) - counts
     from . import native
 
     if native.available():  # production path; numpy below is the fallback
-        out_flat, out_counts = native.shingles_native(flat, offsets, counts, k)
-        return np.split(out_flat, np.cumsum(out_counts[:-1]))
+        return native.shingles_native(flat, offsets, counts, k)
     m = n - k + 1
     if m > 0:
         acc = np.zeros(m, dtype=np.uint64)
@@ -122,10 +135,6 @@ def kgram_shingles(hash_lists: list[np.ndarray], k: int = 3) -> list[np.ndarray]
             acc = splitmix64(acc ^ flat[j:j + m])
     else:
         acc = np.array([], dtype=np.uint64)
-    # Vectorized per-doc dedup: one lexsort over (doc_id, value) + a keep
-    # mask replaces a per-doc ``np.unique`` Python loop (the loop costs
-    # ~5 µs/doc — the dominant term at 100k docs/batch). Output values
-    # per doc are sorted ascending, exactly like ``np.unique``.
     seg = np.where(counts >= k, counts - (k - 1), 0)
     total = int(seg.sum())
     doc_ids = np.repeat(np.arange(n_docs, dtype=np.int64), seg)
@@ -136,21 +145,23 @@ def kgram_shingles(hash_lists: list[np.ndarray], k: int = 3) -> list[np.ndarray]
         + np.repeat(offsets, seg)
     )
     vals = acc[pos]
+    # 0 < cnt < k docs fold their whole (short) sequence into one shingle
+    short = np.nonzero((counts > 0) & (counts < k))[0]
+    x = np.zeros(short.size, dtype=np.uint64)
+    for j in range(k - 1):
+        live = counts[short] > j
+        x[live] = splitmix64(x[live] ^ flat[offsets[short[live]] + j])
+    doc_ids = np.concatenate([doc_ids, short])
+    vals = np.concatenate([vals, x])
+    # Vectorized per-doc dedup: one lexsort over (doc_id, value) + a keep
+    # mask replaces a per-doc ``np.unique`` Python loop (the loop costs
+    # ~5 µs/doc — the dominant term at 100k docs/batch). Output values
+    # per doc are sorted ascending, exactly like ``np.unique``.
     order = np.lexsort((vals, doc_ids))
     dv, vv = doc_ids[order], vals[order]
     keep = np.ones(dv.size, dtype=bool)
     keep[1:] = (dv[1:] != dv[:-1]) | (vv[1:] != vv[:-1])
-    dv, vv = dv[keep], vv[keep]
-    uniq_counts = np.bincount(dv, minlength=n_docs)
-    out = np.split(vv, np.cumsum(uniq_counts[:-1]))
-    # rare path: 0 < cnt < k docs fold their whole (short) sequence
-    for d in np.nonzero((counts > 0) & (counts < k))[0]:
-        off = offsets[d]
-        x = np.zeros(1, dtype=np.uint64)
-        for j in range(int(counts[d])):
-            x = splitmix64(x ^ flat[off + j:off + j + 1])
-        out[d] = x
-    return out
+    return vv[keep], np.bincount(dv[keep], minlength=n_docs)
 
 
 def band_hashes(sigs: np.ndarray, bands: int = 16, rows: int = 8) -> np.ndarray:
@@ -176,27 +187,43 @@ def signature_batch(
     rows: int = 8,
     seed: int = 1,
 ) -> tuple[list[np.ndarray], np.ndarray]:
-    """One pass: unit hashes → (shingle sets, band keys).
+    """List form of ``signature_ragged``: (per-doc shingle sets, band keys)."""
+    flat, _, counts = _concat(hash_lists)
+    shingles, sh_counts, band_keys = signature_ragged(flat, counts, k, n_perms, bands, rows, seed)
+    return _split(shingles, sh_counts), band_keys
+
+
+def signature_ragged(
+    flat: np.ndarray, counts: np.ndarray, k: int = 3, n_perms: int = 128,
+    bands: int = 16, rows: int = 8, seed: int = 1,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One pass: ragged unit hashes → (shingles flat, shingle counts,
+    (n_docs, bands) band keys).
 
     This is the exact computation the Spark signature UDF runs per Arrow
     batch AND the computation the single-node recall oracle runs — sharing
     it is what makes "same shingle/signature config" bit-exact.
     """
-    shingles = kgram_shingles(hash_lists, k)
-    sigs = minhash_batch(shingles, n_perms=n_perms, seed=seed)
-    return shingles, band_hashes(sigs, bands, rows)
+    shingles, sh_counts = _shingles(flat, counts, k)
+    sigs = _minhash(shingles, sh_counts, n_perms, seed)
+    return shingles, sh_counts, band_hashes(sigs, bands, rows)
 
 
 def simhash_batch(hash_lists: list[np.ndarray], seed: int = 1) -> np.ndarray:
+    """List form of ``simhash_ragged``."""
+    flat, _, counts = _concat(hash_lists)
+    return simhash_ragged(flat, counts, seed)
+
+
+def simhash_ragged(flat: np.ndarray, counts: np.ndarray, seed: int = 1) -> np.ndarray:
     """64-bit SimHash per doc: bit-majority over splitmix64'd feature hashes.
 
     Ties (bit sum exactly half) resolve to 0. Empty docs hash to 0.
     """
-    n_docs = len(hash_lists)
-    out = np.zeros(n_docs, dtype=np.uint64)
-    flat, offsets, counts = _concat(hash_lists)
+    out = np.zeros(len(counts), dtype=np.uint64)
     if flat.size == 0:
         return out
+    offsets = np.cumsum(counts) - counts
     from . import native
 
     if native.available():  # production path; numpy below is the fallback

@@ -1,6 +1,6 @@
 """DataFrame-level pipeline operators (SURVEY.md §2.B)."""
 
-from .chunk import cdc_dedup_stats, chunk_documents, chunks_udf
+from .chunk import cdc_dedup_stats, chunk_documents
 from .components import connected_components
 from .dedup import (
     char_ngrams,
@@ -50,7 +50,6 @@ __all__ = [
     "bpe_token_stats",
     "candidate_pairs",
     "chunk_documents",
-    "chunks_udf",
     "connected_components",
     "cosine_near_duplicates",
     "cosine_near_duplicates_banded",

@@ -1,66 +1,42 @@
 """Chunking stage: documents DataFrame → per-document FastCDC chunks.
 
 Spark mapping of the reference's three entry points (SURVEY.md §3): the
-in-memory chunker (fastcdc-rs src/v2020/mod.rs:522-663) becomes a vectorized
-Arrow/pandas UDF over a string/binary column; streaming variants
+in-memory chunker (fastcdc-rs src/v2020/mod.rs:522-663) becomes an Arrow
+UDF over a string/binary column; streaming variants
 (StreamCDC/AsyncStreamCDC, src/v2020/mod.rs:741-915) need no buffer
 machinery because a web page fits in one row — incremental arrival is
 handled at the *document* level by Structured Streaming (streaming/).
 
 Config is computed once per executor (broadcast via UDF closure), the
-analog of ``rechunk``'s amortization (src/v2020/mod.rs:627-632); the
-per-batch work is one ``chunk_batch`` call (kernel/batch.py).
+analog of ``rechunk``'s amortization (src/v2020/mod.rs:627-632). Each
+Arrow batch crosses the kernel boundary as one ragged batch (ragged.py):
+the column's value buffer goes to ``chunk_ragged`` in place and the
+chunk lists are built from the kernel's flat arrays.
 
 Hashes are u64 bit patterns stored in Spark ``LongType`` via signed
-reinterpretation (documented here, reversed by ``unsigned_hash_expr``).
+reinterpretation.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
 from ..kernel import ChunkerConfig
-from ..kernel.batch import chunk_batch_columnar
+from ..kernel.batch import chunk_ragged
+from .ragged import list_array, ragged
 
 __all__ = [
-    "CHUNK_SCHEMA",
     "CHUNK_ARRAYS_SCHEMA",
     "cdc_dedup_stats",
     "chunk_documents",
     "chunk_arrays_udf",
-    "chunks_expr",
-    "chunks_udf",
     "chunk_hashes_udf",
-    "unsigned_hash_expr",
 ]
-
-CHUNK_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("hash", LongType(), False),
-            StructField("offset", LongType(), False),
-            StructField("length", IntegerType(), False),
-        ]
-    )
-)
-
-def unsigned_hash_expr(col: str | Column) -> Column:
-    """Recover the u64 bit pattern of a chunk hash as a DecimalType(20,0)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c < 0, c.cast("decimal(20,0)") + F.lit(18446744073709551616).cast("decimal(20,0)")).otherwise(
-        c.cast("decimal(20,0)")
-    )
-
 
 CHUNK_ARRAYS_SCHEMA = StructType(
     [
@@ -72,86 +48,37 @@ CHUNK_ARRAYS_SCHEMA = StructType(
 
 
 def chunk_arrays_udf(cfg: ChunkerConfig):
-    """Pandas UDF: text/binary column → struct-of-arrays
+    """Arrow UDF: text/binary column → struct-of-arrays
     ``(hashes array<long>, offsets array<long>, lengths array<int>)``.
 
-    Fully columnar: the kernel result arrays are viewed/split with numpy
-    and handed to Arrow as ndarray cells — no per-chunk Python objects
-    anywhere. The array-of-structs view (``CHUNK_SCHEMA``) is rebuilt
-    JVM-side by ``chunks_expr``/``chunk_documents`` via ``arrays_zip``.
+    ``chunk_documents`` zips it JVM-side into the array-of-structs view.
     """
+    fields = list(to_arrow_type(CHUNK_ARRAYS_SCHEMA))
 
-    @F.pandas_udf(CHUNK_ARRAYS_SCHEMA)
-    def _chunk(data: pd.Series) -> pd.DataFrame:
-        bufs = _to_bufs(data)
-        if not bufs:
-            return pd.DataFrame({"hashes": [], "offsets": [], "lengths": []})
-        counts, hashes, offs, lns = chunk_batch_columnar(bufs, cfg)
-        splits = np.cumsum(counts)[:-1]
-        return pd.DataFrame(
-            {
-                "hashes": pd.Series(np.split(hashes.view(np.int64), splits)),
-                "offsets": pd.Series(np.split(offs, splits)),
-                "lengths": pd.Series(np.split(lns.astype(np.int32), splits)),
-            }
+    @F.arrow_udf(CHUNK_ARRAYS_SCHEMA)
+    def _chunk(data: pa.Array) -> pa.Array:
+        counts, hashes, offs, lns = chunk_ragged(*ragged(data), cfg)
+        cols = (hashes.view(np.int64), offs, lns.astype(np.int32))
+        return pa.StructArray.from_arrays(
+            [list_array(c, counts, f.type) for c, f in zip(cols, fields)],
+            fields=fields,
         )
 
     return _chunk
 
 
-def chunks_expr(ca: Column) -> Column:
-    """JVM: struct-of-arrays column → array<struct<hash,offset,length>>."""
-    return F.arrays_zip(
-        ca["hashes"].alias("hash"),
-        ca["offsets"].alias("offset"),
-        ca["lengths"].alias("length"),
-    )
-
-
-def chunks_udf(cfg: ChunkerConfig):
-    """text/binary column → array<struct<hash,offset,length>> (CHUNK_SCHEMA).
-
-    Composition of ``chunk_arrays_udf`` (Arrow-columnar Python) and the
-    JVM ``arrays_zip`` — same public contract as before, zero per-chunk
-    Python object materialization.
-    """
-    inner = chunk_arrays_udf(cfg)
-
-    def apply(col: str | Column) -> Column:
-        return chunks_expr(inner(col))
-
-    return apply
-
-
-def _to_bufs(data: pd.Series) -> list[np.ndarray]:
-    bufs = []
-    for v in data:
-        if v is None:
-            bufs.append(np.array([], dtype=np.uint8))
-        elif isinstance(v, (bytes, bytearray)):
-            bufs.append(np.frombuffer(v, dtype=np.uint8))
-        else:
-            bufs.append(np.frombuffer(str(v).encode("utf-8"), dtype=np.uint8))
-    return bufs
-
-
 def chunk_hashes_udf(cfg: ChunkerConfig):
-    """Pandas UDF: text/binary column → array<long> of chunk gear hashes.
+    """Arrow UDF: text/binary column → array<long> of chunk gear hashes.
 
     The pipeline hot path (unit_hashes → shingles → MinHash) needs only the
-    hash sequence, so this skips the per-chunk struct materialization of
-    ``chunks_udf`` entirely: the columnar kernel result is viewed as signed
-    int64 and split per doc — zero per-chunk Python objects end-to-end.
+    hash sequence, so this skips the offsets and lengths lists entirely.
     """
+    list_type = to_arrow_type(ArrayType(LongType()))
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _hashes(data: pd.Series) -> pd.Series:
-        bufs = _to_bufs(data)
-        if not bufs:
-            return pd.Series([], dtype=object)
-        counts, hashes, _, _ = chunk_batch_columnar(bufs, cfg)
-        signed = hashes.view(np.int64)
-        return pd.Series(np.split(signed, np.cumsum(counts)[:-1]))
+    @F.arrow_udf(ArrayType(LongType()))
+    def _hashes(data: pa.Array) -> pa.Array:
+        counts, hashes, _, _ = chunk_ragged(*ragged(data), cfg)
+        return list_array(hashes.view(np.int64), counts, list_type)
 
     return _hashes
 
@@ -171,9 +98,11 @@ def chunk_documents(
     with_sa = docs.select(
         *id_cols, chunk_arrays_udf(cfg)(F.col(content_col)).alias("ca")
     )
-    with_arr = with_sa.select(
-        *id_cols, chunks_expr(F.col("ca")).alias("chunks")
-    )
+    with_arr = with_sa.select(*id_cols, F.arrays_zip(
+        F.col("ca.hashes").alias("hash"),
+        F.col("ca.offsets").alias("offset"),
+        F.col("ca.lengths").alias("length"),
+    ).alias("chunks"))
     if not exploded:
         return with_arr
     # posexplode_outer + post-filter instead of posexplode: the plain

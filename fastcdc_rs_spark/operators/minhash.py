@@ -1,27 +1,31 @@
 """MinHash signature stage (SURVEY.md §2.B B4/B5/B6 fused).
 
-One vectorized pandas UDF turns each doc's unit-hash sequence (FastCDC
-chunk hashes, or token/char unit hashes) into:
+One Arrow UDF turns each doc's unit-hash sequence (FastCDC chunk hashes,
+or token/char unit hashes) into:
 
 * ``shingles``: the deduplicated k-gram shingle-hash set (used again by
   exact-Jaccard verification), and
 * ``bands``: the LSH band keys of the MinHash signature.
 
-All three steps run in one Arrow pass (kernel/signatures.signature_batch)
-— the same code the single-node recall oracle calls, so Spark and oracle
-agree bit-for-bit under a given config. Values are u64 bit patterns stored
-as LongType via signed reinterpretation.
+All three steps run in one kernel call per Arrow batch
+(kernel/signatures.signature_ragged) on the column's buffers as one ragged
+batch (ragged.py) — the same code the single-node recall oracle calls, so
+Spark and oracle agree bit-for-bit under a given config. Values are u64 bit
+patterns stored as LongType via signed reinterpretation.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from ..kernel.signatures import signature_batch
+from ..kernel.batch import chunk_ragged
+from ..kernel.signatures import signature_ragged
+from .ragged import list_array, ragged
 
 __all__ = [
     "minhash_signatures",
@@ -38,12 +42,20 @@ SIGNATURE_SCHEMA = StructType(
 )
 
 CHUNK_SIGNATURE_SCHEMA = StructType(
-    [
-        StructField("shingles", ArrayType(LongType(), False), False),
-        StructField("bands", ArrayType(LongType(), False), False),
-        StructField("n_units", LongType(), False),
-    ]
+    SIGNATURE_SCHEMA.fields + [StructField("n_units", LongType(), False)]
 )
+
+
+def _signature_struct(fields, flat, counts, params, *extra) -> pa.StructArray:
+    """Ragged unit hashes → ``(shingles, bands, *extra)`` struct rows."""
+    shingles, sh_counts, keys = signature_ragged(flat, counts, **params)
+    cols = [
+        list_array(shingles.view(np.int64), sh_counts, fields[0].type),
+        list_array(keys.reshape(-1).view(np.int64),
+                   np.full(len(counts), keys.shape[1]), fields[1].type),
+        *extra,
+    ]
+    return pa.StructArray.from_arrays(cols, fields=fields)
 
 
 def minhash_signatures(
@@ -57,30 +69,14 @@ def minhash_signatures(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, shingles array<long>, bands array<long>)."""
+    fields = list(to_arrow_type(SIGNATURE_SCHEMA))
+    params = dict(k=k, n_perms=n_perms, bands=bands, rows=rows, seed=seed)
 
-    @F.pandas_udf(SIGNATURE_SCHEMA)
-    def _sig(unit_hashes: pd.Series) -> pd.DataFrame:
-        lists = [
-            np.asarray(v if v is not None else [], dtype=np.int64).view(np.uint64)
-            for v in unit_hashes
-        ]
-        shingles, band_keys = signature_batch(
-            lists, k=k, n_perms=n_perms, bands=bands, rows=rows, seed=seed
-        )
-        return pd.DataFrame(
-            {
-                "shingles": [s.view(np.int64) for s in shingles],
-                "bands": list(band_keys.view(np.int64)),
-            }
-        )
+    @F.arrow_udf(SIGNATURE_SCHEMA)
+    def _sig(unit_hashes: pa.Array) -> pa.Array:
+        return _signature_struct(fields, *ragged(unit_hashes), params)
 
-    return units.select(
-        id_col, _sig(F.col(units_col)).alias("_sig")
-    ).select(
-        id_col,
-        F.col("_sig.shingles").alias("shingles"),
-        F.col("_sig.bands").alias("bands"),
-    )
+    return units.select(id_col, _sig(F.col(units_col)).alias("_sig")).select(id_col, "_sig.*")
 
 
 def chunk_minhash_signatures(
@@ -95,44 +91,22 @@ def chunk_minhash_signatures(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, shingles, bands, n_units): FastCDC chunk hashes → shingles
-    → MinHash band keys in ONE Arrow pass.
+    → MinHash band keys in ONE Arrow UDF.
 
-    The unfused pipeline shape (``unit_hashes`` then ``minhash_signatures``)
-    crosses the JVM↔Python boundary twice per document: the chunk-hash
-    arrays are serialized out of the chunk UDF and straight back into the
-    signature UDF with nothing JVM-side in between. Fusing hands the
-    columnar chunk-kernel output (uint64 hash arrays) directly to
-    ``signature_batch`` inside one worker (guide §4.1/§4.2) — bit-exact
-    same values, one Arrow round-trip of the text column only. ``n_units``
-    carries the per-doc chunk count so pipeline metrics (units_total) need
-    no separate units frame.
+    The unfused shape (``unit_hashes`` then ``minhash_signatures``) is not
+    a second JVM↔Python crossing: Spark chains the two UDFs inside one
+    ``ArrowEvalPython`` node and one worker. What fusing saves is the
+    intermediate chunk-hash column: the kernel's flat hash array feeds
+    ``signature_ragged`` directly instead of being built into an Arrow
+    list array and read back. ``n_units`` carries the per-doc chunk count
+    so pipeline metrics (units_total) need no separate units frame.
     """
-    from ..kernel.batch import chunk_batch_columnar
-    from .chunk import _to_bufs
+    fields = list(to_arrow_type(CHUNK_SIGNATURE_SCHEMA))
+    params = dict(k=k, n_perms=n_perms, bands=bands, rows=rows, seed=seed)
 
-    @F.pandas_udf(CHUNK_SIGNATURE_SCHEMA)
-    def _chunk_sig(texts: pd.Series) -> pd.DataFrame:
-        bufs = _to_bufs(texts)
-        if not bufs:
-            return pd.DataFrame({"shingles": [], "bands": [], "n_units": []})
-        counts, hashes, _, _ = chunk_batch_columnar(bufs, chunker_cfg)
-        lists = np.split(hashes, np.cumsum(counts)[:-1])
-        shingles, band_keys = signature_batch(
-            lists, k=k, n_perms=n_perms, bands=bands, rows=rows, seed=seed
-        )
-        return pd.DataFrame(
-            {
-                "shingles": [s.view(np.int64) for s in shingles],
-                "bands": list(band_keys.view(np.int64)),
-                "n_units": counts,
-            }
-        )
+    @F.arrow_udf(CHUNK_SIGNATURE_SCHEMA)
+    def _chunk_sig(texts: pa.Array) -> pa.Array:
+        counts, hashes, _, _ = chunk_ragged(*ragged(texts), chunker_cfg)
+        return _signature_struct(fields, hashes, counts, params, pa.array(counts))
 
-    return docs.select(
-        id_col, _chunk_sig(F.col(text_col)).alias("_sig")
-    ).select(
-        id_col,
-        F.col("_sig.shingles").alias("shingles"),
-        F.col("_sig.bands").alias("bands"),
-        F.col("_sig.n_units").alias("n_units"),
-    )
+    return docs.select(id_col, _chunk_sig(F.col(text_col)).alias("_sig")).select(id_col, "_sig.*")

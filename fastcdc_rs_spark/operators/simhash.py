@@ -9,25 +9,23 @@ distance <= 3. Band extraction is JVM-side bit arithmetic.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType
 
-from ..kernel.signatures import simhash_batch
+from ..kernel.batch import chunk_ragged
+from ..kernel.signatures import simhash_ragged
+from .ragged import ragged
 
 __all__ = ["simhash64", "chunk_simhash64", "simhash_bands", "hamming_distance_expr"]
 
 
 def simhash64(shingled: DataFrame, seed: int = 1,
               shingles_col: str = "shingles", out_col: str = "simhash") -> DataFrame:
-    @F.pandas_udf(LongType())
-    def _simhash(shingles: pd.Series) -> pd.Series:
-        lists = [
-            np.asarray(v if v is not None else [], dtype=np.int64).view(np.uint64)
-            for v in shingles
-        ]
-        return pd.Series(simhash_batch(lists, seed=seed).view(np.int64))
+    @F.arrow_udf(LongType())
+    def _simhash(shingles: pa.Array) -> pa.Array:
+        return pa.array(simhash_ragged(*ragged(shingles), seed=seed).view(np.int64))
 
     return shingled.withColumn(out_col, _simhash(F.col(shingles_col)))
 
@@ -36,20 +34,14 @@ def chunk_simhash64(docs: DataFrame, chunker_cfg, seed: int = 1,
                     text_col: str = "text", id_col: str = "doc_id",
                     out_col: str = "simhash") -> DataFrame:
     """(doc_id, simhash): FastCDC chunk hashes → 64-bit SimHash in ONE
-    Arrow pass — the fused twin of ``unit_hashes`` + ``simhash64`` (same
+    Arrow UDF — the fused twin of ``unit_hashes`` + ``simhash64`` (same
     kernels, bit-exact; see operators/minhash.chunk_minhash_signatures
-    for the boundary-cost rationale, guide §4.1)."""
-    from ..kernel.batch import chunk_batch_columnar
-    from .chunk import _to_bufs
+    for what fusing saves)."""
 
-    @F.pandas_udf(LongType())
-    def _chunk_simhash(texts: pd.Series) -> pd.Series:
-        bufs = _to_bufs(texts)
-        if not bufs:
-            return pd.Series([], dtype="int64")
-        counts, hashes, _, _ = chunk_batch_columnar(bufs, chunker_cfg)
-        lists = np.split(hashes, np.cumsum(counts)[:-1])
-        return pd.Series(simhash_batch(lists, seed=seed).view(np.int64))
+    @F.arrow_udf(LongType())
+    def _chunk_simhash(texts: pa.Array) -> pa.Array:
+        counts, hashes, _, _ = chunk_ragged(*ragged(texts), chunker_cfg)
+        return pa.array(simhash_ragged(hashes, counts, seed=seed).view(np.int64))
 
     return docs.select(F.col(id_col), _chunk_simhash(F.col(text_col)).alias(out_col))
 

@@ -125,12 +125,12 @@ def near_dup_clusters(
     # exits: once CC has materialized its labels, or on any exception
     with scope() as keep:
         if fused:
-            # chunk → shingle → MinHash in ONE Arrow pass (round 7): the
-            # unfused shape shipped every doc's chunk-hash array out of the
-            # chunk UDF and straight back into the signature UDF — two
-            # JVM↔Python round-trips with nothing JVM-side between them
-            # (guide §4.1). Bit-exact same kernels, same values; the units
-            # observation rides the fused frame's n_units column.
+            # chunk → shingle → MinHash in ONE Arrow UDF (round 7). The
+            # unfused shape also runs in one ArrowEvalPython node (Spark
+            # chains the two UDFs in one worker); fusing skips building
+            # and re-reading the intermediate chunk-hash list column, and
+            # the units observation rides the fused frame's n_units
+            # column. Bit-exact same kernels, same values.
             from .operators.minhash import chunk_minhash_signatures
 
             signed = chunk_minhash_signatures(

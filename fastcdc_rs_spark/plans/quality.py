@@ -80,7 +80,7 @@ def assert_no_cartesian(df: DataFrame) -> str:
 
 def assert_no_python_row_udf(df: DataFrame) -> str:
     """Assert no row-at-a-time Python UDF in the plan (BatchEvalPython);
-    Arrow-batched pandas UDFs (ArrowEvalPython) are the allowed path."""
+    Arrow-batched UDFs (ArrowEvalPython) are the allowed path."""
     plan = executed_plan(df)
     assert "BatchEvalPython" not in plan, (
         f"row-at-a-time Python UDF in hot path:\n{plan}"

@@ -39,6 +39,8 @@ from fastcdc_rs_spark.sources.table import get_catalog
 def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
                   catalog_kind: str = "parquet") -> dict:
     """Run the checkpointed dedup job; returns the summary dict."""
+    if cfg.candidates != "minhash":
+        raise ValueError(f"dedup job builds MinHash candidates only, not {cfg.candidates!r}")
     docs = spark.read.parquet(inp)
     id_col = "doc_id" if "doc_id" in docs.columns else "url"
 
@@ -69,7 +71,9 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
             "verified",
             lambda: verify_pairs(pairs, signed.select(id_col, "shingles"),
                                  threshold=cfg.threshold, id_col=id_col,
-                                 hub_degree_cap=cfg.verify_hub_cap),
+                                 hub_degree_cap=cfg.verify_hub_cap,
+                                 hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
+                                 hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max),
         )
     clusters = run.stage(
         "clusters",

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo/jobs")
 
 
@@ -44,6 +46,51 @@ def test_dedup_job_runs_and_resumes(spark, tmp_path):
         DedupConfig(threshold=0.7),
     )
     assert all(e["action"] == "computed" for e in s3["stages"])
+
+
+def _small_docs(spark, tmp_path) -> str:
+    path = str(tmp_path / "docs")
+    spark.createDataFrame([(1, "same words here"), (2, "same words here"), (3, "other")],
+                          "doc_id long, text string").write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("candidates", ["simhash", "both"])
+def test_dedup_job_rejects_non_minhash_candidates(spark, tmp_path, candidates):
+    # the job only builds MinHash candidates: any other choice must fail
+    # before Spark writes anything, not run MinHash silently
+    from dedup_job import run_dedup_job
+
+    from fastcdc_rs_spark.pipeline import DedupConfig
+
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="MinHash"):
+        run_dedup_job(spark, _small_docs(spark, tmp_path), str(out),
+                      DedupConfig(candidates=candidates))
+    assert not out.exists()
+
+
+def test_dedup_job_passes_verify_ladder_config(spark, tmp_path, monkeypatch):
+    import dedup_job
+
+    from fastcdc_rs_spark.pipeline import DedupConfig
+
+    class Reached(Exception):
+        pass
+
+    seen = {}
+
+    def verify_pairs(*args, **kwargs):
+        seen.update(kwargs)
+        raise Reached
+
+    monkeypatch.setattr(dedup_job, "verify_pairs", verify_pairs)
+    cfg = DedupConfig(verify_hub_cap=5, verify_hub_pair_bcast_max=7,
+                      verify_hub_bids_bcast_max=11)
+    with pytest.raises(Reached):
+        dedup_job.run_dedup_job(spark, _small_docs(spark, tmp_path), str(tmp_path / "out"), cfg)
+    assert (seen["hub_degree_cap"], seen["hub_pair_bcast_max"],
+            seen["hub_bids_bcast_max"]) == (5, 7, 11)
 
 
 def test_incremental_from_catalog_snapshot_diff(spark, tmp_path):
