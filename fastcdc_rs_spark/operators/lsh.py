@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from ..cache import register_cache
 from ..functions.plan_safe import explode_once
 
-__all__ = ["candidate_pairs"]
+__all__ = ["bucket_metrics_frame", "candidate_pairs"]
 
 
 def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
@@ -117,7 +117,7 @@ def candidate_pairs(bands_df: DataFrame, bucket_cap: int = 64,
     # aggregation shrinks the pre-shuffle pair stream where the
     # repartition form ships every duplicate. Keep the aggregate form.)
     pairs = small_pairs.unionByName(star_pairs).dropDuplicates(["a", "b"])
-    return pairs, _metrics_frame(bands_df.sparkSession, obs.get)
+    return pairs, bucket_metrics_frame(bands_df.sparkSession, _bucket_row(obs.get))
 
 
 _HIST_CLASSES = range(1, 64)
@@ -146,15 +146,22 @@ def _bucket_stats(id_col: str, bucket_cap: int) -> list:
     ]
 
 
-def _metrics_frame(spark, got: dict) -> DataFrame:
-    """The observed stats as a one-row frame. Built from pandas through
-    Arrow it is a LocalRelation: ``.first()`` on it runs no Spark job."""
-    import pandas as pd
-
+def _bucket_row(got: dict) -> dict:
+    """The observed stats as the metrics row (histogram classes folded
+    into one ``bucket_hist`` map)."""
     row = {k: int(got[k]) for k in ("buckets", "max_bucket", "capped_buckets",
                                     "capped_docs")}
     row["bucket_hist"] = {
         k: int(got[f"h{k}"]) for k in _HIST_CLASSES if got[f"h{k}"]
     }
     row["pair_bound"] = int(got["pair_bound"])
+    return row
+
+
+def bucket_metrics_frame(spark, row: dict) -> DataFrame:
+    """A metrics row as the one-row frame ``candidate_pairs`` returns.
+    Built from pandas through Arrow it is a LocalRelation: ``.first()`` on
+    it runs no Spark job."""
+    import pandas as pd
+
     return spark.createDataFrame(pd.DataFrame([row]), _METRICS_SCHEMA)

@@ -68,7 +68,8 @@ def minhash_signatures(
     units_col: str = "unit_hashes",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(doc_id, shingles array<long>, bands array<long>)."""
+    """(doc_id, shingles array<long>, bands array<long>); any other
+    column of ``units`` rides along after doc_id."""
     fields = list(to_arrow_type(SIGNATURE_SCHEMA))
     params = dict(k=k, n_perms=n_perms, bands=bands, rows=rows, seed=seed)
 
@@ -76,7 +77,8 @@ def minhash_signatures(
     def _sig(unit_hashes: pa.Array) -> pa.Array:
         return _signature_struct(fields, *ragged(unit_hashes), params)
 
-    return units.select(id_col, _sig(F.col(units_col)).alias("_sig")).select(id_col, "_sig.*")
+    keep = [id_col, *(c for c in units.columns if c not in (id_col, units_col))]
+    return units.select(*keep, _sig(F.col(units_col)).alias("_sig")).select(*keep, "_sig.*")
 
 
 def chunk_minhash_signatures(

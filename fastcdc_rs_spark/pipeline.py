@@ -4,6 +4,14 @@ documents → FastCDC chunk fingerprints → k-gram shingles → MinHash → LSH
 band buckets → candidate pairs → exact-Jaccard verification → connected
 components → ``clusters(doc_id, cluster_id)``.
 
+The stage sequence is defined once, in ``run_stages``: ``signatures`` →
+``pairs`` → ``verified`` → ``clusters``. Every stage goes through a
+caller's ``materialize(name, build) -> DataFrame``:
+``near_dup_clusters`` keeps stages in memory inside one
+``cache.scope()``, and ``jobs/dedup_job.py`` passes
+``CheckpointedRun.stage``, which writes each stage and resumes it from
+its manifest. Both sign, band, verify and cluster the same way.
+
 Design: all *hashing* (chunk gear hashes, shingle folds, MinHash, band
 keys) is shared numpy kernel code (kernel/), so the single-node recall
 oracle reproduces the Spark results bit-for-bit; all *data movement*
@@ -21,18 +29,20 @@ Unit-hash modes:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from .cache import register_cache, scope
 from .kernel import ChunkerConfig
 from .operators.components import connected_components
-from .operators.lsh import candidate_pairs
-from .operators.minhash import minhash_signatures
+from .operators.lsh import bucket_metrics_frame, candidate_pairs
+from .operators.minhash import chunk_minhash_signatures, minhash_signatures
 from .operators.verify import verify_pairs
 
-__all__ = ["DedupConfig", "dedup_pipeline", "near_dup_clusters", "unit_hashes"]
+__all__ = ["DedupConfig", "near_dup_clusters", "run_stages", "signatures",
+           "unit_hashes"]
 
 
 @dataclass(frozen=True)
@@ -56,9 +66,6 @@ class DedupConfig:
     bands: int = 32
     rows: int = 4
     minhash_seed: int = 1
-    # candidate generators: "minhash", "simhash", or "both" (union of pairs)
-    candidates: str = "minhash"
-    simhash_bands_n: int = 4  # 4 x 16-bit Hamming bands (recall for dist<=3)
     # verification + skew
     threshold: float = 0.6
     bucket_cap: int = 64
@@ -99,6 +106,78 @@ def unit_hashes(docs: DataFrame, cfg: DedupConfig,
     )
 
 
+def signatures(docs: DataFrame, cfg: DedupConfig,
+               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(doc_id, shingles, bands, n_units) under the configured mode: the
+    one signing step of the batch pipeline, the job and the stream.
+
+    Chunk mode is the fused ``chunk_minhash_signatures``: chunking,
+    shingling and MinHash in one Arrow UDF, with no intermediate
+    chunk-hash list column. Token/char units are JVM expressions, so
+    there ``unit_hashes`` feeds ``minhash_signatures``. Same kernels,
+    bit-exact either way; ``n_units`` is the per-doc unit count."""
+    sig = dict(k=cfg.shingle_k, n_perms=cfg.n_perms, bands=cfg.bands,
+               rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col)
+    if cfg.shingle_mode == "chunk":
+        return chunk_minhash_signatures(docs, cfg.chunker(), text_col=text_col, **sig)
+    units = unit_hashes(docs, cfg, id_col, text_col)
+    return minhash_signatures(
+        units.withColumn("n_units", F.size("unit_hashes")), **sig
+    ).select(id_col, "shingles", "bands", "n_units")
+
+
+def run_stages(docs: DataFrame, cfg: DedupConfig,
+               materialize: Callable[..., DataFrame],
+               id_col: str = "doc_id", text_col: str = "text",
+               ) -> tuple[DataFrame, DataFrame, dict]:
+    """The stage sequence; returns (clusters, verified, bucket statistics).
+
+    Each stage is ``materialize(name, build)``, where ``build()`` returns
+    the stage's frame from the stages before it; the caller decides what
+    materializing means (in memory, checkpointed, pass-through). The
+    ``pairs`` stage also passes ``stats``: its build fills the dict with
+    candidate generation's bucket row, and a checkpointing materialize
+    stores it with the stage and refills it on resume, so a resumed run
+    never rebuilds the band window for it.
+    """
+    signed = materialize("signatures", lambda: signatures(docs, cfg, id_col, text_col))
+    buckets: dict = {}
+
+    def build_pairs() -> DataFrame:
+        bands_df = signed.select(
+            id_col, F.posexplode("bands").alias("band_id", "band_hash")
+        )
+        pairs, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
+        # a local one-row frame (no job): its pair_bound caps the verified
+        # edge count, so CC can pick its driver path without a count probe
+        buckets.update(metrics.first().asDict())
+        return pairs
+
+    pairs = materialize("pairs", build_pairs, stats=buckets)
+    # a stats dict read back from JSON carries string histogram keys
+    buckets["bucket_hist"] = {int(k): v for k, v in buckets["bucket_hist"].items()}
+    verified = materialize("verified", lambda: verify_pairs(
+        pairs, signed.select(id_col, "shingles"), threshold=cfg.threshold,
+        id_col=id_col, hub_degree_cap=cfg.verify_hub_cap,
+        hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
+        hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max,
+    ))
+    clusters = materialize("clusters", lambda: connected_components(
+        verified, vertices=docs.select(id_col), id_col=id_col,
+        edge_bound=buckets["pair_bound"],
+    ))
+    return clusters, verified, buckets
+
+
+# B14 metrics: each rides its stage's own action as an Observation
+_OBSERVED = {
+    "signatures": lambda: [F.count(F.lit(1)).alias("docs"),
+                           F.sum("n_units").alias("units_total")],
+    "pairs": lambda: [F.count(F.lit(1)).alias("candidate_pairs")],
+    "verified": lambda: [F.count(F.lit(1)).alias("verified_pairs")],
+}
+
+
 def near_dup_clusters(
     docs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
@@ -106,7 +185,8 @@ def near_dup_clusters(
     text_col: str = "text",
     collect_metrics: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Run the full pipeline; returns (clusters, verified_pairs, metrics).
+    """Run the full pipeline in memory; returns (clusters, verified_pairs,
+    metrics).
 
     clusters: (doc_id, cluster_id) for every input doc (singletons included).
     verified_pairs: (a, b, jaccard).
@@ -117,148 +197,55 @@ def near_dup_clusters(
     ``metrics`` becomes a fully-collected one-row frame whose values are
     also attached as ``metrics._graft_summary`` (a plain dict).
     """
-    from pyspark.sql import Observation
-
-    obs_units = obs_pairs = obs_verified = None
-    fused = cfg.shingle_mode == "chunk" and cfg.candidates == "minhash"
+    observed: dict[str, Observation] = {}
     # every intermediate persisted below is released when this scope
     # exits: once CC has materialized its labels, or on any exception
     with scope() as keep:
-        if fused:
-            # chunk → shingle → MinHash in ONE Arrow UDF (round 7). The
-            # unfused shape also runs in one ArrowEvalPython node (Spark
-            # chains the two UDFs in one worker); fusing skips building
-            # and re-reading the intermediate chunk-hash list column, and
-            # the units observation rides the fused frame's n_units
-            # column. Bit-exact same kernels, same values.
-            from .operators.minhash import chunk_minhash_signatures
 
-            signed = chunk_minhash_signatures(
-                docs, cfg.chunker(), k=cfg.shingle_k, n_perms=cfg.n_perms,
-                bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed,
-                text_col=text_col, id_col=id_col,
-            )
-            if collect_metrics:
-                obs_units = Observation("units")
-                signed = signed.observe(
-                    obs_units,
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum("n_units").alias("units_total"),
-                )
-            signed = signed.drop("n_units")
-        else:
-            units = unit_hashes(docs, cfg, id_col, text_col)
-            if collect_metrics:
-                obs_units = Observation("units")
-                units = units.observe(
-                    obs_units,
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum(F.size("unit_hashes")).alias("units_total"),
-                )
-            if cfg.candidates != "minhash":
-                # simhash path consumes units again — avoid re-running the
-                # chunk UDF. Filled EAGERLY like every shared cache here: the
-                # minhash and simhash band tables union under ONE candidate
-                # job, so AQE submits both consumers concurrently and a cold
-                # cache would pay the per-block recompute/lock contention tax
-                # (see `signed`).
-                units = register_cache(units.persist())
-                units.count()
-            signed = minhash_signatures(
-                units, k=cfg.shingle_k, n_perms=cfg.n_perms,
-                bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col,
-            )
-        # shingle sets feed both banding and verification → materialize once,
-        # EAGERLY: downstream, AQE submits the band-table shuffle and the two
-        # size-prefilter broadcast futures concurrently, and on a cold cache
-        # those stages contend for the same uncomputed partitions (a task
-        # either recomputes a block or blocks on its cache-write lock —
-        # both burn a core slot). Measured at 800k docs/4 cores as pairs of
-        # identical ~20 s jobs where the work runs once in ~6 s. One count()
-        # fills the cache at full parallelism; every consumer then reads
-        # blocks. At 1 core the contention cannot express (tasks serialize,
-        # later stages find the blocks), so this was a pure scale-efficiency
-        # leak, not a single-core throughput bug.
-        signed = register_cache(signed.persist())
-        signed.count()
+        def materialize(name: str, build, stats=None) -> DataFrame:
+            df = build()
+            if collect_metrics and name in _OBSERVED:
+                observed[name] = Observation(name)
+                df = df.observe(observed[name], *_OBSERVED[name]())
+            if name == "signatures":
+                # shingle sets feed banding and verification: fill the
+                # cache EAGERLY, or AQE's concurrent band shuffle and
+                # size-prefilter broadcasts contend for its uncomputed
+                # blocks (measured at 800k docs/4 cores: pairs of
+                # identical ~20 s jobs for ~6 s of work)
+                df = register_cache(df.drop("n_units").persist())
+                df.count()
+            elif name == "verified":
+                # the one frame kept for the caller (small: the edge
+                # set), so post-CC consumers never recompute it from the
+                # released caches; harnesses drain it with release_all
+                # before an identical later plan could hit it
+                df = keep(df.persist())
+            return df
 
-        if cfg.candidates in ("minhash", "both"):
-            bands_df = signed.select(
-                id_col, F.posexplode("bands").alias("band_id", "band_hash")
-            )
-        else:
-            bands_df = None
-        if cfg.candidates in ("simhash", "both"):
-            from .operators.simhash import simhash64, simhash_bands
+        clusters, verified, bucket_row = run_stages(
+            docs, cfg, materialize, id_col, text_col)
+    spark = docs.sparkSession
+    if not collect_metrics:
+        return clusters, verified, bucket_metrics_frame(spark, bucket_row)
 
-            sim = simhash64(units, seed=cfg.minhash_seed, shingles_col="unit_hashes")
-            sim_bands = simhash_bands(sim, n_bands=cfg.simhash_bands_n, id_col=id_col)
-            # offset band ids so minhash and simhash buckets never collide
-            sim_bands = sim_bands.withColumn("band_id", F.col("band_id") + F.lit(1000))
-            bands_df = sim_bands if bands_df is None else bands_df.unionByName(sim_bands)
+    import json
 
-        pairs, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
-        # a local one-row frame (no job): its pair_bound caps the verified
-        # edge count, so CC can pick its driver path without a count probe
-        bucket_row = metrics.first().asDict()
-        if collect_metrics:
-            obs_pairs = Observation("pairs")
-            pairs = pairs.observe(
-                obs_pairs, F.count(F.lit(1)).alias("candidate_pairs")
-            )
-        shingled = signed.select(id_col, "shingles")
-        verified = verify_pairs(
-            pairs, shingled, threshold=cfg.threshold, id_col=id_col,
-            hub_degree_cap=cfg.verify_hub_cap,
-            hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
-            hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max,
-        )
-        if collect_metrics:
-            obs_verified = Observation("verified")
-            verified = verified.observe(
-                obs_verified, F.count(F.lit(1)).alias("verified_pairs")
-            )
-        # verified persists so post-CC consumers never recompute it from
-        # the released upstream caches; it is the one frame kept for the
-        # caller (small: the edge set). It stays registered, so harnesses
-        # drain it with release_all before a later identical plan could
-        # silently hit it (Spark's cache manager matches analyzed plans).
-        verified = keep(verified.persist())
+    import pandas as pd
 
-        clusters = connected_components(
-            verified, vertices=docs.select(id_col), id_col=id_col,
-            edge_bound=bucket_row["pair_bound"],
-        )
-    if collect_metrics:
-        import json
-
-        import pandas as pd
-
-        hist = bucket_row.pop("bucket_hist", None) or {}
-        summary = {
-            **{k: int(v) for k, v in obs_units.get.items()},
-            **{k: int(v) for k, v in obs_pairs.get.items()},
-            **{k: int(v) for k, v in obs_verified.get.items()},
-            **{k: int(v or 0) for k, v in bucket_row.items()},
-            **clusters._graft_cc_stats,
-        }
-        summary["units_per_doc"] = round(
-            summary["units_total"] / max(summary["docs"], 1), 3
-        )
-        summary["bucket_hist"] = json.dumps(
-            {str(k): int(v) for k, v in sorted(hist.items())}
-        )
-        # from pandas through Arrow: a LocalRelation, so the caller's
-        # .first() runs no job (a list-of-tuples frame is a LogicalRDD
-        # whose every .first() costs two jobs through a Python worker)
-        metrics = docs.sparkSession.createDataFrame(pd.DataFrame([summary]))
-        # read by bench.py for its pipeline metrics record
-        metrics._graft_summary = summary
+    summary = {k: int(v) for obs in observed.values() for k, v in obs.get.items()}
+    summary.update({k: int(v or 0) for k, v in bucket_row.items() if k != "bucket_hist"})
+    summary.update(clusters._graft_cc_stats)
+    summary["units_per_doc"] = round(
+        summary["units_total"] / max(summary["docs"], 1), 3
+    )
+    summary["bucket_hist"] = json.dumps(
+        {str(k): int(v) for k, v in sorted(bucket_row["bucket_hist"].items())}
+    )
+    # from pandas through Arrow: a LocalRelation, so the caller's
+    # .first() runs no job (a list-of-tuples frame is a LogicalRDD
+    # whose every .first() costs two jobs through a Python worker)
+    metrics = spark.createDataFrame(pd.DataFrame([summary]))
+    # read by bench.py for its pipeline metrics record
+    metrics._graft_summary = summary
     return clusters, verified, metrics
-
-
-def dedup_pipeline(docs: DataFrame, cfg: DedupConfig = DedupConfig(),
-                   id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Convenience: clusters only."""
-    clusters, _, _ = near_dup_clusters(docs, cfg, id_col, text_col)
-    return clusters

@@ -1,11 +1,13 @@
 """Per-stage checkpoint/resume (SURVEY.md §2.B B13).
 
 Every pipeline stage can materialize its output to parquet with a manifest
-recording (stage name, config fingerprint, row count, completion marker).
-A re-run with the same config fingerprint reuses the completed stage
-instead of recomputing — so a killed pipeline resumes idempotently from
-the last completed stage, and a config change invalidates exactly the
-stages whose inputs changed.
+recording (stage name, config fingerprint, row count, the stage's own
+statistics, completion marker). A re-run with the same config fingerprint
+reuses the completed stage instead of recomputing — so a killed pipeline
+resumes idempotently from the last completed stage, and a config change
+invalidates exactly the stages whose inputs changed. A resumed stage
+reports its stored row count and statistics, so the run needs no job to
+recover them.
 
 On a cluster the same layout maps to an Iceberg table per stage with
 snapshot metadata as the manifest; the parquet+JSON form keeps the sandbox
@@ -21,6 +23,8 @@ from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..cache import scope
 
 __all__ = ["StageCheckpoint", "CheckpointedRun"]
 
@@ -39,16 +43,17 @@ class StageCheckpoint:
     def manifest_path(self) -> Path:
         return self.root / self.stage / "_MANIFEST.json"
 
-    def is_complete(self) -> bool:
-        if not self.manifest_path.exists():
-            return False
+    def is_complete(self) -> dict | None:
+        """The manifest of a completed stage under this fingerprint."""
         try:
             manifest = json.loads(self.manifest_path.read_text())
         except (OSError, json.JSONDecodeError):
-            return False
-        return manifest.get("complete") and manifest.get("fingerprint") == self.fingerprint
+            return None
+        done = manifest.get("complete") and manifest.get("fingerprint") == self.fingerprint
+        return manifest if done else None
 
-    def write(self, df: DataFrame, partition_by: list[str] | None = None) -> dict:
+    def write(self, df: DataFrame, partition_by: list[str] | None = None,
+              stats: dict | None = None) -> dict:
         """Materialize the stage; the manifest (with the completion marker)
         is written only after the parquet commit succeeds — a crash mid-write
         leaves an incomplete stage that re-runs."""
@@ -74,6 +79,7 @@ class StageCheckpoint:
             "fingerprint": self.fingerprint,
             "rows": sum(per_file.values()),
             "partitions": per_file,
+            "stats": stats,
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "complete": True,
         }
@@ -97,12 +103,23 @@ class CheckpointedRun:
         self.fingerprint = fingerprint
         self.events: list[dict] = []
 
-    def stage(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:
+    def stage(self, name: str, build, partition_by: list[str] | None = None,
+              stats: dict | None = None) -> DataFrame:
+        """The stage's output, read back from its checkpoint: resumed if
+        complete, else ``build()`` and written. ``stats`` is a dict that
+        ``build`` fills; it is stored in the manifest and refilled from it
+        on resume."""
         ckpt = StageCheckpoint(self.root, name, self.fingerprint)
-        if ckpt.is_complete():
-            self.events.append({"stage": name, "action": "resumed"})
-            return ckpt.read(self.spark)
-        df = build()
-        manifest = ckpt.write(df, partition_by)
-        self.events.append({"stage": name, "action": "computed", "rows": manifest["rows"]})
+        manifest = ckpt.is_complete()
+        if manifest:
+            action = "resumed"
+            if stats is not None:
+                stats.update(manifest["stats"])
+        else:
+            action = "computed"
+            # the build's persisted intermediates are released once the
+            # stage is written
+            with scope():
+                manifest = ckpt.write(build(), partition_by, stats)
+        self.events.append({"stage": name, "action": action, "rows": manifest["rows"]})
         return ckpt.read(self.spark)

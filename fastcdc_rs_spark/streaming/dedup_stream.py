@@ -8,7 +8,8 @@ Two production patterns for incremental corpus ingestion:
   in the streaming checkpoint, so a restarted job (same checkpoint dir)
   keeps suppressing duplicates of everything already ingested. This is
   Structured Streaming's native stateful operator — no custom state code.
-* **Incremental band index** — each micro-batch's MinHash band keys are
+* **Incremental band index** — each micro-batch's MinHash band keys,
+  signed by the batch pipeline's own ``signatures`` step, are
   appended to a bands sink; near-dup candidate generation against the
   historical corpus is then one equi-join of the new keys with the
   accumulated index (batch or foreachBatch), the same shuffle shape as
@@ -31,8 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.portable import md5_long
-from ..operators.minhash import minhash_signatures
-from ..pipeline import DedupConfig, unit_hashes
+from ..pipeline import DedupConfig, signatures
 
 __all__ = [
     "stream_exact_dedup",
@@ -90,16 +90,12 @@ def stream_band_keys(
     """Streaming (doc_id, band_id, band_hash) rows — the incremental index.
 
     Chunking + shingles + MinHash + banding are all per-document map work
-    (the same kernel UDF as the batch path), so they stream with no state.
+    signed by ``pipeline.signatures``, the batch pipeline's own signing
+    step (in chunk mode one fused Arrow UDF), so they stream with no state.
     """
-    cfg = cfg or DedupConfig()
-    units = unit_hashes(stream_df, cfg, id_col=id_col, text_col=text_col)
-    signed = minhash_signatures(
-        units, k=cfg.shingle_k, n_perms=cfg.n_perms,
-        bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col,
-    )
     from ..functions.plan_safe import posexplode_once
 
+    signed = signatures(stream_df, cfg or DedupConfig(), id_col, text_col)
     return posexplode_once(
         signed, "bands", "band_id", "band_hash", keep=[id_col]
     ).select(id_col, "band_id", "band_hash")

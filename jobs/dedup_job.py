@@ -1,10 +1,14 @@
 """Cluster job: near-duplicate clustering with per-stage checkpoint/resume.
 
 spark-submit entry point (scripts/submit_example.sh). Reads the documents
-table, runs extraction (if `text` is absent) → signatures → candidate
-pairs → verification → connected components, checkpointing each stage so
-a killed run resumes idempotently (SURVEY.md §2.B B13), and writes
-`clusters` plus a one-row metrics summary.
+table (``doc_id`` or ``url`` id, ``text``), runs the pipeline's stage
+sequence (``pipeline.run_stages``: signatures → candidate pairs →
+verification → connected components) with every stage written through
+``CheckpointedRun.stage``, so a killed run resumes idempotently from its
+last completed stage (SURVEY.md §2.B B13), and publishes ``clusters``
+plus a one-row metrics summary. The summary comes from the stages'
+manifests and an observation on the clusters write: it costs no job of
+its own.
 
 Env / args:
   DEDUP_INPUT      input table path (parquet dir or Iceberg identifier)
@@ -24,13 +28,9 @@ import hashlib
 import json
 
 import pyspark.sql.functions as F
+from pyspark.sql import Observation
 
-from fastcdc_rs_spark.cache import scope
-from fastcdc_rs_spark.operators.components import connected_components
-from fastcdc_rs_spark.operators.lsh import candidate_pairs
-from fastcdc_rs_spark.operators.minhash import minhash_signatures
-from fastcdc_rs_spark.operators.verify import verify_pairs
-from fastcdc_rs_spark.pipeline import DedupConfig, unit_hashes
+from fastcdc_rs_spark.pipeline import DedupConfig, run_stages
 from fastcdc_rs_spark.session import spark_session
 from fastcdc_rs_spark.sources.checkpoint import CheckpointedRun
 from fastcdc_rs_spark.sources.table import get_catalog
@@ -39,8 +39,6 @@ from fastcdc_rs_spark.sources.table import get_catalog
 def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
                   catalog_kind: str = "parquet") -> dict:
     """Run the checkpointed dedup job; returns the summary dict."""
-    if cfg.candidates != "minhash":
-        raise ValueError(f"dedup job builds MinHash candidates only, not {cfg.candidates!r}")
     docs = spark.read.parquet(inp)
     id_col = "doc_id" if "doc_id" in docs.columns else "url"
 
@@ -48,51 +46,23 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
         json.dumps({"cfg": cfg.__dict__, "input": inp}, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
     run = CheckpointedRun(spark, f"{out}/stages", fingerprint)
+    clusters, _, buckets = run_stages(docs, cfg, run.stage, id_col=id_col)
 
-    signed = run.stage(
-        "signatures",
-        lambda: minhash_signatures(
-            unit_hashes(docs, cfg, id_col=id_col),
-            k=cfg.shingle_k, n_perms=cfg.n_perms,
-            bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col,
-        ),
-    )
-    bands_df = signed.select(
-        id_col, F.posexplode("bands").alias("band_id", "band_hash"),
-    )
-    # each stage's persisted intermediates are released once run.stage
-    # has written (materialized) its output
-    with scope():
-        pairs_df, metrics = candidate_pairs(bands_df, bucket_cap=cfg.bucket_cap, id_col=id_col)
-        pairs = run.stage("pairs", lambda: pairs_df)
-        m = metrics.first().asDict()
-    with scope():
-        verified = run.stage(
-            "verified",
-            lambda: verify_pairs(pairs, signed.select(id_col, "shingles"),
-                                 threshold=cfg.threshold, id_col=id_col,
-                                 hub_degree_cap=cfg.verify_hub_cap,
-                                 hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
-                                 hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max),
-        )
-    clusters = run.stage(
-        "clusters",
-        lambda: connected_components(verified, vertices=docs.select(id_col),
-                                     id_col=id_col, edge_bound=m["pair_bound"]),
-    )
     # publish through the abstract snapshot catalog (DEDUP_CATALOG=iceberg
     # swaps in the real Iceberg writer on a cluster; sources/table.py)
     catalog = get_catalog(spark, f"{out}/lake", kind=catalog_kind)
-    catalog.write(clusters, "clusters")
+    clustered = Observation("clustered")
+    catalog.write(clusters.observe(
+        clustered, F.count_if(F.col("cluster_id") != F.col(id_col)).alias("docs")
+    ), "clusters")
 
-    n_docs = docs.count()
-    n_clustered = clusters.where(F.col("cluster_id") != F.col(id_col)).count()
+    rows = {e["stage"]: e["rows"] for e in run.events}
     summary = {
         "fingerprint": fingerprint,
-        "docs": n_docs,
-        "verified_pairs": verified.count(),
-        "docs_in_nontrivial_clusters": n_clustered,
-        "bucket_metrics": m,
+        "docs": rows["signatures"],
+        "verified_pairs": rows["verified"],
+        "docs_in_nontrivial_clusters": clustered.get["docs"],
+        "bucket_metrics": buckets,
         "stages": run.events,
         "clusters_snapshots": len(catalog.snapshots("clusters")),
     }

@@ -55,24 +55,12 @@ def _small_docs(spark, tmp_path) -> str:
     return path
 
 
-@pytest.mark.parametrize("candidates", ["simhash", "both"])
-def test_dedup_job_rejects_non_minhash_candidates(spark, tmp_path, candidates):
-    # the job only builds MinHash candidates: any other choice must fail
-    # before Spark writes anything, not run MinHash silently
-    from dedup_job import run_dedup_job
-
-    from fastcdc_rs_spark.pipeline import DedupConfig
-
-    out = tmp_path / "out"
-    with pytest.raises(ValueError, match="MinHash"):
-        run_dedup_job(spark, _small_docs(spark, tmp_path), str(out),
-                      DedupConfig(candidates=candidates))
-    assert not out.exists()
-
-
 def test_dedup_job_passes_verify_ladder_config(spark, tmp_path, monkeypatch):
+    # the job runs the pipeline's stage sequence, whose verify stage must
+    # hand every ladder field to verify_pairs
     import dedup_job
 
+    from fastcdc_rs_spark import pipeline
     from fastcdc_rs_spark.pipeline import DedupConfig
 
     class Reached(Exception):
@@ -84,13 +72,142 @@ def test_dedup_job_passes_verify_ladder_config(spark, tmp_path, monkeypatch):
         seen.update(kwargs)
         raise Reached
 
-    monkeypatch.setattr(dedup_job, "verify_pairs", verify_pairs)
+    monkeypatch.setattr(pipeline, "verify_pairs", verify_pairs)
     cfg = DedupConfig(verify_hub_cap=5, verify_hub_pair_bcast_max=7,
                       verify_hub_bids_bcast_max=11)
     with pytest.raises(Reached):
         dedup_job.run_dedup_job(spark, _small_docs(spark, tmp_path), str(tmp_path / "out"), cfg)
     assert (seen["hub_degree_cap"], seen["hub_pair_bcast_max"],
             seen["hub_bids_bcast_max"]) == (5, 7, 11)
+
+
+class Killed(Exception):
+    pass
+
+
+def _kill(*args, **kwargs):
+    raise Killed
+
+
+def _patch_everywhere(monkeypatch, fn, replacement):
+    """Replace ``fn`` under its name in every project module holding it,
+    so the replacement is reached whichever module calls it."""
+    for name, mod in list(sys.modules.items()):
+        if ((name.startswith("fastcdc_rs_spark") or name == "dedup_job")
+                and getattr(mod, fn.__name__, None) is fn):
+            monkeypatch.setattr(mod, fn.__name__, replacement)
+
+
+def _corpus_docs(spark, tmp_path, n_docs=36) -> str:
+    from fastcdc_rs_spark.corpus import corpus_pandas
+
+    pdf = corpus_pandas(n_docs=n_docs, seed=3).reset_index(drop=True)
+    pdf["doc_id"] = pdf.index.astype("int64")
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(pdf[["doc_id", "text"]]).write.parquet(path)
+    return path
+
+
+def test_resumed_job_builds_no_candidates(spark, tmp_path, monkeypatch):
+    # a fully resumed run reads the pairs stage and its bucket row back
+    # from the checkpoint: it never refills the band window
+    from dedup_job import run_dedup_job
+
+    from fastcdc_rs_spark.operators.lsh import candidate_pairs
+    from fastcdc_rs_spark.pipeline import DedupConfig
+
+    inp, out = _corpus_docs(spark, tmp_path), str(tmp_path / "out")
+    s1 = run_dedup_job(spark, inp, out, DedupConfig())
+    _patch_everywhere(monkeypatch, candidate_pairs, _kill)
+    s2 = run_dedup_job(spark, inp, out, DedupConfig())
+    assert all(e["action"] == "resumed" for e in s2["stages"]), s2["stages"]
+    assert s2["bucket_metrics"] == s1["bucket_metrics"]
+    assert s1["bucket_metrics"]["buckets"] > 0
+
+
+def test_dedup_job_resumes_after_a_kill_in_each_stage(spark, tmp_path, monkeypatch):
+    # kill a run inside pairs, then verified, then clusters, then finish:
+    # each run resumes exactly the stages before the one it computes, and
+    # the finished clusters and summary equal a clean run's
+    import dedup_job
+
+    from fastcdc_rs_spark.operators.components import connected_components
+    from fastcdc_rs_spark.operators.lsh import candidate_pairs
+    from fastcdc_rs_spark.operators.verify import verify_pairs
+    from fastcdc_rs_spark.pipeline import DedupConfig
+    from fastcdc_rs_spark.sources.checkpoint import CheckpointedRun
+    from fastcdc_rs_spark.sources.table import ParquetSnapshotCatalog
+
+    runs = []
+
+    class Run(CheckpointedRun):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            runs.append(self)
+
+    monkeypatch.setattr(dedup_job, "CheckpointedRun", Run)
+    inp, out = _corpus_docs(spark, tmp_path), str(tmp_path / "out")
+    for done, op in enumerate([candidate_pairs, verify_pairs, connected_components]):
+        with monkeypatch.context() as m:
+            _patch_everywhere(m, op, _kill)
+            with pytest.raises(Killed):
+                dedup_job.run_dedup_job(spark, inp, out, DedupConfig())
+        # the stage before the killed one was computed, all earlier resumed
+        assert [e["action"] for e in runs[-1].events] == ["resumed"] * done + ["computed"]
+    final = dedup_job.run_dedup_job(spark, inp, out, DedupConfig())
+    assert [e["action"] for e in final["stages"]] == ["resumed"] * 3 + ["computed"]
+
+    clean = dedup_job.run_dedup_job(spark, inp, str(tmp_path / "clean"), DedupConfig())
+    keys = ("docs", "verified_pairs", "docs_in_nontrivial_clusters", "bucket_metrics")
+    assert {k: final[k] for k in keys} == {k: clean[k] for k in keys}
+    assert clean["docs_in_nontrivial_clusters"] > 0
+
+    def clusters(root):
+        cat = ParquetSnapshotCatalog(spark, f"{root}/lake")
+        return {(r.doc_id, r.cluster_id) for r in cat.read("clusters", 1).collect()}
+
+    assert clusters(out) == clusters(tmp_path / "clean")
+
+
+def test_job_and_stream_sign_with_one_fused_udf(spark, tmp_path, monkeypatch):
+    # the job's signatures stage and the streaming band keys sign with
+    # near_dup_clusters' plan: one ArrowEvalPython calling the fused
+    # chunk→signature UDF, never the chunk-hash UDF feeding a signature UDF
+    import re
+
+    from dedup_job import run_dedup_job
+
+    from fastcdc_rs_spark.pipeline import DedupConfig
+    from fastcdc_rs_spark.plans import executed_plan
+    from fastcdc_rs_spark.sources.checkpoint import StageCheckpoint
+    from fastcdc_rs_spark.streaming.dedup_stream import stream_band_keys
+
+    plans = {}
+
+    def write(self, df, *args, **kwargs):
+        plans["job"] = executed_plan(df)
+        raise Killed
+
+    src = _small_docs(spark, tmp_path)
+    with monkeypatch.context() as m:
+        m.setattr(StageCheckpoint, "write", write)
+        with pytest.raises(Killed):
+            run_dedup_job(spark, src, str(tmp_path / "out"), DedupConfig())
+
+    q = (
+        stream_band_keys(spark.readStream.schema("doc_id long, text string").parquet(src))
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plans["stream"] = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+
+    for name, plan in plans.items():
+        assert plan.count("ArrowEvalPython") == 1, (name, plan)
+        assert "_chunk_sig(" in plan, (name, plan)
+        assert "_hashes(" not in plan and not re.search(r"\b_sig\(", plan), (name, plan)
 
 
 def test_incremental_from_catalog_snapshot_diff(spark, tmp_path):

@@ -105,26 +105,6 @@ def test_near_clusters_recovered(spark_results, corpus):
     assert whole / total >= 0.75, f"only {whole}/{total} near clusters recovered"
 
 
-def test_simhash_candidate_mode(spark, corpus):
-    # B7 as a complete candidate generator: simhash Hamming-band buckets →
-    # pairs → exact-Jaccard verify → CC. Exact-dup clusters must be
-    # recovered (identical unit sets → identical simhash → same buckets).
-    from dataclasses import replace
-
-    cfg = replace(CFG, candidates="simhash")
-    docs = spark.createDataFrame(corpus[["doc_id", "text"]])
-    clusters, verified, _ = near_dup_clusters(docs, cfg)
-    cl = {r.doc_id: r.cluster_id for r in clusters.collect()}
-    for tc, grp in corpus[corpus.dup_kind == "exact"].groupby("true_cluster"):
-        labels = {cl[d] for d in grp.doc_id}
-        assert len(labels) == 1, f"exact cluster {tc} split under simhash: {labels}"
-    giant = corpus[corpus.dup_kind == "giant"]
-    assert len({cl[d] for d in giant.doc_id}) == 1
-    # precision: unique docs stay singletons (verification gates edges)
-    uniq = corpus[corpus.dup_kind == "unique"]
-    assert all(cl[d] == d for d in uniq.doc_id)
-
-
 def test_token_mode_near_recall(spark, corpus):
     # token 5-gram shingles: fine-grained near-dup recovery
     from dataclasses import replace

@@ -6,6 +6,8 @@ CC skips its count probe under a fitting edge bound."""
 from __future__ import annotations
 
 import itertools
+import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -189,3 +191,28 @@ def test_near_dup_clusters_job_budget(spark):
     # edge count, LogicalRDD summary) ran 27 on this corpus
     assert len(names) <= 16, names
     release_caches(verified)
+
+
+def test_dedup_job_job_budget(spark, tmp_path):
+    # The checkpointed job's summary comes from its stages' manifests and
+    # an observation on the clusters write, and a resumed run reads the
+    # pairs stage's bucket row back instead of refilling the band window.
+    # A summary count job or a rebuilt window that comes back fails here.
+    from fastcdc_rs_spark.pipeline import DedupConfig
+    from tests.test_relational import SF
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
+    from dedup_job import run_dedup_job
+
+    def run():
+        return run_dedup_job(spark, f"{SF}/documents.parquet", str(tmp_path / "out"),
+                             DedupConfig())
+
+    cold, cold_names = _jobs(spark, run)
+    resumed, resumed_names = _jobs(spark, run)
+    assert all(e["action"] == "resumed" for e in resumed["stages"])
+    assert resumed["docs"] == cold["docs"] == 500
+    # 38 and 16 when the summary counted docs, clusters and verified
+    # pairs, and a resume refilled the band window
+    assert len(cold_names) <= 32, cold_names
+    assert len(resumed_names) <= 6, resumed_names
