@@ -212,8 +212,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") in ("pipeline", "sig"):
         # scaling-evidence mode (scripts/scaling.py): the baseline metric is
         # docs/sec chunk+signature throughput; the full pipeline is timed too.
-        from fastcdc_rs_spark.pipeline import unit_hashes
-        from fastcdc_rs_spark.operators.minhash import minhash_signatures
+        from fastcdc_rs_spark.pipeline import signatures
 
         sdocs, n, n_bytes = _stage_corpus(spark, SYNTH_DOCS, int(CPUS))
         cfg = DedupConfig()
@@ -223,10 +222,7 @@ def main() -> None:
         # pays a one-time ~150 MB numpy-arena fault cost. Steady-state
         # throughput (what a long-running cluster job sees) is the honest
         # number; the warmup cost is one-time per executor lifetime.
-        sig = minhash_signatures(
-            unit_hashes(sdocs, cfg), k=cfg.shingle_k, n_perms=cfg.n_perms,
-            bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed,
-        )
+        sig = signatures(sdocs, cfg)
         _noop_write(sig)
 
         t0 = time.perf_counter()
@@ -330,7 +326,7 @@ def main() -> None:
             sdocs, DedupConfig(), collect_metrics=True
         )
         _noop_write(clusters)
-        pmetrics_box["m"] = getattr(pmetrics, "_graft_summary", None)
+        pmetrics_box["m"] = pmetrics.first().asDict()
         # drop the verified-pairs cache between reps: Spark's cache
         # manager matches identical plans, so a later rep would read
         # this rep's cached edges and report a fake warm time

@@ -3,24 +3,16 @@
 Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata. The Spark-side plumbing — schemas, Arrow batch shapes,
 ``mapInPandas`` signatures, partition-size control — is real and tested.
-Codecs: PNG, BMP, GIF, binary-PPM, and JPEG (baseline sequential AND
-progressive) images decode for REAL via stdlib-only decoders
-(``_decode_png``: zlib + filter reconstruction; ``_decode_bmp``: BI_RGB
-8/24/32-bit incl. palette and top-down rows; ``_decode_gif``: full LZW +
-interlace + transparency, first frame; ``_decode_ppm``: P6;
-``_decode_jpeg``: T.81 Huffman, restart intervals, subsampling,
-multi-scan sequential, progressive spectral selection + successive
-approximation (Annex G), batched numpy IDCT; ``_decode_tiff``:
-baseline strips, both byte orders, LZW incl. horizontal predictor,
-PackBits, gray/RGB/palette), WAV / AIFF-AIFC / Sun-AU
-(incl. G.711 mu-law) / FLAC (``_decode_flac``: RFC 9639 — Rice + Rice2
-partitions, fixed + LPC predictors, stereo decorrelation, CRC-8/16
-verified) audio via stdlib-only decoders, and MJPEG video frames
-segment for REAL via a JPEG structure walker (``_jpeg_end``); other
-image formats use PIL when importable; remaining paths (arithmetic/
-lossless JPEG, WebP stills without PIL, lossy-compressed audio —
-mp3/ogg-class) are STUBBED with deterministic fakes, clearly
-marked below.
+Codecs: PNG, BMP, GIF and binary-PPM images decode for REAL via
+stdlib-only decoders (``_decode_png``: zlib + filter reconstruction;
+``_decode_bmp``: BI_RGB 8/24/32-bit incl. palette and top-down rows;
+``_decode_gif``: full LZW + interlace + transparency, first frame;
+``_decode_ppm``: P6), WAV / AIFF-AIFC / Sun-AU (incl. G.711 mu-law)
+audio via stdlib-only decoders, and MJPEG video frames segment for REAL
+via a JPEG structure walker (``_jpeg_end``); other image formats use
+PIL when importable; remaining paths (JPEG and TIFF stills without PIL,
+FLAC and lossy-compressed audio — mp3/ogg-class) are STUBBED with
+deterministic fakes, clearly marked below.
 Swapping in PIL/libsndfile/ffmpeg is a one-function change that does
 not alter any DataFrame contract.
 """
@@ -404,653 +396,12 @@ def _decode_ppm(payload: bytes) -> np.ndarray:
     ).reshape(h, w, 3)
 
 
-# --- baseline JPEG (ITU-T T.81 sequential DCT, Huffman) ------------------
-#
-# Pure stdlib+numpy: marker walk shares its structure knowledge with
-# ``_jpeg_end`` below, entropy decoding is per-coefficient Python (test
-# scale), dequant + de-zigzag + IDCT are batched numpy over all blocks.
-# Supported: SOF0/SOF1, 8-bit, 1- or 3-component (grayscale / YCbCr),
-# integer subsampling ratios (4:4:4, 4:2:2, 4:2:0, 4:1:1...), restart
-# intervals, multi-table DQT/DHT segments. Progressive (SOF2),
-# arithmetic coding, 12-bit, and CMYK raise ValueError (PIL fallback
-# when importable, else the error propagates per ``on_error`` policy).
-
-_JPEG_ZIGZAG = np.array([
-     0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13,  6,  7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-], dtype=np.int64)
-
-# orthonormal 8x8 DCT-II basis: f = C.T @ F @ C inverts F = C @ f @ C.T
-_JPEG_IDCT_C = np.array([
-    [(np.sqrt(1 / 8) if u == 0 else 0.5)
-     * np.cos((2 * x + 1) * u * np.pi / 16) for x in range(8)]
-    for u in range(8)
-])
-
-
-def _jpeg_huff(bits: bytes, vals: bytes) -> dict[tuple[int, int], int]:
-    """(code_length, code) -> symbol map per T.81 Annex C code assignment."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-class _JpegBits:
-    """MSB-first bit reader over entropy segments (stuffing pre-stripped);
-    ``next_segment`` realigns at a restart boundary."""
-
-    def __init__(self, segments: list[bytes]):
-        self._segments = segments
-        self._si = 0
-        self._data = segments[0] if segments else b""
-        self._pos = 0       # byte index
-        self._bit = 0       # bits consumed of current byte
-
-    def next_segment(self) -> None:
-        self._si += 1
-        if self._si >= len(self._segments):
-            raise ValueError("truncated JPEG: missing restart segment")
-        self._data = self._segments[self._si]
-        self._pos = 0
-        self._bit = 0
-
-    def read_bit(self) -> int:
-        if self._pos >= len(self._data):
-            raise ValueError("truncated JPEG entropy data")
-        b = (self._data[self._pos] >> (7 - self._bit)) & 1
-        self._bit += 1
-        if self._bit == 8:
-            self._bit = 0
-            self._pos += 1
-        return b
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def huff(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map t-bit magnitude to signed coefficient."""
-    return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def _jpeg_split_entropy(payload: bytes, p: int) -> tuple[list[bytes], int]:
-    """Entropy-coded segments from ``p`` to the next non-RST marker,
-    stripping 0xFF00 stuffing and splitting at restart markers; returns
-    (segments, index of the terminating marker's 0xFF — or EOF)."""
-    n = len(payload)
-    segments: list[bytes] = []
-    cur = bytearray()
-    while p < n:
-        b = payload[p]
-        if b != 0xFF:
-            cur.append(b)
-            p += 1
-            continue
-        nxt = payload[p + 1] if p + 1 < n else 0xD9
-        if nxt == 0x00:
-            cur.append(0xFF)
-            p += 2
-        elif nxt == 0xFF:                   # fill byte before a marker
-            p += 1
-        elif 0xD0 <= nxt <= 0xD7:           # RSTn
-            segments.append(bytes(cur))
-            cur = bytearray()
-            p += 2
-        else:                               # EOI or any real marker ends scan
-            break
-    segments.append(bytes(cur))
-    return segments, p
-
-
-def _jpeg_block_full(reader: "_JpegBits", row, dct: dict, act: dict) -> int:
-    """Baseline-sequential block: DC diff + AC 1..63 (T.81 F.2.2) into the
-    zigzag-ordered ``row``; returns the DC diff (caller keeps the
-    per-component predictor and stores ``row[0]``)."""
-    t = reader.huff(dct)
-    diff = _jpeg_extend(reader.read(t), t) if t else 0
-    k = 1
-    while k < 64:
-        rs = reader.huff(act)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r == 15:                     # ZRL: sixteen zeros
-                k += 16
-                continue
-            break                           # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC index overflow")
-        row[k] = _jpeg_extend(reader.read(s), s)
-        k += 1
-    return diff
-
-
-def _jpeg_ac_first(reader: "_JpegBits", row, ss: int, se: int, al: int,
-                   act: dict, eobrun: int) -> int:
-    """Progressive AC first pass over one block (T.81 G.1.2.2): spectral
-    band ss..se at reduced precision (coefficients << al). Returns the
-    updated end-of-band run (blocks whose band is entirely zero)."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = reader.huff(act)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r == 15:
-                k += 16
-                continue
-            eobrun = (1 << r) - 1           # EOBn: this block + (2^r-1+bits) more
-            if r:
-                eobrun += reader.read(r)
-            return eobrun
-        k += r
-        if k > se:
-            raise ValueError("JPEG AC index overflow")
-        row[k] = _jpeg_extend(reader.read(s), s) << al
-        k += 1
-    return 0
-
-
-def _jpeg_ac_refine(reader: "_JpegBits", row, ss: int, se: int, al: int,
-                    act: dict, eobrun: int) -> int:
-    """Progressive AC refinement pass over one block (T.81 G.1.2.3):
-    every already-nonzero coefficient in the band consumes a correction
-    bit; zero-history runs and newly significant ±(1<<al) coefficients
-    interleave with those corrections. Returns the updated EOB run."""
-    p1 = 1 << al
-    m1 = -p1
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = reader.huff(act)
-            r, s = rs >> 4, rs & 15
-            val = 0
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r         # includes THIS block's remainder
-                    if r:
-                        eobrun += reader.read(r)
-                    break
-                # r == 15: ZRL — skip 16 zero-history coefficients
-            else:
-                if s != 1:
-                    raise ValueError("bad JPEG AC refinement magnitude")
-                val = p1 if reader.read_bit() else m1
-            # advance over r zero-history coefficients, correcting the
-            # nonzero-history ones passed along the way
-            while k <= se:
-                coef = int(row[k])
-                if coef != 0:
-                    if reader.read_bit() and (coef & p1) == 0:
-                        row[k] = coef + (p1 if coef >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if s:
-                if k > se:
-                    raise ValueError("JPEG AC refinement overflow")
-                row[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:                      # rest of band: corrections only
-            coef = int(row[k])
-            if coef != 0:
-                if reader.read_bit() and (coef & p1) == 0:
-                    row[k] = coef + (p1 if coef >= 0 else m1)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _jpeg_decode_scan(reader: "_JpegBits", sc, ss: int, se: int, ah: int,
-                      al: int, hdc: dict, hac: dict, ri: int, comps, blocks,
-                      mcux: int, mcuy: int, comp_bw, comp_bh,
-                      baseline: bool) -> None:
-    """Decode one scan into the zigzag coefficient arrays: a full
-    baseline-sequential scan (interleaved or single-component), or one
-    progressive pass (DC/AC × first/refinement, T.81 Annex G)."""
-    need_dc = baseline or (ss == 0 and ah == 0)
-    need_ac = baseline or ss > 0
-    for ci, dc_id, ac_id in sc:
-        # ValueError, not KeyError: undefined table ids must route through
-        # _decode_image's PIL fallback / on_error policy (round-5 ADVICE)
-        if need_dc and dc_id not in hdc:
-            raise ValueError(f"JPEG scan uses undefined DC table {dc_id}")
-        if need_ac and ac_id not in hac:
-            raise ValueError(f"JPEG scan uses undefined AC table {ac_id}")
-    if not baseline and ss == 0 and se != 0:
-        raise ValueError("bad progressive DC scan band")      # T.81 G.1: Se=0
-    if not baseline and ss > 0 and len(sc) != 1:
-        raise ValueError("interleaved progressive AC scan")  # illegal, T.81 G.1
-    interleaved = len(sc) > 1
-    if interleaved:
-        units = mcuy * mcux                  # MCU order
-    else:
-        # non-interleaved: raster order over the component's OWN block
-        # grid (T.81 A.2.2); one restart unit per block
-        units = comp_bw[sc[0][0]] * comp_bh[sc[0][0]]
-    preds = {ci: 0 for ci, _, _ in sc}
-    eobrun = 0
-    for u in range(units):
-        if ri and u and u % ri == 0:
-            reader.next_segment()
-            preds = {ci: 0 for ci, _, _ in sc}
-            eobrun = 0
-        if interleaved:
-            for ci, dc_id, ac_id in sc:
-                _, ch, cv, _tq = comps[ci]
-                base = u * ch * cv
-                for bi in range(ch * cv):
-                    row = blocks[ci][base + bi]
-                    if baseline:
-                        preds[ci] += _jpeg_block_full(reader, row,
-                                                      hdc[dc_id], hac[ac_id])
-                        row[0] = preds[ci]
-                    elif ah == 0:           # DC first: diffs at Al precision
-                        t = reader.huff(hdc[dc_id])
-                        preds[ci] += _jpeg_extend(reader.read(t), t) if t else 0
-                        row[0] = preds[ci] << al
-                    elif reader.read_bit():  # DC refinement: one bit/block
-                        row[0] |= 1 << al
-        else:
-            ci, dc_id, ac_id = sc[0]
-            _, ch, cv, _tq = comps[ci]
-            by, bx = divmod(u, comp_bw[ci])
-            # map the component-raster block to its MCU-ordered slot
-            my, ry = divmod(by, cv)
-            mx, rx = divmod(bx, ch)
-            row = blocks[ci][(my * mcux + mx) * ch * cv + ry * ch + rx]
-            if baseline:
-                preds[ci] += _jpeg_block_full(reader, row, hdc[dc_id], hac[ac_id])
-                row[0] = preds[ci]
-            elif ss == 0:
-                if ah == 0:
-                    t = reader.huff(hdc[dc_id])
-                    preds[ci] += _jpeg_extend(reader.read(t), t) if t else 0
-                    row[0] = preds[ci] << al
-                elif reader.read_bit():
-                    row[0] |= 1 << al
-            elif ah == 0:
-                eobrun = _jpeg_ac_first(reader, row, ss, se, al,
-                                        hac[ac_id], eobrun)
-            else:
-                eobrun = _jpeg_ac_refine(reader, row, ss, se, al,
-                                         hac[ac_id], eobrun)
-
-
-def _decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline-sequential AND progressive JPEG -> HxWx3 uint8 (stdlib +
-    numpy only): T.81 Huffman decoding, restart intervals, subsampling,
-    multi-scan baseline files (non-interleaved scans decode for real, in
-    component-raster block order), progressive spectral selection +
-    successive approximation (Annex G), batched numpy IDCT.
-
-    Reference parity note: the reference repo (nlfiedler/fastcdc-rs) has
-    no media codecs; this exists for the training-data pipeline's
-    multimodal columns (SURVEY.md §2.C), same contract as
-    ``_decode_png``/``_decode_bmp``/``_decode_gif``."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    n = len(payload)
-    qt: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    restart_interval = 0
-    frame = None          # (height, width, comps) from SOF0/1/2
-    progressive = False
-    # (scan_comps, ss, se, ah, al, entropy segments, DC/AC table
-    # snapshots, restart interval) per SOS — tables may be redefined
-    # between scans, so each scan captures the state it was coded under
-    scans: list[tuple] = []
-    j = 2
-    while j + 1 < n:
-        if payload[j] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        m = payload[j + 1]
-        if m == 0xFF:                       # fill byte
-            j += 1
-            continue
-        if m == 0xD9:
-            break
-        if m == 0x01 or 0xD0 <= m <= 0xD7:  # bare markers
-            j += 2
-            continue
-        if j + 3 >= n:
-            raise ValueError("truncated JPEG segment")
-        seglen = (payload[j + 2] << 8) | payload[j + 3]
-        if seglen < 2 or j + 2 + seglen > n:
-            raise ValueError("bad or truncated JPEG segment")
-        seg = payload[j + 4:j + 2 + seglen]
-        if m == 0xDB:                       # DQT: one or more tables
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 15
-                p += 1
-                if pq:                      # 16-bit precision
-                    tbl = np.frombuffer(seg, ">u2", 64, p).astype(np.int64)
-                    p += 128
-                else:
-                    tbl = np.frombuffer(seg, np.uint8, 64, p).astype(np.int64)
-                    p += 64
-                qt[tq] = tbl
-        elif m in (0xC0, 0xC1, 0xC2):       # SOF0/1 sequential, SOF2 progressive
-            if frame is not None:
-                raise ValueError("multiple JPEG frames")
-            progressive = m == 0xC2
-            if seg[0] != 8:
-                raise ValueError("only 8-bit JPEG supported")
-            h = (seg[1] << 8) | seg[2]
-            w = (seg[3] << 8) | seg[4]
-            nc = seg[5]
-            if nc not in (1, 3):
-                raise ValueError(f"unsupported JPEG component count {nc}")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = seg[6 + 3 * c], seg[7 + 3 * c], seg[8 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (h, w, comps)
-        elif m in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                   0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                "unsupported JPEG mode (lossless/arithmetic/hierarchical)")
-        elif m == 0xC4:                     # DHT: one or more tables
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                bits = seg[p + 1:p + 17]
-                nv = sum(bits)
-                vals = seg[p + 17:p + 17 + nv]
-                (huff_ac if tc else huff_dc)[th] = _jpeg_huff(bits, vals)
-                p += 17 + nv
-        elif m == 0xDD:                     # DRI
-            restart_interval = (seg[0] << 8) | seg[1]
-        elif m == 0xDA:                     # SOS (possibly one of many)
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = seg[0]
-            ids = [c[0] for c in frame[2]]
-            sc = []
-            for s in range(ns):
-                cid, tt = seg[1 + 2 * s], seg[2 + 2 * s]
-                if cid not in ids:
-                    raise ValueError("JPEG scan references unknown component")
-                sc.append((ids.index(cid), tt >> 4, tt & 15))
-            ss_, se_ = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah_, al_ = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-            segments, j = _jpeg_split_entropy(payload, j + 2 + seglen)
-            scans.append((sc, ss_, se_, ah_, al_, segments,
-                          dict(huff_dc), dict(huff_ac), restart_interval))
-            continue
-        j += 2 + seglen
-    if frame is None or not scans:
-        raise ValueError("JPEG missing SOF/SOS")
-
-    height, width, comps = frame
-    for _cid, _ch, _cv, tq in comps:
-        # ValueError, not KeyError at dequant time (round-5 ADVICE)
-        if tq not in qt:
-            raise ValueError(f"JPEG frame uses undefined quant table {tq}")
-    # every component must be coded by at least one scan — a truncated
-    # multi-scan file previously decoded the first scan and silently
-    # emitted zero chroma (round-5 ADVICE)
-    covered = {ci for scan in scans for ci, _d, _a in scan[0]}
-    if covered != set(range(len(comps))):
-        raise ValueError("JPEG scans do not cover every component")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    # quantized coefficients per component: (mcuy*mcux*v*h, 64) zigzag
-    blocks = [np.zeros((mcuy * mcux * c[1] * c[2], 64), np.int64)
-              for c in comps]
-    # per-component block grid for non-interleaved scans (T.81 A.2.2:
-    # ceil(ceil(dim*f/fmax)/8) == ceil(dim*f/(8*fmax)))
-    comp_bw = [-(-(width * c[1]) // (8 * hmax)) for c in comps]
-    comp_bh = [-(-(height * c[2]) // (8 * vmax)) for c in comps]
-    for sc, ss_, se_, ah_, al_, segments, hdc, hac, ri in scans:
-        if not progressive:
-            # sequential scans always code the full band at full precision;
-            # encoders write Ss/Se/Ah/Al = 0/63/0/0 but some mux garbage
-            ss_, se_, ah_, al_ = 0, 63, 0, 0
-        _jpeg_decode_scan(_JpegBits(segments), sc, ss_, se_, ah_, al_,
-                          hdc, hac, ri, comps, blocks, mcux, mcuy,
-                          comp_bw, comp_bh, baseline=not progressive)
-
-    planes = []
-    for ci, (cid, ch, cv, tq) in enumerate(comps):
-        deq = blocks[ci] * qt[tq][None, :]
-        nat = np.zeros_like(deq)
-        nat[:, _JPEG_ZIGZAG] = deq          # de-zigzag
-        blk = nat.reshape(-1, 8, 8).astype(np.float64)
-        pix = np.einsum("ux,nuv,vy->nxy", _JPEG_IDCT_C, blk, _JPEG_IDCT_C)
-        pix = np.clip(np.round(pix + 128.0), 0, 255)
-        plane = (
-            pix.reshape(mcuy, mcux, cv, ch, 8, 8)
-            .transpose(0, 2, 4, 1, 3, 5)
-            .reshape(mcuy * cv * 8, mcux * ch * 8)
-        )
-        if hmax % ch or vmax % cv:
-            raise ValueError("non-integer JPEG subsampling ratio")
-        plane = np.repeat(np.repeat(plane, vmax // cv, 0), hmax // ch, 1)
-        planes.append(plane[:height, :width])
-
-    if len(planes) == 1:
-        y = planes[0].astype(np.uint8)
-        return np.stack([y, y, y], axis=-1)
-    y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r, g, b], -1)), 0, 255).astype(np.uint8)
-
-
-def _tiff_lzw(data: bytes, expected: int) -> bytes:
-    """TIFF-variant LZW: MSB-first bit packing, CLEAR=256/EOI=257, and the
-    TIFF6 "early change" — the encoder widens the code size at table size
-    2^w - 1, so the decoder (one append behind the encoder's assignments)
-    widens at 2^w - 2. GIF's LZW (``_gif_lzw``) is LSB-first without the
-    early change, hence a separate implementation."""
-    out = bytearray()
-    pos, nbits = 0, len(data) * 8
-    width = 9
-    table: list[bytes] = []
-    prev = None
-    while pos + width <= nbits:
-        chunk = int.from_bytes(data[pos >> 3:(pos + width + 7) >> 3], "big")
-        code = (chunk >> ((-(pos + width)) % 8)) & ((1 << width) - 1)
-        pos += width
-        if code == 256:     # CLEAR
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width, prev = 9, None
-            continue
-        if code == 257:     # EOI
-            break
-        if not table:
-            raise ValueError("TIFF LZW stream missing clear code")
-        if prev is None:
-            if code > 255:
-                raise ValueError("bad TIFF LZW first code")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):   # KwKwK
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("bad TIFF LZW code")
-        out += entry
-        prev = entry
-        # TIFF6 "early change": widen one code EARLY — when the table
-        # reaches (1<<width)-1, not (1<<width) — matching libtiff /
-        # javax.imageio writers (round-6 ADVICE: the old -2 rule widened
-        # one code too early and broke on externally-encoded streams)
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1
-        if len(out) >= expected:
-            break
-    if len(out) < expected:
-        raise ValueError("short TIFF LZW strip")
-    return bytes(out[:expected])
-
-
-def _tiff_packbits(data: bytes, expected: int) -> bytes:
-    """PackBits RLE (TIFF compression 32773): n<128 -> n+1 literals,
-    n>128 -> next byte repeated 257-n times, 128 -> no-op."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n and len(out) < expected:
-        c = data[i]
-        i += 1
-        if c < 128:
-            if i + c + 1 > n:
-                raise ValueError("truncated TIFF PackBits literal run")
-            out += data[i:i + c + 1]
-            i += c + 1
-        elif c > 128:
-            if i >= n:
-                raise ValueError("truncated TIFF PackBits repeat run")
-            out += bytes([data[i]]) * (257 - c)
-            i += 1
-    if len(out) < expected:
-        raise ValueError("short TIFF PackBits strip")
-    return bytes(out[:expected])
-
-
-def _decode_tiff(payload: bytes) -> np.ndarray:
-    """REAL stdlib+numpy baseline-TIFF decode to HxWx3 uint8.
-
-    Both byte orders, first IFD, strip organization (multi-strip via
-    RowsPerStrip), compressions 1 (none) / 5 (LZW incl. the horizontal
-    predictor) / 32773 (PackBits), photometric 0/1 (gray, WhiteIsZero
-    inverted), 2 (RGB; extra samples like alpha dropped), 3 (palette via
-    the 16-bit ColorMap), 8-bit samples, chunky planar layout. Tiled,
-    planar-separate, deep-sample, and other-compression files raise
-    ``ValueError`` for the PIL fallback / on_error policy."""
-    import struct
-
-    if payload[:4] not in (b"II*\x00", b"MM\x00*"):
-        raise ValueError("not a TIFF")
-    bo = "<" if payload[:2] == b"II" else ">"
-    if len(payload) < 8:
-        raise ValueError("truncated TIFF header")
-    (ifd_off,) = struct.unpack_from(bo + "I", payload, 4)
-    try:
-        (cnt,) = struct.unpack_from(bo + "H", payload, ifd_off)
-        ents: dict[int, tuple[int, int, int]] = {}
-        for i in range(cnt):
-            tag, typ, n = struct.unpack_from(
-                bo + "HHI", payload, ifd_off + 2 + 12 * i
-            )
-            ents[tag] = (typ, n, ifd_off + 2 + 12 * i + 8)
-    except struct.error:
-        raise ValueError("truncated TIFF IFD") from None
-
-    sizes = {1: ("B", 1), 3: ("H", 2), 4: ("I", 4)}
-
-    def vals(tag: int, default: list[int] | None = None) -> list[int]:
-        if tag not in ents:
-            if default is None:
-                raise ValueError(f"TIFF missing required tag {tag}")
-            return default
-        typ, n, vpos = ents[tag]
-        if typ not in sizes:
-            raise ValueError(f"unsupported TIFF tag type {typ}")
-        fmt, unit = sizes[typ]
-        try:
-            if unit * n > 4:
-                (vpos,) = struct.unpack_from(bo + "I", payload, vpos)
-            return list(struct.unpack_from(bo + str(n) + fmt, payload, vpos))
-        except struct.error:
-            raise ValueError("truncated TIFF tag values") from None
-
-    if 322 in ents or 323 in ents:
-        raise ValueError("tiled TIFF unsupported")
-    w, h = vals(256)[0], vals(257)[0]
-    if w <= 0 or h <= 0:
-        raise ValueError("bad TIFF geometry")
-    spp = vals(277, [1])[0]
-    if any(b != 8 for b in vals(258, [1] * spp)):
-        raise ValueError("unsupported TIFF bit depth")
-    comp = vals(259, [1])[0]
-    photo = vals(262)[0]
-    offs, counts = vals(273), vals(279)
-    rps = min(vals(278, [h])[0], h)
-    if vals(284, [1])[0] != 1:
-        raise ValueError("unsupported TIFF planar configuration")
-    pred = vals(317, [1])[0]
-    if len(offs) != len(counts) or len(offs) != (h + rps - 1) // rps:
-        raise ValueError("TIFF strip bookkeeping mismatch")
-    raw = bytearray()
-    for i, (o, c) in enumerate(zip(offs, counts)):
-        rows = min(rps, h - i * rps)
-        expected = rows * w * spp
-        strip = payload[o:o + c]
-        if len(strip) < c:
-            raise ValueError("truncated TIFF strip")
-        if comp == 1:
-            if len(strip) < expected:
-                raise ValueError("short TIFF strip")
-            raw += strip[:expected]
-        elif comp == 5:
-            raw += _tiff_lzw(strip, expected)
-        elif comp == 32773:
-            raw += _tiff_packbits(strip, expected)
-        else:
-            raise ValueError(f"unsupported TIFF compression {comp}")
-    img = np.frombuffer(bytes(raw), np.uint8).reshape(h, w, spp)
-    if pred == 2:
-        # horizontal differencing: per-row per-channel cumsum mod 256
-        img = np.add.accumulate(img, axis=1, dtype=np.uint8)
-    elif pred != 1:
-        raise ValueError(f"unsupported TIFF predictor {pred}")
-    if photo in (0, 1):
-        g = img[:, :, 0]
-        if photo == 0:
-            g = 255 - g
-        return np.stack([g, g, g], axis=-1)
-    if photo == 2:
-        if spp < 3:
-            raise ValueError("TIFF RGB with fewer than 3 samples")
-        return np.ascontiguousarray(img[:, :, :3])
-    if photo == 3:
-        cmap = vals(320)
-        if len(cmap) < 3 * 256:
-            raise ValueError("short TIFF color map")
-        cm = (np.asarray(cmap, np.uint16).reshape(3, -1) >> 8).astype(np.uint8)
-        idx = img[:, :, 0]
-        return np.stack([cm[0][idx], cm[1][idx], cm[2][idx]], axis=-1)
-    raise ValueError(f"unsupported TIFF photometric {photo}")
-
-
 def _decode_image(payload: bytes) -> np.ndarray:
     """Decode to an HxWx3 uint8 array.
 
     PNG/BMP/GIF/PPM payloads decode for REAL via the stdlib-only
-    decoders above (no image library in this container); other formats use PIL
-    when importable (real deployments); otherwise — or when
+    decoders above; other formats (JPEG, TIFF, WebP, ...) use PIL when
+    importable (real deployments); otherwise — or when
     ``SPARK_GRAFT_FAKE_MEDIA=1`` forces it (tests, this container) — a
     clearly-marked deterministic STUB derived from the payload bytes so
     the downstream plumbing (shapes, hashing, batching) is exercised
@@ -1083,22 +434,6 @@ def _decode_image(payload: bytes) -> np.ndarray:
         except ValueError:
             if not _HAVE_PIL:
                 raise  # corrupt PPM and no fallback decoder
-    if payload[:2] == b"\xff\xd8" and os.environ.get(
-        "SPARK_GRAFT_FAKE_MEDIA"
-    ) != "1":
-        try:
-            return _decode_jpeg(payload)
-        except ValueError:
-            if not _HAVE_PIL:
-                raise  # arithmetic/CMYK/corrupt JPEG and no fallback
-    if payload[:4] in (b"II*\x00", b"MM\x00*") and os.environ.get(
-        "SPARK_GRAFT_FAKE_MEDIA"
-    ) != "1":
-        try:
-            return _decode_tiff(payload)
-        except ValueError:
-            if not _HAVE_PIL:
-                raise  # tiled/deep/exotic TIFF and no fallback decoder
     if _HAVE_PIL and os.environ.get("SPARK_GRAFT_FAKE_MEDIA") != "1":
         img = _PILImage.open(io.BytesIO(payload)).convert("RGB")
         return np.asarray(img, dtype=np.uint8)
@@ -1327,360 +662,19 @@ def _decode_au(payload: bytes) -> tuple[np.ndarray, int]:
     return x.astype(np.float32), sr
 
 
-# --- FLAC (RFC 9639 / xiph.org format spec) --------------------------------
-
-
-class _FlacBits:
-    """MSB-first bit reader over immutable bytes (FLAC is big-endian,
-    bit-packed). Positions are BIT offsets; frame boundaries are
-    byte-aligned so ``pos >> 3`` recovers byte offsets for CRC spans."""
-
-    __slots__ = ("d", "pos")
-
-    def __init__(self, d: bytes, pos_bits: int = 0):
-        self.d = d
-        self.pos = pos_bits
-
-    def u(self, n: int) -> int:
-        p = self.pos
-        end = p + n
-        if end > len(self.d) * 8:
-            raise ValueError("truncated FLAC stream")
-        v = int.from_bytes(self.d[p >> 3 : (end + 7) >> 3], "big")
-        self.pos = end
-        return (v >> ((-end) % 8)) & ((1 << n) - 1)
-
-    def s(self, n: int) -> int:
-        """n-bit two's-complement signed (n == 0 -> 0, used by escaped
-        zero-bit residual partitions)."""
-        if n == 0:
-            return 0
-        v = self.u(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def unary(self) -> int:
-        """Count 0 bits up to the terminating 1 bit (Rice quotients,
-        wasted-bits counts)."""
-        d, p = self.d, self.pos
-        nbits = len(d) * 8
-        q = 0
-        while True:
-            if p >= nbits:
-                raise ValueError("truncated FLAC stream")
-            rem = 8 - (p & 7)
-            chunk = d[p >> 3] & ((1 << rem) - 1)
-            if chunk == 0:
-                q += rem
-                p += rem
-            else:
-                lead = rem - chunk.bit_length()
-                self.pos = p + lead + 1
-                return q + lead
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
-def _flac_crc_table(poly: int, bits: int) -> list[int]:
-    top, mask = 1 << (bits - 1), (1 << bits) - 1
-    tbl = []
-    for i in range(256):
-        c = i << (bits - 8)
-        for _ in range(8):
-            c = ((c << 1) ^ poly) if c & top else (c << 1)
-        tbl.append(c & mask)
-    return tbl
-
-
-_FLAC_CRC8_TBL = _flac_crc_table(0x07, 8)       # x^8 + x^2 + x + 1
-_FLAC_CRC16_TBL = _flac_crc_table(0x8005, 16)   # x^16 + x^15 + x^2 + 1
-
-
-def _flac_crc8(data: bytes) -> int:
-    c = 0
-    for b in data:
-        c = _FLAC_CRC8_TBL[c ^ b]
-    return c
-
-
-def _flac_crc16(data: bytes) -> int:
-    c = 0
-    for b in data:
-        c = _FLAC_CRC16_TBL[(c >> 8) ^ b] ^ ((c << 8) & 0xFFFF)
-    return c
-
-
-def _flac_utf8_num(br: _FlacBits) -> int:
-    """FLAC's UTF-8-style extended coded number (frame/sample index; up to
-    36 bits -> 7 bytes, one past real UTF-8)."""
-    b0 = br.u(8)
-    if b0 < 0x80:
-        return b0
-    n1, m = 0, 0x80
-    while b0 & m:
-        n1 += 1
-        m >>= 1
-    if n1 == 1 or n1 > 7:
-        raise ValueError("bad FLAC coded number")
-    v = b0 & (0x7F >> n1)
-    for _ in range(n1 - 1):
-        c = br.u(8)
-        if c & 0xC0 != 0x80:
-            raise ValueError("bad FLAC coded number continuation")
-        v = (v << 6) | (c & 0x3F)
-    return v
-
-
-def _flac_residual(br: _FlacBits, blocksize: int, order: int) -> np.ndarray:
-    """Rice-partitioned residual (both methods: RICE 4-bit and RICE2 5-bit
-    params), escaped raw partitions included. Returns blocksize-order
-    prediction residuals."""
-    method = br.u(2)
-    if method > 1:
-        raise ValueError("reserved FLAC residual method")
-    pbits = 4 if method == 0 else 5
-    esc = (1 << pbits) - 1
-    po = br.u(4)
-    nparts = 1 << po
-    if blocksize % nparts:
-        raise ValueError("FLAC partition order does not divide blocksize")
-    out = np.empty(blocksize - order, np.int64)
-    idx = 0
-    for p in range(nparts):
-        cnt = blocksize // nparts - (order if p == 0 else 0)
-        if cnt < 0:
-            raise ValueError("FLAC predictor order exceeds first partition")
-        param = br.u(pbits)
-        if param == esc:
-            nb = br.u(5)
-            for _ in range(cnt):
-                out[idx] = br.s(nb)
-                idx += 1
-        else:
-            for _ in range(cnt):
-                q = br.unary()
-                v = (q << param) | br.u(param)
-                out[idx] = (v >> 1) ^ -(v & 1)   # zigzag -> signed
-                idx += 1
-    return out
-
-
-def _flac_subframe(br: _FlacBits, blocksize: int, bps: int) -> np.ndarray:
-    """One subframe -> int64 samples. CONSTANT / VERBATIM / FIXED(0-4) /
-    LPC(1-32), wasted-bits shift included."""
-    if br.u(1):
-        raise ValueError("bad FLAC subframe padding bit")
-    t = br.u(6)
-    wasted = 0
-    if br.u(1):
-        wasted = br.unary() + 1
-        bps -= wasted
-        if bps <= 0:
-            raise ValueError("FLAC wasted bits exceed sample size")
-    if t == 0:       # CONSTANT
-        x = np.full(blocksize, br.s(bps), np.int64)
-    elif t == 1:     # VERBATIM
-        x = np.fromiter(
-            (br.s(bps) for _ in range(blocksize)), np.int64, blocksize
-        )
-    elif 8 <= t <= 12:   # FIXED, order t-8
-        order = t - 8
-        warm = [br.s(bps) for _ in range(order)]
-        res = _flac_residual(br, blocksize, order)
-        x = np.empty(blocksize, np.int64)
-        x[:order] = warm
-        if order == 0:
-            x[:] = res
-        elif order == 1:
-            # x[i] = r[i] + x[i-1]: a cumulative sum seeded by the warm-up
-            x[1:] = warm[0] + np.cumsum(res)
-        else:
-            xi = [int(w) for w in warm]
-            coef = {2: (2, -1), 3: (3, -3, 1), 4: (4, -6, 4, -1)}[order]
-            for i in range(order, blocksize):
-                acc = int(res[i - order])
-                for j, c in enumerate(coef):
-                    acc += c * xi[i - 1 - j]
-                xi.append(acc)
-            x = np.array(xi, np.int64)
-    elif t >= 32:    # LPC, order t-31
-        order = t - 31
-        warm = [br.s(bps) for _ in range(order)]
-        prec = br.u(4)
-        if prec == 15:
-            raise ValueError("invalid FLAC LPC precision")
-        prec += 1
-        shift = br.s(5)
-        if shift < 0:
-            raise ValueError("negative FLAC LPC shift")
-        coefs = [br.s(prec) for _ in range(order)]
-        res = _flac_residual(br, blocksize, order)
-        xi = [int(w) for w in warm]
-        for i in range(order, blocksize):
-            acc = 0
-            for j in range(order):
-                acc += coefs[j] * xi[i - 1 - j]
-            xi.append(int(res[i - order]) + (acc >> shift))
-        x = np.array(xi, np.int64)
-    else:
-        raise ValueError("reserved FLAC subframe type")
-    if wasted:
-        x = x << wasted
-    return x
-
-
-_FLAC_SR_TABLE = (0, 88200, 176400, 192000, 8000, 16000, 22050, 24000,
-                  32000, 44100, 48000, 96000)
-_FLAC_BPS_TABLE = {0: None, 1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
-
-
-def _decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
-    """REAL stdlib+numpy FLAC decode -> (mono float32 in [-1,1], rate).
-
-    Full native-FLAC feature set for 1-8 channels: STREAMINFO + skipped
-    metadata blocks, fixed/variable blocking, all block-size/sample-rate/
-    sample-size header codes, UTF-8-coded frame numbers, CONSTANT /
-    VERBATIM / FIXED(0-4) / LPC(1-32) subframes, Rice + Rice2 residual
-    partitions with escaped raw partitions, wasted bits, and the three
-    stereo decorrelation modes (left/side, right/side, mid/side).
-    CRC-8 (header) and CRC-16 (frame) are verified; mismatches raise
-    ``ValueError`` like every other decoder here.
-
-    Unlike the JPEG/µ-law decoders there is no independent codec in this
-    container to cross-check against (no flac/ffmpeg/soundfile); the
-    goldens pin spec-constructed fixtures plus an independent bitwise-CRC
-    test encoder (tests/test_operators_misc.py), documented there.
-    """
-    if payload[:4] != b"fLaC":
-        raise ValueError("not a FLAC payload")
-    pos, n = 4, len(payload)
-    streaminfo = None
-    last = False
-    while not last:
-        if pos + 4 > n:
-            raise ValueError("truncated FLAC metadata")
-        last = bool(payload[pos] & 0x80)
-        btype = payload[pos] & 0x7F
-        blen = int.from_bytes(payload[pos + 1:pos + 4], "big")
-        if pos + 4 + blen > n:
-            raise ValueError("truncated FLAC metadata block")
-        if btype == 0:
-            streaminfo = payload[pos + 4:pos + 4 + blen]
-        elif btype == 127:
-            raise ValueError("invalid FLAC metadata block type")
-        pos += 4 + blen
-    if streaminfo is None or len(streaminfo) < 34:
-        raise ValueError("FLAC missing STREAMINFO")
-    si = _FlacBits(streaminfo)
-    si.u(16); si.u(16); si.u(24); si.u(24)
-    sr0 = si.u(20)
-    nch0 = si.u(3) + 1
-    bps0 = si.u(5) + 1
-    total = si.u(36)
-    if sr0 == 0:
-        raise ValueError("zero FLAC sample rate")
-
-    br = _FlacBits(payload, pos * 8)
-    parts: list[np.ndarray] = []
-    rate = sr0
-    got = 0
-    while (br.pos >> 3) < n and (total == 0 or got < total):
-        fstart = br.pos >> 3
-        if br.u(14) != 0x3FFE:
-            raise ValueError("bad FLAC frame sync")
-        if br.u(1):
-            raise ValueError("reserved FLAC frame bit")
-        br.u(1)                       # blocking strategy (fixed/variable)
-        bs_code = br.u(4)
-        sr_code = br.u(4)
-        ch_code = br.u(4)
-        ss_code = br.u(3)
-        if br.u(1):
-            raise ValueError("reserved FLAC frame bit")
-        _flac_utf8_num(br)            # frame/sample index (ordering unused)
-        if bs_code == 0:
-            raise ValueError("reserved FLAC block size code")
-        elif bs_code == 1:
-            bs = 192
-        elif bs_code <= 5:
-            bs = 576 << (bs_code - 2)
-        elif bs_code == 6:
-            bs = br.u(8) + 1
-        elif bs_code == 7:
-            bs = br.u(16) + 1
-        else:
-            bs = 256 << (bs_code - 8)
-        if sr_code == 0:
-            rate = sr0
-        elif sr_code <= 11:
-            rate = _FLAC_SR_TABLE[sr_code]
-        elif sr_code == 12:
-            rate = br.u(8) * 1000
-        elif sr_code == 13:
-            rate = br.u(16)
-        elif sr_code == 14:
-            rate = br.u(16) * 10
-        else:
-            raise ValueError("invalid FLAC sample rate code")
-        if ss_code not in _FLAC_BPS_TABLE:
-            raise ValueError("reserved FLAC sample size code")
-        bps = _FLAC_BPS_TABLE[ss_code] or bps0
-        hdr_end = br.pos >> 3
-        if _flac_crc8(payload[fstart:hdr_end]) != br.u(8):
-            raise ValueError("FLAC frame header CRC mismatch")
-        if ch_code <= 7:
-            nch = ch_code + 1
-        elif ch_code <= 10:
-            nch = 2
-        else:
-            raise ValueError("reserved FLAC channel assignment")
-        chans = []
-        for c in range(nch):
-            side = (
-                (ch_code == 8 and c == 1)
-                or (ch_code == 9 and c == 0)
-                or (ch_code == 10 and c == 1)
-            )
-            chans.append(_flac_subframe(br, bs, bps + (1 if side else 0)))
-        br.align()
-        crc_pos = br.pos >> 3
-        crc = br.u(16)
-        if _flac_crc16(payload[fstart:crc_pos]) != crc:
-            raise ValueError("FLAC frame CRC mismatch")
-        if ch_code == 8:      # left/side: R = L - S
-            chans = [chans[0], chans[0] - chans[1]]
-        elif ch_code == 9:    # right/side: L = R + S
-            chans = [chans[1] + chans[0], chans[1]]
-        elif ch_code == 10:   # mid/side
-            s = chans[1]
-            m = (chans[0] << 1) | (s & 1)
-            chans = [(m + s) >> 1, (m - s) >> 1]
-        frame = np.stack(chans).mean(axis=0) / float(1 << (bps - 1))
-        parts.append(frame.astype(np.float32))
-        got += bs
-    if not parts:
-        raise ValueError("FLAC stream has no frames")
-    x = np.concatenate(parts)
-    if total and x.size > total:
-        x = x[:total]
-    return x.astype(np.float32), rate
-
-
 def _decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
     """(mono float32 samples in [-1, 1], sample_rate).
 
     REAL decode for RIFF/WAVE payloads via stdlib ``wave`` (8/16-bit PCM,
     multi-channel averaged to mono), AIFF/AIFC via the hand-rolled IFF
-    walk above, Sun .au (µ-law + linear PCM), and native FLAC via the
-    full Rice/LPC decoder above — no external codec library needed.
-    Arbitrary other bytes fall back to a clearly-marked deterministic
-    STUB (raw little-endian int16 PCM at 16 kHz) so the batching/schema
-    plumbing is exercised for codecs this container lacks (mp3/ogg
-    etc.). Raises on empty payload like a real decoder."""
+    walk above, and Sun .au (µ-law + linear PCM) — no external codec
+    library needed. Arbitrary other bytes (FLAC, mp3, ogg, ...) fall
+    back to a clearly-marked deterministic STUB (raw little-endian int16
+    PCM at 16 kHz) so the batching/schema plumbing is exercised for
+    codecs without a decoder here. Raises on empty payload like a real
+    decoder."""
     if not payload:
         raise ValueError("empty audio payload")
-    if payload[:4] == b"fLaC":
-        return _decode_flac(payload)
     if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
         return _decode_aiff(payload)
     if payload[:4] == b".snd":

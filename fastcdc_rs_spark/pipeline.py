@@ -194,8 +194,8 @@ def near_dup_clusters(
     ``collect_metrics=True`` the B14 metrics ride the pipeline's own
     actions via ``Observation`` nodes (docs, units/doc, candidate and
     verified pair counts — zero extra passes) plus CC round counters, and
-    ``metrics`` becomes a fully-collected one-row frame whose values are
-    also attached as ``metrics._graft_summary`` (a plain dict).
+    ``metrics`` becomes a fully-collected one-row frame (a LocalRelation:
+    its ``.first()`` runs no job).
     """
     observed: dict[str, Observation] = {}
     # every intermediate persisted below is released when this scope
@@ -245,7 +245,4 @@ def near_dup_clusters(
     # from pandas through Arrow: a LocalRelation, so the caller's
     # .first() runs no job (a list-of-tuples frame is a LogicalRDD
     # whose every .first() costs two jobs through a Python worker)
-    metrics = spark.createDataFrame(pd.DataFrame([summary]))
-    # read by bench.py for its pipeline metrics record
-    metrics._graft_summary = summary
-    return clusters, verified, metrics
+    return clusters, verified, spark.createDataFrame(pd.DataFrame([summary]))

@@ -9,6 +9,13 @@ invalidates exactly the stages whose inputs changed. A resumed stage
 reports its stored row count and statistics, so the run needs no job to
 recover them.
 
+The manifest also describes the stage's data, so nothing is read back to
+learn it: ``rows`` is an ``Observation`` on the write itself,
+``partitions`` (rows per committed part file) comes from the parquet
+footers on the driver, and ``schema`` is the frame's schema, which the
+stage is reopened with instead of inferring it. A manifest without a
+schema is not a completed stage.
+
 On a cluster the same layout maps to an Iceberg table per stage with
 snapshot metadata as the manifest; the parquet+JSON form keeps the sandbox
 dependency-free while exercising identical semantics (atomic completion
@@ -22,7 +29,10 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 from ..cache import scope
 
@@ -49,36 +59,37 @@ class StageCheckpoint:
             manifest = json.loads(self.manifest_path.read_text())
         except (OSError, json.JSONDecodeError):
             return None
-        done = manifest.get("complete") and manifest.get("fingerprint") == self.fingerprint
+        done = (manifest.get("complete") and "schema" in manifest
+                and manifest.get("fingerprint") == self.fingerprint)
         return manifest if done else None
 
-    def write(self, df: DataFrame, partition_by: list[str] | None = None,
-              stats: dict | None = None) -> dict:
+    def write(self, df: DataFrame, stats: dict | None = None) -> dict:
         """Materialize the stage; the manifest (with the completion marker)
         is written only after the parquet commit succeeds — a crash mid-write
         leaves an incomplete stage that re-runs."""
         self.data_path.parent.mkdir(parents=True, exist_ok=True)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(self.data_path))
-        # per-partition lineage: row count of every written part file, so a
+        written = Observation()
+        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite").parquet(str(self.data_path))
+        rows = written.get["rows"]
+        # per-file lineage: row count of every committed part file, so a
         # resumed/audited run can verify the stage file-by-file (and a
         # cluster deployment maps this 1:1 onto Iceberg manifest entries)
-        import pyspark.sql.functions as F
-
-        written = df.sparkSession.read.parquet(str(self.data_path))
         per_file = {
-            r["file"].rsplit("/", 1)[-1]: r["rows"]
-            for r in written.groupBy(
-                F.input_file_name().alias("file")
-            ).agg(F.count(F.lit(1)).alias("rows")).collect()
+            p.name: pq.read_metadata(p).num_rows
+            for p in sorted(self.data_path.glob("*.parquet"))
         }
+        if sum(per_file.values()) != rows:
+            raise RuntimeError(
+                f"stage {self.stage!r}: part files hold {sum(per_file.values())} "
+                f"rows, the write produced {rows}"
+            )
         manifest = {
             "stage": self.stage,
             "fingerprint": self.fingerprint,
-            "rows": sum(per_file.values()),
+            "rows": rows,
             "partitions": per_file,
+            "schema": df.schema.json(),
             "stats": stats,
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "complete": True,
@@ -86,8 +97,9 @@ class StageCheckpoint:
         self.manifest_path.write_text(json.dumps(manifest, indent=2))
         return manifest
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(str(self.data_path))
+    def read(self, spark: SparkSession, manifest: dict) -> DataFrame:
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        return spark.read.schema(schema).parquet(str(self.data_path))
 
 
 class CheckpointedRun:
@@ -103,8 +115,7 @@ class CheckpointedRun:
         self.fingerprint = fingerprint
         self.events: list[dict] = []
 
-    def stage(self, name: str, build, partition_by: list[str] | None = None,
-              stats: dict | None = None) -> DataFrame:
+    def stage(self, name: str, build, stats: dict | None = None) -> DataFrame:
         """The stage's output, read back from its checkpoint: resumed if
         complete, else ``build()`` and written. ``stats`` is a dict that
         ``build`` fills; it is stored in the manifest and refilled from it
@@ -120,6 +131,6 @@ class CheckpointedRun:
             # the build's persisted intermediates are released once the
             # stage is written
             with scope():
-                manifest = ckpt.write(build(), partition_by, stats)
+                manifest = ckpt.write(build(), stats)
         self.events.append({"stage": name, "action": action, "rows": manifest["rows"]})
-        return ckpt.read(self.spark)
+        return ckpt.read(self.spark, manifest)

@@ -20,8 +20,6 @@ ALLOWED_WRITES = {
         "perfbench/workloads.py counts hub pairs in the _deg table (verify.hub_pairs)",
     ("fastcdc_rs_spark/operators/components.py", "_graft_cc_stats"):
         "near_dup_clusters' summary and perfbench's components.rounds",
-    ("fastcdc_rs_spark/pipeline.py", "_graft_summary"):
-        "bench.py's pipeline metrics record",
 }
 _ATTR_FUNCS = {"getattr": "read", "hasattr": "read",
                "setattr": "write", "delattr": "write"}

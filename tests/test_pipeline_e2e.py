@@ -137,7 +137,7 @@ def test_pipeline_metrics_collection(spark):
     clusters, verified, metrics = near_dup_clusters(
         docs, DedupConfig(), collect_metrics=True
     )
-    s = metrics._graft_summary
+    s = metrics.first().asDict()
     assert s["docs"] == 150
     assert s["units_total"] > 0 and s["units_per_doc"] > 0
     assert s["candidate_pairs"] >= s["verified_pairs"] >= 0
@@ -148,8 +148,38 @@ def test_pipeline_metrics_collection(spark):
     assert s["cc_sym_edges"] >= 0
     hist = _json.loads(s["bucket_hist"])  # JSON log2-histogram
     assert sum(hist.values()) == s["buckets"]
-    # the one-row DataFrame mirror matches the dict
-    row = metrics.first().asDict()
-    assert row["docs"] == 150 and row["candidate_pairs"] == s["candidate_pairs"]
     # observation count equals the actual frame
     assert verified.count() == s["verified_pairs"]
+
+
+def test_hostile_input_through_near_dup_clusters(spark):
+    # NULL, empty and whitespace-only texts, one page over 500x chunk_max
+    # and 200 copies of one page (above bucket_cap, so its buckets emit
+    # star pairs) run through the whole engine; candidates, verified
+    # pairs and clusters equal the oracle's on the same bytes (NULL is
+    # the empty text there)
+    import numpy as np
+
+    cfg = DedupConfig()
+    pdf = corpus_pandas(n_docs=150, seed=9).reset_index(drop=True)
+    rng = np.random.default_rng(7)
+    words = ["".join(chr(97 + c) for c in rng.integers(0, 26, n))
+             for n in rng.integers(2, 10, 3000)]
+    long_page = " ".join(rng.choice(words, 100_000))
+    assert len(long_page) > 500 * cfg.chunk_max
+    texts = (list(pdf.text) + [None, None, "", "", "   ", "\t\n "]
+             + [long_page] + [pdf.text[0]] * (4 * cfg.bucket_cap))
+    ids = list(range(len(texts)))
+    docs = spark.createDataFrame(list(zip(ids, texts)), "doc_id long, text string")
+
+    clusters, verified, metrics = near_dup_clusters(docs, cfg, collect_metrics=True)
+    got_clusters = {r.doc_id: r.cluster_id for r in clusters.collect()}
+    got_pairs = {(r.a, r.b) for r in verified.collect()}
+    m = metrics.first().asDict()
+
+    candidates, pairs, want_clusters = oracle_pipeline(
+        ids, [t if t is not None else "" for t in texts], cfg)
+    assert m["capped_buckets"] > 0
+    assert m["candidate_pairs"] == len(candidates)
+    assert got_pairs == pairs
+    assert got_clusters == want_clusters

@@ -213,6 +213,7 @@ def test_dedup_job_job_budget(spark, tmp_path):
     assert all(e["action"] == "resumed" for e in resumed["stages"])
     assert resumed["docs"] == cold["docs"] == 500
     # 38 and 16 when the summary counted docs, clusters and verified
-    # pairs, and a resume refilled the band window
-    assert len(cold_names) <= 32, cold_names
-    assert len(resumed_names) <= 6, resumed_names
+    # pairs, and a resume refilled the band window; 32 and 6 when every
+    # stage was read back to infer its schema and count its part files
+    assert len(cold_names) <= 16, cold_names
+    assert len(resumed_names) <= 2, resumed_names
