@@ -26,7 +26,7 @@ import re
 import numpy as np
 import pandas as pd
 
-__all__ = ["generate_corpus", "corpus_pandas", "extract_text_bytes", "DUP_KINDS"]
+__all__ = ["corpus_pandas", "extract_text_bytes", "DUP_KINDS"]
 
 _VOCAB = np.array(
     [
@@ -230,13 +230,3 @@ def corpus_pandas(n_docs: int = 2000, seed: int = 42,
     df = pd.DataFrame(rows[:n_docs])
     return df
 
-
-def generate_corpus(spark, n_docs: int = 2000, seed: int = 42, mean_words: int = 400,
-                    with_truth: bool = False):
-    """Corpus as a Spark DataFrame matching the input_hint schema
-    (plus truth columns when ``with_truth``)."""
-    pdf = corpus_pandas(n_docs, seed, mean_words)
-    if not with_truth:
-        pdf = pdf.drop(columns=["dup_kind", "true_cluster"])
-    sdf = spark.createDataFrame(pdf)
-    return sdf

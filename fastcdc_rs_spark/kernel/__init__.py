@@ -9,7 +9,6 @@ from .fastcdc import (
     MINIMUM_MIN,
     ChunkerConfig,
     chunk_bytes,
-    chunk_sizes,
     cut,
     default_config,
     logarithm2,
@@ -28,7 +27,6 @@ __all__ = [
     "MINIMUM_MIN",
     "ChunkerConfig",
     "chunk_bytes",
-    "chunk_sizes",
     "cut",
     "default_config",
     "gear_with_seed",

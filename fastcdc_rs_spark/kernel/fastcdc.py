@@ -53,7 +53,6 @@ __all__ = [
     "MINIMUM_MIN",
     "ChunkerConfig",
     "chunk_bytes",
-    "chunk_sizes",
     "cut",
     "logarithm2",
 ]
@@ -228,7 +227,3 @@ def chunk_bytes(data: bytes | bytearray | memoryview | np.ndarray,
         remaining -= cutpoint
     return out
 
-
-def chunk_sizes(data: bytes | np.ndarray, cfg: ChunkerConfig) -> list[int]:
-    """Chunk lengths only — convenience for tests/benches."""
-    return [length for _, _, length in chunk_bytes(data, cfg)]

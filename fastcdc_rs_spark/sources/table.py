@@ -5,9 +5,7 @@ pipeline writes stage outputs back as table snapshots: atomic commits,
 snapshot isolation, time travel, and copy-on-write partition overwrites
 (idempotent resume = re-running a partition replaces exactly that
 partition). ``ParquetSnapshotCatalog`` implements those semantics on bare
-parquet + a JSON commit log, so the sandbox (no Iceberg runtime jar)
-exercises the identical contract; ``IcebergCatalog`` is the thin wrapper
-a cluster deployment swaps in.
+parquet + a JSON commit log.
 
 Layout per table (all data files immutable once committed):
 
@@ -24,18 +22,6 @@ serialize on an O_EXCL lock file around the log read-modify-replace
 (the sandbox analog of Iceberg's optimistic commit protocol), so racing
 commits both land with unique snapshot ids instead of one silently
 losing its update.
-
-Cluster swap (documented, not executed here — the runtime jar is not in
-this sandbox)::
-
-    spark = (SparkSession.builder
-        .config("spark.sql.catalog.lake", "org.apache.iceberg.spark.SparkCatalog")
-        .config("spark.sql.catalog.lake.type", "hadoop")
-        .config("spark.sql.catalog.lake.warehouse", "s3://bucket/warehouse")
-        .config("spark.sql.extensions",
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions")
-        .getOrCreate())
-    catalog = IcebergCatalog(spark, "lake.db")
 """
 
 from __future__ import annotations
@@ -50,7 +36,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["ParquetSnapshotCatalog", "IcebergCatalog", "get_catalog"]
+__all__ = ["ParquetSnapshotCatalog"]
 
 
 class ParquetSnapshotCatalog:
@@ -366,99 +352,3 @@ class ParquetSnapshotCatalog:
                             parent.rmdir()
         return removed_ids
 
-
-class IcebergCatalog:
-    """Same contract over a real Iceberg catalog (cluster deployments).
-
-    Requires the iceberg-spark-runtime jar and catalog configs (module
-    docstring); raises immediately if the catalog is not configured so
-    misconfiguration fails loudly rather than writing bare parquet.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str):
-        self.spark = spark
-        self.namespace = namespace
-        catalog = namespace.split(".", 1)[0]
-        if spark.conf.get(f"spark.sql.catalog.{catalog}", None) is None:
-            raise RuntimeError(
-                f"Iceberg catalog {catalog!r} not configured; see "
-                "fastcdc_rs_spark/sources/table.py docstring for the stanza"
-            )
-
-    def _ident(self, table: str) -> str:
-        return f"{self.namespace}.{table}"
-
-    def write(self, df: DataFrame, table: str, partition_by: str | None = None) -> dict:
-        w = df.writeTo(self._ident(table))
-        if partition_by:
-            w = w.partitionedBy(F.col(partition_by))
-        w.createOrReplace()
-        return {"op": "overwrite_table"}
-
-    def overwrite_partitions(self, df: DataFrame, table: str, partition_col: str) -> dict:
-        df.writeTo(self._ident(table)).overwritePartitions()
-        return {"op": "overwrite_partitions"}
-
-    def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
-        r = self.spark.read
-        if snapshot_id is not None:
-            r = r.option("snapshot-id", snapshot_id)
-        return r.format("iceberg").load(self._ident(table))
-
-    def snapshots(self, table: str) -> list[dict]:
-        return [
-            r.asDict()
-            for r in self.spark.read.format("iceberg")
-            .load(f"{self._ident(table)}.snapshots")
-            .collect()
-        ]
-
-    def read_changes(
-        self, table: str, from_snapshot_id: int,
-        to_snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Incremental scan. CAVEAT (Iceberg semantics, unlike the parquet
-        twin): ``start-snapshot-id`` incremental reads support only
-        APPEND snapshots — a range crossing a replace/overwrite snapshot
-        (what ``write``/``overwrite_partitions`` produce) makes the
-        source throw. For overwrite-aware diffs on a real cluster, build
-        a changelog view instead::
-
-            CALL <cat>.system.create_changelog_view(
-              table => '<ident>',
-              options => map('start-snapshot-id','<from>',
-                             'end-snapshot-id','<to>'))
-
-        and read the `_change_type` column; append-only ingestion tables
-        (the common CC-crawl shape) can use this method directly."""
-        r = (
-            self.spark.read.format("iceberg")
-            .option("start-snapshot-id", from_snapshot_id)
-        )
-        if to_snapshot_id is not None:
-            r = r.option("end-snapshot-id", to_snapshot_id)
-        return r.load(self._ident(table))
-
-    def expire_snapshots(self, table: str, keep_last: int = 1) -> list:
-        """``older_than`` must be set explicitly: without it Iceberg's
-        default cutoff (now - 5 days) silently keeps every recent
-        snapshot and ``retain_last`` alone expires nothing. Returns the
-        procedure's result rows (counts), not ids — Iceberg does not
-        report which snapshot ids were dropped."""
-        rows = self.spark.sql(
-            f"CALL {self.namespace.split('.', 1)[0]}.system.expire_snapshots"
-            f"(table => '{self._ident(table)}', "
-            f"older_than => TIMESTAMP '9999-12-31 00:00:00', "
-            f"retain_last => {keep_last})"
-        ).collect()
-        return [r.asDict() for r in rows]
-
-
-def get_catalog(spark: SparkSession, root_or_namespace: str, kind: str = "parquet"):
-    """``kind='parquet'`` → sandbox snapshot catalog; ``'iceberg'`` → real
-    catalog (cluster). Jobs take this as config so the swap is one flag."""
-    if kind == "parquet":
-        return ParquetSnapshotCatalog(spark, root_or_namespace)
-    if kind == "iceberg":
-        return IcebergCatalog(spark, root_or_namespace)
-    raise ValueError(f"unknown catalog kind {kind!r}")

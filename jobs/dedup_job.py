@@ -11,7 +11,7 @@ manifests and an observation on the clusters write: it costs no job of
 its own.
 
 Env / args:
-  DEDUP_INPUT      input table path (parquet dir or Iceberg identifier)
+  DEDUP_INPUT      input table path (parquet dir)
   DEDUP_OUTPUT     output root (stages + clusters written under it)
   DEDUP_CONFIG     optional JSON overriding DedupConfig fields
 """
@@ -33,11 +33,10 @@ from pyspark.sql import Observation
 from fastcdc_rs_spark.pipeline import DedupConfig, run_stages
 from fastcdc_rs_spark.session import spark_session
 from fastcdc_rs_spark.sources.checkpoint import CheckpointedRun
-from fastcdc_rs_spark.sources.table import get_catalog
+from fastcdc_rs_spark.sources.table import ParquetSnapshotCatalog
 
 
-def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
-                  catalog_kind: str = "parquet") -> dict:
+def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig) -> dict:
     """Run the checkpointed dedup job; returns the summary dict."""
     docs = spark.read.parquet(inp)
     id_col = "doc_id" if "doc_id" in docs.columns else "url"
@@ -48,9 +47,7 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
     run = CheckpointedRun(spark, f"{out}/stages", fingerprint)
     clusters, _, buckets = run_stages(docs, cfg, run.stage, id_col=id_col)
 
-    # publish through the abstract snapshot catalog (DEDUP_CATALOG=iceberg
-    # swaps in the real Iceberg writer on a cluster; sources/table.py)
-    catalog = get_catalog(spark, f"{out}/lake", kind=catalog_kind)
+    catalog = ParquetSnapshotCatalog(spark, f"{out}/lake")
     clustered = Observation("clustered")
     catalog.write(clusters.observe(
         clustered, F.count_if(F.col("cluster_id") != F.col(id_col)).alias("docs")
@@ -77,10 +74,7 @@ def main() -> int:
     overrides = json.loads(os.environ.get("DEDUP_CONFIG", "{}"))
     cfg = DedupConfig(**overrides)
     spark = spark_session(app="fastcdc-dedup-job")
-    summary = run_dedup_job(
-        spark, inp, out, cfg,
-        catalog_kind=os.environ.get("DEDUP_CATALOG", "parquet"),
-    )
+    summary = run_dedup_job(spark, inp, out, cfg)
     print(json.dumps(summary, default=str))
     spark.stop()
     return 0

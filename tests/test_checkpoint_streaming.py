@@ -87,6 +87,40 @@ def test_streaming_exact_dedup_state_across_restarts(spark, tmp_path):
     assert len(out2) == 3
 
 
+def test_streaming_exact_dedup_hostile_input_matches_batch(spark, tmp_path):
+    """NULL, empty and whitespace-only texts, a ~600 KB page and 200 copies
+    of one page split across two waves: the stream keeps exactly the
+    hashes that batch ``dedup_flags`` marks as not duplicate."""
+    from fastcdc_rs_spark.corpus import corpus_pandas
+    from fastcdc_rs_spark.functions.portable import md5_long
+    from fastcdc_rs_spark.operators.dedup import dedup_flags
+    from fastcdc_rs_spark.streaming.dedup_stream import start_exact_dedup_stream
+
+    pages = list(dict.fromkeys(corpus_pandas(n_docs=60, seed=11).text))
+    huge = (" ".join(pages) * 4)[:600_000]
+    wave1 = [None, "", "   ", "\t\n", huge] + [pages[0]] * 120 + pages[1:40]
+    wave2 = [None, "", " \n ", huge] + [pages[0]] * 80 + pages[30:]
+    schema = "doc_id long, text string"
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+    rows = list(enumerate(wave1 + wave2))
+    waves = [spark.createDataFrame(w, schema)
+             for w in (rows[:len(wave1)], rows[len(wave1):])]
+    for wave in waves:
+        wave.write.mode("append").parquet(src)
+        start_exact_dedup_stream(spark, src, sink, ckpt, wave.schema
+                                 ).awaitTermination()
+
+    got = [r.text_hash for r in spark.read.parquet(sink).collect()]
+    docs = waves[0].unionByName(waves[1])
+    want = [r.text_hash for r in dedup_flags(docs)
+            .join(docs.select("doc_id", md5_long("text").alias("text_hash")),
+                  "doc_id")
+            .where(~F.col("is_duplicate")).collect()]
+    assert len(got) == len(set(got)) and len(want) == len(set(want))
+    assert set(got) == set(want)
+    assert None in set(got)  # NULL texts keep one row, as in batch
+
+
 def test_streaming_band_keys_match_batch(spark, tmp_path):
     """Streaming band keys == batch band keys for the same docs."""
     from fastcdc_rs_spark.pipeline import DedupConfig, unit_hashes

@@ -22,9 +22,6 @@ ALLOWLIST = {
     f"{PKG}.kernel.v2016": "the crate's v2016 variant, pinned by the golden tests",
     f"{PKG}.kernel.stream": "the crate's StreamCDC, pinned by stream-equals-memory tests",
     f"{PKG}.plans.quality": "physical-plan assertions that the tests import",
-    f"{PKG}.operators.multimodal": "no caller; its second deletion step "
-                                   "(PNG/BMP/GIF/PPM, WAV/AIFF/AU, "
-                                   "frame_sample) is ROADMAP item 6(a)",
 }
 
 

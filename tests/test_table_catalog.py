@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from fastcdc_rs_spark.sources.table import ParquetSnapshotCatalog, get_catalog
+from fastcdc_rs_spark.sources.table import ParquetSnapshotCatalog
 
 
 def _rows(df):
@@ -59,7 +59,7 @@ def test_uncommitted_data_invisible(spark, tmp_path):
 
 
 def test_unpartitioned_guard_and_missing_table(spark, tmp_path):
-    cat = get_catalog(spark, str(tmp_path / "lake"))
+    cat = ParquetSnapshotCatalog(spark, str(tmp_path / "lake"))
     with pytest.raises(FileNotFoundError):
         cat.read("nope")
     df = spark.createDataFrame([(1, "a")], "p int, v string")
@@ -126,13 +126,6 @@ def test_expire_snapshots_retention(spark, tmp_path):
     )
     assert cat.snapshots("t")[-1]["snapshot_id"] == 4
     assert _rows(cat.read("t")) == [(0, "D"), (1, "B"), (2, "C")]
-
-
-def test_iceberg_catalog_requires_config(spark):
-    from fastcdc_rs_spark.sources.table import IcebergCatalog
-
-    with pytest.raises(RuntimeError, match="not configured"):
-        IcebergCatalog(spark, "lake.db")
 
 
 def test_null_partition_value_roundtrips(spark, tmp_path):
@@ -420,82 +413,3 @@ def test_reader_pinned_to_snapshot_survives_compaction(spark, tmp_path):
     cat.expire_snapshots("t", keep_last=1)
     with pytest.raises(Exception):
         pinned.collect()
-
-
-# ---------------------------------------------------------------------------
-# IcebergCatalog end-to-end smoke — auto-skipped without the runtime jar.
-#
-# HOW TO ENABLE: drop iceberg-spark-runtime-4.0_2.13-<ver>.jar (or the
-# matching Spark/Scala variant) into pyspark's jars/ dir or $SPARK_HOME/jars
-# and rerun; the test self-detects it. CALL-procedure coverage
-# (expire_snapshots) additionally needs the session built with
-# spark.sql.extensions=...IcebergSparkSessionExtensions (a builder-time
-# config), so it is exercised only when those extensions are present.
-# ---------------------------------------------------------------------------
-
-
-def _iceberg_jar_present() -> bool:
-    import glob
-
-    dirs = []
-    try:
-        import pyspark
-
-        dirs.append(os.path.join(os.path.dirname(pyspark.__file__), "jars"))
-    except ImportError:
-        pass
-    if os.environ.get("SPARK_HOME"):
-        dirs.append(os.path.join(os.environ["SPARK_HOME"], "jars"))
-    dirs.append(os.path.expanduser("~/.ivy2/jars"))
-    return any(
-        glob.glob(os.path.join(d, "iceberg-spark-runtime*.jar")) for d in dirs
-    )
-
-
-@pytest.mark.skipif(
-    not _iceberg_jar_present(),
-    reason="iceberg-spark-runtime jar not present (see comment above to enable)",
-)
-def test_iceberg_catalog_end_to_end(spark, tmp_path):
-    """The real-catalog wrapper validated against an actual Iceberg
-    runtime: create/overwrite, snapshot listing, time travel, append +
-    incremental read_changes, and (extensions permitting) expire. Runs
-    the day the environment gains the jar with zero new work; the
-    sandbox contract itself is covered by the ParquetSnapshotCatalog
-    tests above (same API)."""
-    from fastcdc_rs_spark.sources.table import IcebergCatalog
-
-    # catalogs resolve lazily at first use, so a runtime conf is enough —
-    # no session rebuild needed for plain reads/writes
-    wh = str(tmp_path / "wh")
-    spark.conf.set(
-        "spark.sql.catalog.icesmoke", "org.apache.iceberg.spark.SparkCatalog"
-    )
-    spark.conf.set("spark.sql.catalog.icesmoke.type", "hadoop")
-    spark.conf.set("spark.sql.catalog.icesmoke.warehouse", wh)
-    cat = get_catalog(spark, "icesmoke.db", kind="iceberg")
-    assert isinstance(cat, IcebergCatalog)
-
-    df1 = spark.range(3).selectExpr(
-        "id as doc_id", "concat('t', id) as text", "cast(id % 2 as int) as p"
-    )
-    cat.write(df1, "docs", partition_by="p")
-    snaps = cat.snapshots("docs")
-    assert len(snaps) == 1 and "snapshot_id" in snaps[0]
-    s0 = snaps[0]["snapshot_id"]
-    assert cat.read("docs").count() == 3
-
-    # append-only commit -> incremental scan sees exactly the new rows
-    spark.range(3, 5).selectExpr(
-        "id as doc_id", "concat('t', id) as text", "cast(id % 2 as int) as p"
-    ).writeTo("icesmoke.db.docs").append()
-    changed = cat.read_changes("docs", from_snapshot_id=s0)
-    assert sorted(r.doc_id for r in changed.collect()) == [3, 4]
-    # time travel: the pre-append snapshot still reads 3 rows
-    assert cat.read("docs", snapshot_id=s0).count() == 3
-    assert cat.read("docs").count() == 5
-
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    if "IcebergSparkSessionExtensions" in ext:
-        cat.expire_snapshots("docs", keep_last=1)
-        assert len(cat.snapshots("docs")) == 1
