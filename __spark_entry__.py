@@ -652,8 +652,8 @@ def q_simhash_hamming_pairs(spark, sf):
     # B7 end-to-end, oracle-checked: 4 x 15-bit Hamming bands over the
     # 60-bit SQL simhash (pigeonhole: distance <= 3 docs agree on >= 1
     # band), bucket equi-join for candidates, exact bit_count(XOR)
-    # verification <= 3. Same shape as the production kernel path
-    # (simhash_bands + hamming_distance_expr), twinned in DuckDB.
+    # verification <= 3. Bands and distance are inline JVM expressions,
+    # twinned in DuckDB.
     from fastcdc_rs_spark.cache import register_cache
 
     sigs = _simhash_sql_df(spark, sf)

@@ -9,7 +9,6 @@ documented inline so __spark_entry__.oracle_sql stays in sync):
 * ``md5_long(col)``  — 60-bit integer from the md5 hex prefix:
     Spark : conv(substr(md5(x), 1, 15), 16, 10)::bigint
     DuckDB: ('0x' || substr(md5(x), 1, 15))::bigint
-* ``round_double`` — floats are only compared after explicit rounding.
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-__all__ = ["md5_long", "round_double"]
+__all__ = ["md5_long"]
 
 
 def _c(col: str | Column) -> Column:
@@ -27,7 +26,3 @@ def _c(col: str | Column) -> Column:
 def md5_long(col: str | Column) -> Column:
     """Deterministic 60-bit non-negative integer hash, portable to DuckDB."""
     return F.conv(F.substring(F.md5(_c(col)), 1, 15), 16, 10).cast("bigint")
-
-
-def round_double(col: str | Column, scale: int = 6) -> Column:
-    return F.round(_c(col).cast("double"), scale)

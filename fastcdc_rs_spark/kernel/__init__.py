@@ -10,7 +10,6 @@ from .fastcdc import (
     ChunkerConfig,
     chunk_bytes,
     cut,
-    default_config,
     logarithm2,
 )
 from .gear import GEAR, GEAR_LS, MASKS, gear_with_seed
@@ -28,7 +27,6 @@ __all__ = [
     "ChunkerConfig",
     "chunk_bytes",
     "cut",
-    "default_config",
     "gear_with_seed",
     "logarithm2",
 ]

@@ -123,12 +123,6 @@ class ChunkerConfig:
         return gear_with_seed(self.seed)
 
 
-# Default parameter convention from the reference examples/benches:
-# min = avg/4, max = avg*4 (examples/v2020.rs:30-31, benches/chunking.rs:180-182).
-def default_config(avg_size: int = 16384, level: int = 1, seed: int = 0) -> ChunkerConfig:
-    return ChunkerConfig(avg_size // 4, avg_size, avg_size * 4, level, seed)
-
-
 def _gear_hash_array(contrib: np.ndarray) -> np.ndarray:
     """Per-position gear hash over a contribution array.
 

@@ -1,7 +1,7 @@
 """MinHash signature stage (SURVEY.md §2.B B4/B5/B6 fused).
 
-One Arrow UDF turns each doc's unit-hash sequence (FastCDC chunk hashes,
-or token/char unit hashes) into:
+One Arrow UDF turns each doc's unit-hash sequence (its FastCDC chunk
+hashes) into:
 
 * ``shingles``: the deduplicated k-gram shingle-hash set (used again by
   exact-Jaccard verification), and

@@ -1,18 +1,17 @@
 """Suffix-array exact-substring dedup (SURVEY.md §2.B B10).
 
-Finds exact duplicated substrings of length >= L *across documents* inside
-candidate groups (LSH clusters or any grouping), the way large-scale
-training-data pipelines strip repeated boilerplate/quotations:
+Finds the doc pairs that share an exact substring of length >= L *across
+documents* inside candidate groups (LSH clusters or any grouping), the way
+large-scale training-data pipelines strip repeated boilerplate/quotations:
 
 1. group docs (bounded group size — the caller salts/caps, see lsh.py);
 2. per group, build a suffix array over the concatenation of the group's
    texts (prefix-doubling, O(n log n), pure numpy) inside
    ``applyInPandas``;
-3. adjacent suffixes in SA order with LCP >= L that come from *different*
-   docs witness a duplicated substring; emit maximal-ish matches
-   (per (doc_a, doc_b) adjacent-pair maxima).
+3. every maximal run of adjacent suffixes in SA order with LCP >= L
+   witnesses a substring shared by the distinct docs it covers.
 
-Output: (group_id, doc_a, doc_b, pos_a, pos_b, match_len).
+Output: (group_id, doc_a, doc_b) with doc_a < doc_b.
 """
 
 from __future__ import annotations
@@ -21,18 +20,12 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 __all__ = [
     "suffix_array",
     "lcp_array",
     "sa_lcp",
-    "duplicate_substrings",
     "substring_pairs_exact",
 ]
 
@@ -122,76 +115,6 @@ def lcp_array(data: np.ndarray, sa: np.ndarray) -> np.ndarray:
         else:
             h = 0
     return lcp
-
-
-_OUT_SCHEMA = StructType(
-    [
-        StructField("group_id", LongType(), False),
-        StructField("doc_a", LongType(), False),
-        StructField("doc_b", LongType(), False),
-        StructField("pos_a", IntegerType(), False),
-        StructField("pos_b", IntegerType(), False),
-        StructField("match_len", IntegerType(), False),
-    ]
-)
-
-
-def _group_matches(pdf: pd.DataFrame, min_len: int) -> pd.DataFrame:
-    gid = int(pdf["group_id"].iloc[0])
-    doc_ids = pdf["doc_id"].to_numpy()
-    texts = [t.encode("utf-8") for t in pdf["text"]]
-    # concatenate with per-doc unique separators (bytes > 0xF4 never occur
-    # in UTF-8) — separators break spurious cross-boundary matches
-    parts, owners, starts, tails = [], [], [], []
-    offset = 0
-    for i, t in enumerate(texts):
-        parts.append(np.frombuffer(t, dtype=np.uint8))
-        owners.append(np.full(len(t), i, dtype=np.int64))
-        tails.append(np.arange(len(t), 0, -1, dtype=np.int64))
-        starts.append(offset)
-        offset += len(t)
-        sep = np.array([0xF5 + (i % 8)], dtype=np.uint8)
-        parts.append(sep)
-        owners.append(np.array([-1], dtype=np.int64))
-        tails.append(np.zeros(1, dtype=np.int64))
-        offset += 1
-    data = np.concatenate(parts)
-    owner = np.concatenate(owners)
-    tail = np.concatenate(tails)
-    start_of = np.array(starts, dtype=np.int64)
-
-    sa, lcp = sa_lcp(data)
-
-    # vectorized candidate selection: adjacent pairs with doc-end-clipped
-    # LCP >= min_len and distinct non-separator owners (the Python loop
-    # below touches only these few witnesses, not every byte)
-    i_arr, j_arr = sa[:-1], sa[1:]
-    l_arr = np.minimum(lcp[1:], np.minimum(tail[i_arr], tail[j_arr]))
-    oi_arr, oj_arr = owner[i_arr], owner[j_arr]
-    cand = (
-        (l_arr >= min_len)
-        & (oi_arr >= 0)
-        & (oj_arr >= 0)
-        & (oi_arr != oj_arr)
-    )
-    rows = []
-    best: dict[tuple[int, int], tuple[int, int, int]] = {}
-    for r in np.nonzero(cand)[0]:
-        i, j = int(i_arr[r]), int(j_arr[r])
-        l = int(l_arr[r])
-        oi, oj = int(oi_arr[r]), int(oj_arr[r])
-        if oi > oj:
-            i, j, oi, oj = j, i, oj, oi
-        key = (oi, oj)
-        if key not in best or l > best[key][2]:
-            best[key] = (i - start_of[oi], j - start_of[oj], l)
-    for (oi, oj), (pa, pb, l) in best.items():
-        rows.append(
-            (gid, int(doc_ids[oi]), int(doc_ids[oj]), int(pa), int(pb), int(l))
-        )
-    return pd.DataFrame(
-        rows, columns=["group_id", "doc_a", "doc_b", "pos_a", "pos_b", "match_len"]
-    )
 
 
 _PAIR_SCHEMA = StructType(
@@ -323,24 +246,3 @@ def substring_pairs_exact(
 
     return docs.groupBy("group_id").applyInPandas(apply_fn, _PAIR_SCHEMA)
 
-
-def duplicate_substrings(
-    grouped_docs: DataFrame, min_len: int = 50,
-    group_col: str = "group_id", id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """Per-group longest cross-doc exact substring matches >= min_len.
-
-    ``grouped_docs``: (group_id, doc_id, text). Groups shuffle to one task
-    each (``applyInPandas``); bound group sizes upstream (LSH bucket caps)
-    exactly as the skew section of lsh.py does for pair generation.
-    """
-    docs = grouped_docs.select(
-        F.col(group_col).alias("group_id"),
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-    )
-
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _group_matches(pdf, min_len)
-
-    return docs.groupBy("group_id").applyInPandas(apply_fn, _OUT_SCHEMA)

@@ -19,11 +19,8 @@ oracle reproduces the Spark results bit-for-bit; all *data movement*
 DataFrame code that Catalyst plans — shuffles only on band buckets, pair
 dedup, verification joins, and CC rounds.
 
-Unit-hash modes:
-* ``chunk`` — units are FastCDC chunk gear hashes (CDC-native: boundaries
-  resynchronize after edits, so shingles survive insertions);
-* ``token``/``char`` — units are xxhash64 of text tokens/characters
-  (JVM-side; for corpora whose docs are smaller than a chunk).
+Units are FastCDC chunk gear hashes (CDC-native: boundaries
+resynchronize after edits, so shingles survive insertions).
 """
 
 from __future__ import annotations
@@ -38,7 +35,7 @@ from .cache import register_cache, scope
 from .kernel import ChunkerConfig
 from .operators.components import connected_components
 from .operators.lsh import bucket_metrics_frame, candidate_pairs
-from .operators.minhash import chunk_minhash_signatures, minhash_signatures
+from .operators.minhash import chunk_minhash_signatures
 from .operators.verify import verify_pairs
 
 __all__ = ["DedupConfig", "near_dup_clusters", "run_stages", "signatures",
@@ -53,11 +50,8 @@ class DedupConfig:
     chunk_max: int = 1024
     chunk_level: int = 1
     chunk_seed: int = 0
-    # unit-hash mode: "chunk" (CDC-native), "token", or "char".
-    # chunk mode with k=1 measures chunk-set overlap (CDC dedup semantics:
-    # localized edits touch few chunks); token mode with k=5 is the robust
-    # choice for small texts with scattered edits.
-    shingle_mode: str = "chunk"
+    # k-gram width over chunk hashes: k=1 measures chunk-set overlap (CDC
+    # dedup semantics: localized edits touch few chunks)
     shingle_k: int = 1
     # minhash / LSH: b=32, r=4 puts the s-curve midpoint near J~0.55 with
     # P(candidate | J=0.65) > 0.995 — recall headroom above the verify
@@ -88,42 +82,28 @@ class DedupConfig:
 
 def unit_hashes(docs: DataFrame, cfg: DedupConfig,
                 id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, unit_hashes array<long>) under the configured mode."""
-    if cfg.shingle_mode == "chunk":
-        from .operators.chunk import chunk_hashes_udf
+    """(doc_id, unit_hashes array<long>): the FastCDC chunk hashes, as a
+    column. The unfused reference for ``signatures``' fused UDF."""
+    from .operators.chunk import chunk_hashes_udf
 
-        return docs.select(
-            id_col, chunk_hashes_udf(cfg.chunker())(F.col(text_col)).alias("unit_hashes")
-        )
-    if cfg.shingle_mode == "token":
-        arr = F.split(F.trim(F.col(text_col)), r"\s+")
-    elif cfg.shingle_mode == "char":
-        arr = F.split(F.col(text_col), "")
-    else:
-        raise ValueError(f"unknown shingle mode {cfg.shingle_mode!r}")
     return docs.select(
-        id_col, F.transform(arr, lambda t: F.xxhash64(t)).alias("unit_hashes")
+        id_col, chunk_hashes_udf(cfg.chunker())(F.col(text_col)).alias("unit_hashes")
     )
 
 
 def signatures(docs: DataFrame, cfg: DedupConfig,
                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, shingles, bands, n_units) under the configured mode: the
-    one signing step of the batch pipeline, the job and the stream.
+    """(doc_id, shingles, bands, n_units): the one signing step of the
+    batch pipeline, the job and the stream.
 
-    Chunk mode is the fused ``chunk_minhash_signatures``: chunking,
-    shingling and MinHash in one Arrow UDF, with no intermediate
-    chunk-hash list column. Token/char units are JVM expressions, so
-    there ``unit_hashes`` feeds ``minhash_signatures``. Same kernels,
-    bit-exact either way; ``n_units`` is the per-doc unit count."""
-    sig = dict(k=cfg.shingle_k, n_perms=cfg.n_perms, bands=cfg.bands,
-               rows=cfg.rows, seed=cfg.minhash_seed, id_col=id_col)
-    if cfg.shingle_mode == "chunk":
-        return chunk_minhash_signatures(docs, cfg.chunker(), text_col=text_col, **sig)
-    units = unit_hashes(docs, cfg, id_col, text_col)
-    return minhash_signatures(
-        units.withColumn("n_units", F.size("unit_hashes")), **sig
-    ).select(id_col, "shingles", "bands", "n_units")
+    The fused ``chunk_minhash_signatures``: chunking, shingling and
+    MinHash in one Arrow UDF, with no intermediate chunk-hash list
+    column; ``n_units`` is the per-doc chunk count."""
+    return chunk_minhash_signatures(
+        docs, cfg.chunker(), k=cfg.shingle_k, n_perms=cfg.n_perms,
+        bands=cfg.bands, rows=cfg.rows, seed=cfg.minhash_seed,
+        text_col=text_col, id_col=id_col,
+    )
 
 
 def run_stages(docs: DataFrame, cfg: DedupConfig,

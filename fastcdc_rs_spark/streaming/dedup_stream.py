@@ -43,9 +43,7 @@ __all__ = [
 ]
 
 
-def stream_exact_dedup(
-    stream_df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def stream_exact_dedup(stream_df: DataFrame, text_col: str = "text") -> DataFrame:
     """Streaming keep-first exact dedup: emits only first-seen texts.
 
     ``dropDuplicates`` on the text hash is a stateful streaming operator;
@@ -59,7 +57,7 @@ def stream_exact_dedup(
 
 def stream_exact_dedup_within_watermark(
     stream_df: DataFrame, ts_col: str = "warc_ts", horizon: str = "1 hour",
-    text_col: str = "text", id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
     """Exact dedup with BOUNDED state: duplicates are suppressed only
     within the event-time watermark ``horizon`` of the first occurrence.
@@ -91,7 +89,7 @@ def stream_band_keys(
 
     Chunking + shingles + MinHash + banding are all per-document map work
     signed by ``pipeline.signatures``, the batch pipeline's own signing
-    step (in chunk mode one fused Arrow UDF), so they stream with no state.
+    step (one fused Arrow UDF), so they stream with no state.
     """
     from ..functions.plan_safe import posexplode_once
 
@@ -181,9 +179,7 @@ def start_exact_dedup_stream(
     ``sink_dir``; duplicate suppression state persists in the checkpoint
     across restarts (exactly-once)."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    deduped = stream_exact_dedup(stream, text_col, id_col).select(
-        id_col, "text_hash"
-    )
+    deduped = stream_exact_dedup(stream, text_col).select(id_col, "text_hash")
     return (
         deduped.writeStream.format("parquet")
         .option("path", sink_dir)

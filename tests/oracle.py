@@ -18,14 +18,7 @@ from fastcdc_rs_spark.kernel.signatures import signature_batch, splitmix64
 from fastcdc_rs_spark.pipeline import DedupConfig
 
 
-def _xxhash64_unavailable(_):
-    raise NotImplementedError(
-        "token/char oracle parity requires xxhash64; use chunk mode here"
-    )
-
-
 def oracle_unit_hashes(texts: list[str], cfg: DedupConfig) -> list[np.ndarray]:
-    assert cfg.shingle_mode == "chunk", "oracle covers the CDC-native mode"
     chunker = cfg.chunker()
     out = []
     for t in texts:

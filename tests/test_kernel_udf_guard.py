@@ -55,6 +55,11 @@ def test_kernel_udfs_are_arrow_udfs():
     assert not found["pandas_udf"], (
         "kernel UDFs must be F.arrow_udf, not pandas_udf: " + ", ".join(found["pandas_udf"])
     )
-    # the chunk, chunk-hash, signature, fused signature, SimHash and fused
-    # SimHash UDFs: fewer means the guard stopped seeing them
-    assert len(found["arrow_udf"]) >= 6, found
+    # the chunk, chunk-hash, signature, fused signature and fused SimHash
+    # UDFs: a missing one means the guard stopped seeing it
+    ops = "fastcdc_rs_spark/operators"
+    assert sorted(found["arrow_udf"]) == sorted([
+        f"{ops}/chunk.py:_chunk", f"{ops}/chunk.py:_hashes",
+        f"{ops}/minhash.py:_sig", f"{ops}/minhash.py:_chunk_sig",
+        f"{ops}/simhash.py:_chunk_simhash",
+    ]), found

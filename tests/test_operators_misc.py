@@ -14,7 +14,6 @@ from fastcdc_rs_spark.operators.knn import (
     cosine_topk_bruteforce,
     rhp_buckets,
 )
-from fastcdc_rs_spark.operators.simhash import hamming_distance_expr, simhash_bands
 
 
 def test_exact_dedup_on_corpus(spark):
@@ -167,24 +166,6 @@ def test_banded_rhp_bucket_cap_star_pairs(spark):
         ).collect()
     }
     assert exact == {(a, b) for a in range(20) for b in range(a + 1, 20)}
-
-
-def test_simhash_band_guarantee(spark):
-    # Hamming distance <= 3 → at least one of 4 16-bit bands equal
-    df = spark.createDataFrame(
-        [(1, 0x123456789ABCDEF0), (2, 0x123456789ABCDEF0 ^ 0b1011)],
-        "doc_id long, simhash long",
-    )
-    d = df.select(
-        hamming_distance_expr(F.lit(0x123456789ABCDEF0), F.lit(0x123456789ABCDEF0 ^ 0b1011)).alias("h")
-    ).first()["h"]
-    assert d == 3
-    bands = simhash_bands(df, n_bands=4).collect()
-    by_doc = {}
-    for r in bands:
-        by_doc.setdefault(r.doc_id, {})[r.band_id] = r.band_hash
-    shared = [b for b in range(4) if by_doc[1][b] == by_doc[2][b]]
-    assert shared, "distance-3 pair must share a band"
 
 
 def test_plan_quality_pushdown(spark, tmp_path):

@@ -151,9 +151,13 @@ def test_chunk_minhash_fusion_bit_exact(spark):
 
 
 def test_chunk_simhash_fusion_bit_exact(spark):
-    # Same fusion pin for the SimHash twin (operators/simhash.chunk_simhash64).
-    from fastcdc_rs_spark.operators.simhash import chunk_simhash64, simhash64
-    from fastcdc_rs_spark.pipeline import DedupConfig, unit_hashes
+    # The fused SimHash UDF (operators/simhash.chunk_simhash64) equals the
+    # Spark-free kernel composition: chunk the batch, then SimHash the
+    # ragged chunk hashes.
+    from fastcdc_rs_spark.kernel.batch import chunk_batch_columnar
+    from fastcdc_rs_spark.kernel.signatures import simhash_ragged
+    from fastcdc_rs_spark.operators.simhash import chunk_simhash64
+    from fastcdc_rs_spark.pipeline import DedupConfig
 
     cfg = DedupConfig()
     rng = np.random.default_rng(13)
@@ -163,8 +167,8 @@ def test_chunk_simhash_fusion_bit_exact(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     fused = {r.doc_id: r.simhash for r in chunk_simhash64(docs, cfg.chunker()).collect()}
-    unfused = {
-        r.doc_id: r.simhash
-        for r in simhash64(unit_hashes(docs, cfg), shingles_col="unit_hashes").collect()
-    }
+    counts, hashes, _, _ = chunk_batch_columnar(
+        [np.frombuffer(t.encode("utf-8"), dtype=np.uint8) for _, t in rows], cfg.chunker())
+    sims = simhash_ragged(hashes, counts, seed=1).view(np.int64)
+    unfused = {d: int(s) for (d, _), s in zip(rows, sims)}
     assert fused == unfused and len(fused) == 30

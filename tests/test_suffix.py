@@ -1,11 +1,11 @@
-"""Suffix-array kernel + duplicate-substring operator tests."""
+"""Suffix-array kernel + exact substring-pair operator tests."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from fastcdc_rs_spark.operators.suffix import duplicate_substrings, lcp_array, suffix_array
+from fastcdc_rs_spark.operators.suffix import lcp_array, suffix_array
 
 
 def _sa_naive(data: bytes) -> list[int]:
@@ -37,31 +37,6 @@ def test_lcp_array():
     # SA of banana: [5 3 1 0 4 2] (a, ana, anana, banana, na, nana)
     assert list(sa) == [5, 3, 1, 0, 4, 2]
     assert list(lcp) == [0, 1, 3, 0, 0, 2]
-
-
-def test_duplicate_substrings_operator(spark):
-    import pyspark.sql.functions as F
-
-    common = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        (0, 0, "AAA " + common + " BBB"),
-        (0, 1, "CCC " + common + " DDD"),
-        (0, 2, "totally unrelated content xyzzy plugh"),
-        (1, 3, "group two share nothing one"),
-        (1, 4, "completely different words here"),
-    ]
-    df = spark.createDataFrame(rows, "group_id long, doc_id long, text string")
-    out = duplicate_substrings(df, min_len=20).collect()
-    matches = {(r.doc_a, r.doc_b): r for r in out}
-    assert (0, 1) in matches
-    m = matches[(0, 1)]
-    assert m.match_len >= len(common)
-    # the reported positions really do match
-    a_text, b_text = rows[0][2], rows[1][2]
-    assert a_text[m.pos_a:m.pos_a + m.match_len] == b_text[m.pos_b:m.pos_b + m.match_len]
-    # unrelated docs produce no match
-    assert (0, 2) not in matches and (1, 2) not in matches
-    assert all(k[0] != 3 and k[1] != 4 for k in matches), f"spurious: {matches.keys()}"
 
 
 def _naive_pairs(texts: dict[int, str], min_len: int) -> set[tuple[int, int]]:
